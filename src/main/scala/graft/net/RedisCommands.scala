@@ -1,6 +1,6 @@
 package graft.net
 
-import graft.resp.RespValue
+import graft.resp.{RespCodec, RespValue}
 import graft.resp.RespValue._
 
 /** Typed wrappers for the Redis commands the engine speaks
@@ -16,30 +16,55 @@ object RedisCommands {
     * SERVER-side — on a keyspace where hashes share a prefix with
     * strings/streams, the non-matching keys never cross the wire.
     *
+    * The reply is read in place: the page's keys land in `keys` as views
+    * into `c`'s receive buffer, valid until `c` reads again.
+    *
+    * @return the next cursor; "0" = exhausted
+    */
+  def scanPageView(c: RedisConnection, cursor: String, pattern: String, count: Int,
+      scanType: Option[String], keys: RespCodec.ArrayView): String = {
+    val cmd = new RespCodec.CommandBuffer()
+    scanCommand(cmd, cursor, pattern, count, scanType)
+    c.send(cmd)
+    scanReplyView(c, keys)
+  }
+
+  /** Appends the SCAN command of [[scanPageView]] to `cmd`. */
+  def scanCommand(cmd: RespCodec.CommandBuffer, cursor: String, pattern: String, count: Int,
+      scanType: Option[String]): Unit =
+    cmd.command(Seq("SCAN", cursor, "MATCH", pattern, "COUNT", count.toString) ++
+      scanType.toSeq.flatMap(t => Seq("TYPE", t)))
+
+  /** Reads the reply to a SCAN already sent on `c` (see [[scanPageView]]).
+    *
+    * @return the next cursor; "0" = exhausted
+    */
+  def scanReplyView(c: RedisConnection, keys: RespCodec.ArrayView): String =
+    c.readFrame { (buf, start, end) =>
+      val next = RespCodec.readScanReply(buf, start, end, keys)
+      if (next != null) next
+      else RespCodec.decodeFrame(buf, start, end) match {
+        case Err(m) => throw new java.io.IOException(s"SCAN error: $m")
+        case other => fail("SCAN reply", other)
+      }
+    }
+
+  /** [[scanPageView]] with the keys as `String`s.
+    *
     * @return (nextCursor, keys); cursor "0" = exhausted
     */
   def scanPage(c: RedisConnection, cursor: String, pattern: String, count: Int,
-      scanType: Option[String] = None): (String, Seq[String]) =
-    c.command(Seq("SCAN", cursor, "MATCH", pattern, "COUNT", count.toString) ++
-        scanType.toSeq.flatMap(t => Seq("TYPE", t)): _*) match {
-      case Arr(Vector(cur, keys)) =>
-        val next = cur match {
-          case b: Bulk => b.text
-          case Simple(s) => s
-          case other => fail("SCAN cursor", other)
-        }
-        val ks = keys match {
-          case Arr(items) => items.map {
-            case b: Bulk => b.text
-            case Simple(s) => s
-            case other => fail("SCAN key", other)
-          }
-          case other => fail("SCAN key array", other)
-        }
-        (next, ks)
-      case Err(m) => throw new java.io.IOException(s"SCAN error: $m")
-      case other => fail("SCAN reply", other)
-    }
+      scanType: Option[String] = None): (String, Seq[String]) = {
+    val keys = new RespCodec.ArrayView
+    val next = scanPageView(c, cursor, pattern, count, scanType, keys)
+    (next, Vector.tabulate(keys.size)(keys.string))
+  }
+
+  private def encoded(args: Seq[String]): RespCodec.CommandBuffer = {
+    val cmd = new RespCodec.CommandBuffer()
+    cmd.command(args)
+    cmd
+  }
 
   /** `MOVED <slot> host:port` / `ASK <slot> host:port` cluster redirect
     * target, if the error is one. Single-key commands follow ONE hop (the
@@ -97,28 +122,43 @@ object RedisCommands {
     * error on a real cluster), so a MOVED/ASK mid-migration applies to
     * every key in it — the scan cursor keeps walking the old owner
     * while value fetches land on the new one.
+    *
+    * `cmd` is the encoded `MGET` of `keyCount` keys. The reply is read in
+    * place: the values land in `values` as views into the receive buffer
+    * of the connection that answered, valid until it reads again; a nil
+    * (missing key) has length -1.
+    *
+    * `next`, when given, goes out on `c` in the same write, behind the
+    * MGET (never to a redirect target); its reply is left unread on `c`.
     */
+  def mgetView(c: RedisConnection, cmd: RespCodec.CommandBuffer, keyCount: Int,
+      values: RespCodec.ArrayView, next: RespCodec.CommandBuffer = null): Unit = {
+    def read(rc: RedisConnection, where: String): Unit = {
+      if (rc eq c) c.send(cmd, next) else rc.send(cmd)
+      rc.readFrame { (buf, start, end) =>
+        if (RespCodec.readArrayReply(buf, start, end, values)) {
+          if (values.size != keyCount) throw new java.io.IOException(
+            s"MGET$where returned ${values.size} values for $keyCount keys")
+        } else RespCodec.decodeFrame(buf, start, end) match {
+          case Err(m) => redirectTarget(m) match {
+            case Some((h, p, ask)) if where.isEmpty =>
+              onRedirectTarget(h, p, ask, c.auth)(read(_, " after redirect"))
+            case _ => throw new java.io.IOException(s"MGET error$where: $m")
+          }
+          case other => fail("MGET reply", other)
+        }
+      }
+    }
+    read(c, "")
+  }
+
+  /** [[mgetView]] over `String` keys and values: missing key → None. */
   def mget(c: RedisConnection, keys: Seq[String]): Seq[Option[String]] =
     if (keys.isEmpty) Nil
     else {
-      def parse(v: RespValue, where: String): Seq[Option[String]] = v match {
-        case Arr(items) => items.map {
-          case b: Bulk => Some(b.text)
-          case Null => None
-          case other => fail("MGET element", other)
-        }
-        case Err(m) => throw new java.io.IOException(s"MGET error$where: $m")
-        case other => fail("MGET reply", other)
-      }
-      c.command("MGET" +: keys: _*) match {
-        case Err(m) => redirectTarget(m) match {
-          case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.auth) { rc =>
-            parse(rc.command("MGET" +: keys: _*), " after redirect")
-          }
-          case None => throw new java.io.IOException(s"MGET error: $m")
-        }
-        case v => parse(v, "")
-      }
+      val values = new RespCodec.ArrayView
+      mgetView(c, encoded("MGET" +: keys), keys.length, values)
+      Vector.tabulate(values.size)(i => if (values.isNil(i)) None else Some(values.string(i)))
     }
 
   /** SMEMBERS → member set (RESP2 array or RESP3 set reply — the `~`

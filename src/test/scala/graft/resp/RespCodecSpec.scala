@@ -26,6 +26,8 @@ class RespCodecSpec extends AnyFunSuite {
     RespCodec.decode(bytes, 0, bytes.length) match {
       case RespCodec.Decoded(v, next) =>
         assert(next == bytes.length, "decode must consume the whole frame")
+        assert(RespCodec.frameLength(bytes, 0, bytes.length) == bytes.length,
+          "the frame walk must end where decode ends")
         v
       case RespCodec.Incomplete => fail("unexpected Incomplete")
     }
@@ -85,6 +87,72 @@ class RespCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("lengths outside -1..Int.MaxValue raise, never wrap to an Int") {
+    // 4294967297 = 2^32 + 1 would wrap to 1 (a 1-element array), and
+    // 4294967301 = 2^32 + 5 to a 5-byte bulk
+    Seq("*4294967297\r\n:1\r\n", "$4294967301\r\nhello\r\n", "$-2\r\n", "*-9223372036854775808\r\n")
+      .foreach { wire =>
+        val bytes = wire.getBytes(UTF_8)
+        intercept[RespCodec.ProtocolException](RespCodec.decode(bytes, 0, bytes.length))
+        intercept[RespCodec.ProtocolException](RespCodec.frameLength(bytes, 0, bytes.length))
+      }
+    Seq("*4294967297\r\n$1\r\na\r\n", "*1\r\n$4294967301\r\nhello\r\n").foreach { wire =>
+      val bytes = wire.getBytes(UTF_8)
+      intercept[RespCodec.ProtocolException](
+        RespCodec.readArrayReply(bytes, 0, bytes.length, new RespCodec.ArrayView))
+      val page = ("*2\r\n$1\r\n0\r\n" + wire).getBytes(UTF_8)
+      intercept[RespCodec.ProtocolException](
+        RespCodec.readScanReply(page, 0, page.length, new RespCodec.ArrayView))
+    }
+    // an integer reply is not a length: the whole Long range stays valid
+    assert(decodeAll(":-9223372036854775808\r\n".getBytes(UTF_8)) == Int64(Long.MinValue))
+    intercept[RespCodec.ProtocolException](
+      RespCodec.decode(":9223372036854775808\r\n".getBytes(UTF_8), 0, 22))
+  }
+
+  test("frame walk and in-place readers keep decode's checks") {
+    val unterminated = "*1\r\n$3\r\nabcXY".getBytes(UTF_8)
+    intercept[RespCodec.ProtocolException](RespCodec.frameLength(unterminated, 0, unterminated.length))
+    intercept[RespCodec.ProtocolException](
+      RespCodec.readArrayReply(unterminated, 0, unterminated.length, new RespCodec.ArrayView))
+    val badType = "*1\r\n^x\r\n".getBytes(UTF_8)
+    intercept[RespCodec.ProtocolException](RespCodec.frameLength(badType, 0, badType.length))
+    val badLength = "*1\r\n$1x\r\na\r\n".getBytes(UTF_8)
+    intercept[RespCodec.ProtocolException](RespCodec.frameLength(badLength, 0, badLength.length))
+    intercept[RespCodec.ProtocolException](
+      RespCodec.readArrayReply(badLength, 0, badLength.length, new RespCodec.ArrayView))
+  }
+
+  test("in-place readers hand other shapes back for decode to report") {
+    val view = new RespCodec.ArrayView
+    Seq("-ERR no\r\n", "*-1\r\n", "*1\r\n:1\r\n", "*1\r\n*0\r\n", "*1\r\n+ok\r\n", "$2\r\nab\r\n")
+      .foreach { wire =>
+        val b = wire.getBytes(UTF_8)
+        assert(!RespCodec.readArrayReply(b, 0, b.length, view), wire)
+      }
+    Seq("-ERR no\r\n", "*1\r\n$1\r\n0\r\n", "*2\r\n$1\r\n0\r\n*1\r\n$-1\r\n",
+        "*2\r\n:0\r\n*0\r\n", "*2\r\n$1\r\n0\r\n~0\r\n")
+      .foreach { wire =>
+        val b = wire.getBytes(UTF_8)
+        assert(RespCodec.readScanReply(b, 0, b.length, view) == null, wire)
+      }
+  }
+
+  test("command encoder writes ASCII length headers for every argument source") {
+    val cmds = new RespCodec.CommandBuffer(16)
+    cmds.header(3)
+    cmds.bulk("SET")
+    cmds.bulk(org.apache.spark.unsafe.types.UTF8String.fromString("kéy"))
+    cmds.bulk(Array[Byte](0, -1, 13, 10), 1, 3)
+    val expected = "*3\r\n$3\r\nSET\r\n$4\r\nkéy\r\n$3\r\n".getBytes(UTF_8) ++ Array[Byte](-1, 13, 10, 13, 10)
+    val out = new java.io.ByteArrayOutputStream
+    cmds.writeTo(out)
+    assert(out.toByteArray.sameElements(expected))
+    val long = Seq("MGET") ++ (0 until 1000).map(i => "k" * (i % 37))
+    assert(RespCodec.encodeCommand(long).sameElements(
+      (s"*${long.length}\r\n" + long.map(a => s"$$${a.length}\r\n$a\r\n").mkString).getBytes(UTF_8)))
+  }
+
   // ---- fragmentation: every strict prefix must be Incomplete ----
   test("every byte-level fragmentation point resumes correctly") {
     golden.foreach { case (wire, expected) =>
@@ -100,6 +168,28 @@ class RespCodecSpec extends AnyFunSuite {
         }
       }
       assert(decodeAll(bytes) == expected)
+    }
+  }
+
+  test("frame walk: every strict prefix is incomplete, the whole frame returns its length") {
+    val frames = golden.map(_._1.getBytes(UTF_8)) ++ Seq(
+      "|1\r\n+k\r\n:1\r\n$2\r\nok\r\n", "%1\r\n$1\r\nk\r\n$1\r\nv\r\n", "*0\r\n", "*-1\r\n",
+      "*3\r\n$0\r\n\r\n_\r\n$4\r\n\r\n\r\n\r\n", ">1\r\n+hi\r\n").map(_.getBytes(UTF_8))
+    frames.foreach { bytes =>
+      // framed in a larger buffer, so the walk must stop at `end`, not at the array's length
+      val buf = Array[Byte]('x', 'x') ++ bytes ++ "+next\r\n".getBytes(UTF_8)
+      (0 until bytes.length).foreach { cut =>
+        assert(RespCodec.frameLength(buf, 2, 2 + cut) == -1, s"cut=$cut of ${new String(bytes, UTF_8)}")
+      }
+      assert(RespCodec.frameLength(buf, 2, 2 + bytes.length) == bytes.length)
+      assert(RespCodec.frameLength(buf, 2, buf.length) == bytes.length)
+      // resumed byte by byte, the walk ends in the same place
+      val w = new RespCodec.FrameWalk
+      w.reset(2)
+      var end = 2
+      var at = w.advance(buf, end)
+      while (at < 0) { end += 1; at = w.advance(buf, end) }
+      assert(end == 2 + bytes.length && at == end)
     }
   }
 
@@ -142,6 +232,59 @@ class RespCodecSpec extends AnyFunSuite {
         }
       }
       assert(out.result() == vs.toVector)
+    }
+  }
+
+  // ---- the in-place SCAN/MGET readers ≡ decode ----
+  private val genPayload: Gen[Array[Byte]] = Gen.frequency(
+    2 -> Gen.const(Array.emptyByteArray),
+    3 -> Gen.listOf(Gen.oneOf(Gen.choose(Byte.MinValue, Byte.MaxValue), Gen.oneOf('\r'.toByte, '\n'.toByte)))
+      .map(_.toArray),
+    2 -> Gen.alphaNumStr.map(s => (s + "\r\n" + s + "é✓😀").getBytes(UTF_8)))
+  private val genElement: Gen[RespValue] = Gen.frequency(5 -> genPayload.map(Bulk(_)), 1 -> Gen.const(Null))
+
+  test("property: in-place MGET reads yield decode's values and nils") {
+    def wire(elems: Seq[RespValue], resp3: Boolean): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      out.write(s"*${elems.length}\r\n".getBytes(UTF_8))
+      elems.foreach {
+        case Null if resp3 => out.write("_\r\n".getBytes(UTF_8)) // RESP3 nil
+        case v => out.write(RespCodec.encode(v))
+      }
+      out.toByteArray
+    }
+    forAllSampled(Gen.choose(0, 40).flatMap(Gen.listOfN(_, genElement))) { elems =>
+      Seq(false, true).foreach { resp3 =>
+        val bytes = wire(elems, resp3)
+        val view = new RespCodec.ArrayView
+        assert(RespCodec.readArrayReply(bytes, 0, bytes.length, view))
+        val read = (0 until view.size).map { i =>
+          if (view.isNil(i)) Null
+          else Bulk(java.util.Arrays.copyOfRange(view.buf, view.offset(i), view.offset(i) + view.length(i)))
+        }
+        assert(Arr(read.toVector) == decodeAll(bytes))
+        assert(view.payload == elems.collect { case b: Bulk => b.bytes.length.toLong }.sum)
+      }
+    }
+  }
+
+  test("property: in-place SCAN reads yield decode's cursor and keys") {
+    val genKey: Gen[RespValue] = Gen.frequency(
+      4 -> genPayload.map(Bulk(_)), 1 -> Gen.alphaNumStr.map(Simple(_)))
+    val genPage = for {
+      cursor <- Gen.oneOf(Gen.const(Bulk("0")), Gen.posNum[Long].map(n => Bulk(n.toString)), Gen.const(Simple("7")))
+      n <- Gen.choose(0, 40)
+      keys <- Gen.listOfN(n, genKey)
+    } yield Arr(Vector(cursor, Arr(keys.toVector)))
+    forAllSampled(genPage) { page =>
+      val wire = RespCodec.encode(page)
+      val view = new RespCodec.ArrayView
+      val cursor = RespCodec.readScanReply(wire, 0, wire.length, view)
+      val Arr(Vector(cur, Arr(keys))) = decodeAll(wire)
+      assert(cursor == (cur match { case b: Bulk => b.text; case Simple(s) => s; case o => fail(o.toString) }))
+      assert((0 until view.size).map(i =>
+        java.util.Arrays.copyOfRange(view.buf, view.offset(i), view.offset(i) + view.length(i)).toSeq) ==
+        keys.map { case b: Bulk => b.bytes.toSeq; case Simple(s) => s.getBytes(UTF_8).toSeq; case o => fail(o.toString) })
     }
   }
 }
