@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.{Profile, QueryProfile}
 
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * given scale factor and prints ONE JSON metrics line.
@@ -11,29 +11,24 @@ import org.apache.spark.sql.SparkSession
   * whichever query happens to run first.
   */
 object Bench {
+
+  /** Runs one query under `profile`; its profile carries the wall time.
+    * A query that throws is reported on `err` with its name and
+    * exception, and yields None.
+    */
+  private[graft] def profiled(name: String, profile: QueryProfile,
+      err: java.io.PrintStream = System.err)(run: => Unit): Option[Profile] =
+    try Some(profile.measure(run)._2)
+    catch { case e: Throwable => err.println(s"[bench] $name failed: $e"); None }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, default 100: the 136-query inventory generates far
-      // more codegen'd classes than that per pass, so pass 2 recompiled
-      // every plan from scratch — with the floor (planning + janino)
-      // dominating sub-second queries, a cache that actually spans the
-      // pass lets min(p1, p2) measure execution, not compilation
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // the full extension set (TVFs, kernels, levenshtein + percentile
-      // optimizer rules) active from session birth: every query plans
-      // identically regardless of run order
-      .withExtensions(new GraftSparkExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus()
+    val spark = Session(cpus)
+    // attached here only, never by the extension: each query's jobs,
+    // stages, tasks, planning/execution ms and shuffle/spill bytes per
+    // pass go to bench_full.json
+    val profile = QueryProfile.attach(spark)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -53,18 +48,11 @@ object Bench {
       }
 
     // Per-query drift diagnostics (the r8 d12/q67 full-suite anomaly):
-    // alongside wall time, record the JVM-wide GC-time and codegen
-    // compilation deltas each query incurred. A pass-2 query that is
-    // slower WITH a compilation delta is a codegen-cache eviction; one
-    // slower with a GC spike is suite-accumulated heap pressure; one
-    // slower with neither is the environment.
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def nCompiled(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // alongside wall time, each query's profile records the JVM-wide
+    // GC-time and codegen compilation deltas it incurred. A pass-2 query
+    // that is slower WITH a compilation delta is a codegen-cache
+    // eviction; one slower with a GC spike is suite-accumulated heap
+    // pressure; one slower with neither is the environment.
 
     // Environment suspects, measured directly (the r9 ask: make
     // "environment" claims measurable instead of inferred): host-level
@@ -117,17 +105,17 @@ object Bench {
         .getOrElse(0L)
     }
 
+    // gc/nc come from the profile and span the query alone; the steal,
+    // throttle and ext windows also span the profile's two listener-bus
+    // drains around it. A failed query has no profile: gc/nc 0.
     case class QStat(sec: Double, gcMs: Long, nComp: Long, steal: Long,
-        thrMs: Long, extMs: Long)
+        thrMs: Long, extMs: Long, profJson: String)
     def timedPass(): Map[String, QStat] = names.map { name =>
-      val (g0, c0, s0, th0, h0, p0, t0) =
-        (gcMs(), nCompiled(), stealTicks(), throttledNs(),
-          hostBusyMs(), selfCpuMs(), System.nanoTime())
-      val ok = try { run(name); true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      name -> QStat(if (ok) sec else -1.0, gcMs() - g0, nCompiled() - c0,
-        stealTicks() - s0, (throttledNs() - th0) / 1000000L,
-        math.max(0L, (hostBusyMs() - h0) - (selfCpuMs() - p0)))
+      val (s0, th0, h0, p0) = (stealTicks(), throttledNs(), hostBusyMs(), selfCpuMs())
+      val prof = profiled(name, profile)(run(name))
+      name -> QStat(prof.fold(-1.0)(_.wallMs / 1000), prof.fold(0L)(_.gcMs),
+        prof.fold(0L)(_.compilations), stealTicks() - s0, (throttledNs() - th0) / 1000000L,
+        math.max(0L, (hostBusyMs() - h0) - (selfCpuMs() - p0)), prof.fold("null")(_.json))
     }.toMap
 
     // Two full interleaved passes, per-query min: the shared VM throttles in
@@ -155,13 +143,16 @@ object Bench {
       n -> (if (p1(n).sec < 0 || p2(n).sec < 0) -1.0 else math.min(p1(n).sec, p2(n).sec))
     }
 
+    val failed = results.collect { case (n, v) if v < 0 => "\"" + n + "\"" }
+    val failedJson = s""""failed":${failed.size},"failed_names":${failed.mkString("[", ",", "]")}"""
     // Full-precision per-pass record for local analysis (not the driver line).
     val fullJson = results
       .map { case (k, v) =>
         s""""$k":{"min":$v,"p1":${p1(k).sec},"p2":${p2(k).sec},""" +
           s""""gc1":${p1(k).gcMs},"gc2":${p2(k).gcMs},"nc1":${p1(k).nComp},"nc2":${p2(k).nComp},""" +
           s""""st1":${p1(k).steal},"st2":${p2(k).steal},"th1":${p1(k).thrMs},"th2":${p2(k).thrMs},""" +
-          s""""ex1":${p1(k).extMs},"ex2":${p2(k).extMs}}"""
+          s""""ex1":${p1(k).extMs},"ex2":${p2(k).extMs},""" +
+          s""""prof1":${p1(k).profJson},"prof2":${p2(k).profJson}}"""
       }
       .mkString("{", ",", "}")
     // q01-normalized total, emitted alongside raw: committed sweeps from
@@ -192,23 +183,24 @@ object Bench {
         s""""total_q01norm":$q01Norm,""" +
         s""""steal_retries":[${g1.retries},${g2.retries}],""" +
         s""""steal_fracs":[${fracsJson(g1)},${fracsJson(g2)}],""" +
-        s""""steal_frac_max":$stealFracMax,""" +
+        s""""steal_frac_max":$stealFracMax,$failedJson,""" +
         s""""queries":$fullJson}""").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] bench_full.json write failed: $e") }
 
     // Compact per-pass totals, printed BEFORE the metrics line so the
     // driver's 2000-char output tail can carry both (per-query detail
-    // is in bench_full.json): [pass1, pass2] totals of GC ms and
-    // codegen compilations — the two suite-accumulation suspects.
-    // Deliberately tiny (~45 chars): if the tail budget runs out, only
-    // this line's HEAD is cut, never the metrics line after it.
+    // is in bench_full.json): [pass1, pass2] totals of GC ms, codegen
+    // compilations and the environment counters, plus the failed
+    // queries. Kept short (~150 chars with no failures; each failed
+    // name adds its length): if the tail budget runs out, only this
+    // line's HEAD is cut, never the metrics line after it.
     val gcs = Seq(p1, p2).map(_.valuesIterator.map(_.gcMs).sum).mkString("[", ",", "]")
     val ncs = Seq(p1, p2).map(_.valuesIterator.map(_.nComp).sum).mkString("[", ",", "]")
     val sts = Seq(p1, p2).map(_.valuesIterator.map(_.steal).sum).mkString("[", ",", "]")
     val ths = Seq(p1, p2).map(_.valuesIterator.map(_.thrMs).sum).mkString("[", ",", "]")
     val exs = Seq(p1, p2).map(_.valuesIterator.map(_.extMs).sum).mkString("[", ",", "]")
     println(s"""{"diag":{"gc":$gcs,"nc":$ncs,"steal":$sts,"thr":$ths,"ext_ms":$exs,""" +
-      s""""retries":[${g1.retries},${g2.retries}]}}""")
+      s""""retries":[${g1.retries},${g2.retries}],$failedJson}}""")
 
     // The driver keeps only the final 2000 chars of output, so the metrics
     // line must stay well under that budget; f3 is only used for the total.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     // never passes them, so the gate still dumps everything.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as LONG nanos and
-      // let Registry.table normalize to a microsecond timestamp.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // the full extension set (TVFs, kernels, levenshtein + percentile
-      // optimizer rules) active from session birth: every query plans
-      // identically regardless of run order
-      .withExtensions(new GraftSparkExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cpus("4"), "WARN")
     new java.io.File(outDir).mkdirs()
     // Run queries concurrently: per-query wall time is dominated by
     // driver-side planning + codegen compilation (single-threaded per
@@ -47,6 +31,12 @@ object Verify {
     }
     tasks.foreach(_.get())
     exec.shutdown()
+    writeOracleSql(outDir)
+    spark.stop()
+  }
+
+  /** `<outDir>/oracle_sql.json`: every SparkEntry oracle query by name. */
+  def writeOracleSql(outDir: String): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -62,6 +52,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

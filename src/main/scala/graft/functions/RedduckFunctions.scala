@@ -108,10 +108,12 @@ object RedduckFunctions {
   }
 
   /** Batched `redis_get`: resolves `keyCol` for a whole DataFrame with one
-    * pipelined MGET per `batchSize` keys per partition — the structural
+    * pipelined MGET per `batchSize` rows per partition — the structural
     * fix for the reference's one-round-trip-per-row cost model
     * (redduck_extension.cpp:327-342; SURVEY §3.3). This is the form to
-    * use at scale; the UDF above is row-at-a-time parity.
+    * use at scale; the UDF above is row-at-a-time parity. As there, a
+    * NULL key is not sent and yields NULL. `keyCol` must be a STRING
+    * column (IllegalArgumentException otherwise).
     */
   def withRedisValues(df: DataFrame, keyCol: String, valueCol: String = "value",
       batchSize: Int = 512, hostPort: Option[(String, Int)] = None,
@@ -123,13 +125,20 @@ object RedduckFunctions {
     val schema = StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField(valueCol, StringType, nullable = true))
     val keyIdx = df.schema.fieldIndex(keyCol)
+    val keyType = df.schema(keyIdx).dataType
+    if (keyType != StringType)
+      throw new IllegalArgumentException(
+        s"withRedisValues: key column '$keyCol' must be STRING, got ${keyType.sql}")
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     df.mapPartitions { rows =>
       rows.grouped(batchSize).flatMap { group =>
-        val keys = group.map(_.getString(keyIdx))
-        val values = RedisConnection.withPooled(host, port, creds)(c => RedisCommands.mget(c, keys))
-        group.iterator.zip(values.iterator).map { case (row, v) =>
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ v.getOrElse(missingDefault))
+        val keys = group.filterNot(_.isNullAt(keyIdx)).map(_.getString(keyIdx))
+        val values =
+          if (keys.isEmpty) Iterator.empty
+          else RedisConnection.withPooled(host, port, creds)(c => RedisCommands.mget(c, keys)).iterator
+        group.iterator.map { row =>
+          val v = if (row.isNullAt(keyIdx)) null else values.next().getOrElse(missingDefault)
+          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ v)
         }
       }
     }(enc)

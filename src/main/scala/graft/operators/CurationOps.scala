@@ -1398,9 +1398,11 @@ object CurationOps {
     */
   val SmallTokenizerWords: Long = 1000000L
 
-  private def smallTokenizerWords(spark: org.apache.spark.sql.SparkSession): Long =
-    scala.util.Try(spark.conf.get("spark.graft.smallTokenizerWords").toLong)
-      .getOrElse(SmallTokenizerWords)
+  private def smallTokenizerWords(spark: org.apache.spark.sql.SparkSession): Long = {
+    val key = "spark.graft.smallTokenizerWords"
+    spark.conf.getOption(key).fold(SmallTokenizerWords)(v => v.toLongOption.getOrElse(
+      throw new IllegalArgumentException(s"$key must be a whole number of words, got '$v'")))
+  }
 
   /** Spark's (and DuckDB's) string sort order is UTF-8 BINARY byte
     * order (`UTF8String.compareTo`); Java's `String.compareTo` is
@@ -1457,6 +1459,7 @@ object CurationOps {
     */
   private def wordCountsOrFrame(docs: DataFrame, textCol: String)
       : Either[Array[(String, Long)], DataFrame] = {
+    val bound = smallTokenizerWords(docs.sparkSession)
     val wc = docs
       .select(explode(TextOps.tokens(col(textCol))).as("w"))
       .filter(col("w") =!= "")
@@ -1464,7 +1467,7 @@ object CurationOps {
       .persist()
     val nWords = wc.count() // materializes the cache for either route
     val res =
-      if (nWords <= smallTokenizerWords(docs.sparkSession))
+      if (nWords <= bound)
         Left(wc.collect().map(r => (r.getString(0), r.getLong(1))))
       else
         Right(wc.select(col("cnt"),

@@ -577,7 +577,7 @@ object LedgerGuard {
     val gen = readablePath(fs, target)
     // schema sniffed on the DRIVER from one footer: every readLedger
     // otherwise pays a schema-inference Spark job (77 such jobs per
-    // suite pass — JobAudit's jobkind histogram), i.e. one driver
+    // suite pass — the profiler's job-kind histogram), i.e. one driver
     // barrier per ledger read for information one footer already holds.
     // Spark-written files carry the exact original StructType JSON in
     // the footer's key-value metadata, so the sniffed schema is

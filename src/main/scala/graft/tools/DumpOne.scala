@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry, Verify}
 
 /** Dev tool: dump one named query's result parquet into an existing
   * Verify outDir (so tools/selfcheck.py can re-check just that query
@@ -12,37 +12,15 @@ object DumpOne {
     val names = args(0).split(',').toSeq
     val sfDir = args(1)
     val outDir = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .withExtensions(new graft.GraftSparkExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cpus("8"), "WARN")
     names.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+      SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
       println(s"[dump-one] wrote $outDir/$name")
     }
     // refresh oracle_sql.json so selfcheck sees queries newer than the
-    // last full Verify sweep (same escaping as Verify)
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
-      graft.SparkEntry.oracleSql
-        .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}"))
+    // last full Verify sweep
+    Verify.writeOracleSql(outDir)
     spark.stop()
   }
 }

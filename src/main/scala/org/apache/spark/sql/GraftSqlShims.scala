@@ -49,4 +49,21 @@ object GraftSqlShims {
   def serializableConf(conf: org.apache.hadoop.conf.Configuration)
       : org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(conf)
+
+  /** Block until every listener has handled every event posted so far
+    * (the `LiveListenerBus` is `private[spark]`); fails after 60 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The query behind a SQL execution's end event, with its duration in
+    * ns and its failure, for the executions a `QueryExecutionListener`
+    * is told of (named Dataset actions), from any session: the event's
+    * fields are `private[sql]`, and a listener manager only hears its
+    * own session's executions.
+    */
+  def executionEnd(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[(org.apache.spark.sql.execution.QueryExecution, Long, Option[Throwable])] =
+    if (e.executionName.isDefined && e.qe != null) Some((e.qe, e.duration, e.executionFailure))
+    else None
 }

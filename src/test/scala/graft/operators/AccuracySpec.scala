@@ -114,7 +114,7 @@ class AccuracySpec extends AnyFunSuite {
     val (kc, nprobe) = (8, 6)
     // residual (IVFADC) codebooks at the same m×k code budget and the
     // same rerank budget as the round-5 raw form. The r6 probe sweep
-    // (tools/ProbeIvfPq) showed recall on this corpus is PRUNING-bound:
+    // showed recall on this corpus is PRUNING-bound:
     // measured recall equals the probed-cell ceiling in 17/20 configs,
     // so the 0.7 → 0.85 gate raise comes from probing 6/8 cells
     // (ceiling 0.925, measured 0.875); residual coding holds parity

@@ -1128,6 +1128,16 @@ class CurationOpsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.smallTokenizerWords")
   }
 
+  test("tokenizer learn: a malformed smallTokenizerWords bound fails, naming the key and value") {
+    val docs = Seq("low low lower").toDF("text")
+    spark.conf.set("spark.graft.smallTokenizerWords", "1m")
+    try {
+      val e = intercept[IllegalArgumentException](CurationOps.learnBpeMerges(docs, "text", 2))
+      assert(e.getMessage.contains("spark.graft.smallTokenizerWords") && e.getMessage.contains("'1m'"),
+        e.getMessage)
+    } finally spark.conf.unset("spark.graft.smallTokenizerWords")
+  }
+
   test("bpeEncode: priority-loop apply — divergence from naive list order, multi-occurrence, empties, NULL") {
     import graft.functions.TokenizeExpressions.bpeEncode
     def enc(text: String, merges: Seq[(String, String)]): Seq[Seq[String]] =

@@ -1677,7 +1677,7 @@ class OperatorsSpec extends AnyFunSuite {
     // any append — proven by deleting /sig outright and replaying: the
     // marked replay must no-op silently, while a NEW batchId must fail
     // loudly on the missing signature sidecar. This pins the replay at
-    // zero Spark jobs (ProbeD66Bench measures exactly that) without a
+    // zero Spark jobs without a
     // fragile listener: any ledger read would throw here.
     val path = java.nio.file.Files.createTempDirectory("graft-clfp").toString + "/cl"
     val corpus = Seq((10L, "alpha beta gamma delta epsilon zeta"))

@@ -515,6 +515,31 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.GraftRedis.registerSql(spark)
   }
 
+  test("withRedisValues: NULL keys yield NULL unsent (also under the legacy flag); non-STRING keys fail at call time") {
+    import spark.implicits._
+    // batchSize 3: the second batch is all NULL, the others straddle it
+    val keys = Seq[String]("testkey:0001", null, "no:such:key", null, null, null,
+      "testkey:0002", null).toDF("key")
+    def lookup(): Seq[(String, String)] =
+      graft.functions.RedduckFunctions.withRedisValues(keys, "key", batchSize = 3,
+        hostPort = Some(("127.0.0.1", port))).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(lookup() == Seq(("testkey:0001", "value1"), (null, null), ("no:such:key", null),
+      (null, null), (null, null), (null, null), ("testkey:0002", "value2"), (null, null)))
+    // NULL keys are never sent: an all-NULL input needs no server at all
+    val closedPort = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    assert(graft.functions.RedduckFunctions.withRedisValues(Seq[String](null, null).toDF("key"), "key",
+      hostPort = Some(("127.0.0.1", closedPort))).collect().forall(_.isNullAt(1)))
+    spark.conf.set(graft.functions.RedduckFunctions.LegacyEmptyConf, "true")
+    try assert(lookup().map(_._2) == Seq("value1", null, "", null, null, null, "value2", null))
+    finally spark.conf.set(graft.functions.RedduckFunctions.LegacyEmptyConf, "false")
+
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.RedduckFunctions.withRedisValues(Seq(1, 2).toDF("id"), "id",
+        hostPort = Some(("127.0.0.1", port)))
+    }
+    assert(e.getMessage.contains("'id'") && e.getMessage.contains("INT"), e.getMessage)
+  }
+
   test("AUTH: requirepass server rejects unauthenticated reads; .option(auth)/session conf authenticate; ACL 2-arg form; wrong password fails loudly") {
     val authServer = new FakeRedisServer()
     authServer.setRequirePass("s3cret")
