@@ -17,6 +17,10 @@ object Verify {
     // interleaves the jobs; results are independent parquet dirs.
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").toInt
     val exec = java.util.concurrent.Executors.newFixedThreadPool(par)
+    // a failed query writes no output directory; name every one of them
+    // (exception class included — a bare message can be null or vague)
+    // and tally them at the end, so a missing output is never silent
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
@@ -25,12 +29,16 @@ object Verify {
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed.add(name)
+            System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
           }
       })
     }
     tasks.foreach(_.get())
     exec.shutdown()
+    val names = scala.jdk.CollectionConverters.CollectionHasAsScala(failed)
+      .asScala.toSeq.sorted
+    System.err.println(s"[verify] ${names.size} failed: ${names.mkString(", ")}")
     writeOracleSql(outDir)
     spark.stop()
   }

@@ -704,23 +704,20 @@ object CurationOps {
   // batchId discipline as every ledger family.
   // ------------------------------------------------------------------
 
-  private val BigramMetaFile = LedgerGuard.SidecarPrefix + "BIGRAM_META"
+  private val BigramParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "BIGRAM_META", "bigram ledger",
+    "bigram counts from different tokenizations are incomparable")
 
-  private def readBigramMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] =
-    LedgerGuard.readSidecarMetaStr(spark, path, BigramMetaFile)
-      .flatMap(_.get("tokenizerId"))
+  private val BigramSpec = Ledger.Spec("bigram ledger", Seq("w1", "w2"),
+    Ledger.Merge.Sum("n"), Ledger.Retract.Negate, params = Some(BigramParams))
 
-  private def requireBigramMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, tokenizerId: String, op: String): Unit =
-    readBigramMeta(spark, path).foreach { t =>
-      if (t != tokenizerId)
-        throw new IllegalArgumentException(
-          s"bigram ledger $op at $path: ledger was created with " +
-            s"tokenizerId=$t but the caller passed tokenizerId=$tokenizerId " +
-            "— bigram counts from different tokenizations are incomparable; " +
-            "pass the creation-time tag (or rebuild the ledger)")
-    }
+  /** The drift guard every bigram-LM probe runs: the sidecar must exist
+    * and carry the caller's tokenizer.
+    */
+  private def requireBigramProbe(spark: org.apache.spark.sql.SparkSession,
+      path: String, tokenizerId: String): Unit =
+    BigramParams.check(spark, path, "probe", Seq("tokenizerId" -> tokenizerId),
+      mustExist = true)
 
   /** The mergeable unit: `(w1, w2, n)` bigram counts with one
     * `(last_token, NULL)` tail row per document (see the family note
@@ -740,22 +737,19 @@ object CurationOps {
 
   /** Create/overwrite the bigram-LM ledger from an initial corpus. */
   def writeBigramLedger(docs: DataFrame, textCol: String, path: String,
-      tokenizerId: String = "ws"): Unit = {
-    bigramCounts(docs, textCol).write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(docs.sparkSession, path, BigramMetaFile,
-      Seq("tokenizerId" -> tokenizerId))
-  }
+      tokenizerId: String = "ws"): Unit =
+    Ledger.create(docs.sparkSession, path, BigramSpec,
+      bigramCounts(docs, textCol), Seq("tokenizerId" -> tokenizerId))
 
   /** Ledger ∪ batch counts, re-summed — lazily reads `path`; persist
     * to a NEW generation dir or use [[advanceBigramLedger]].
     */
   def mergeBigramLedger(batch: DataFrame, textCol: String, path: String,
       tokenizerId: String = "ws"): DataFrame = {
-    requireBigramMeta(batch.sparkSession, path, tokenizerId, "merge")
-    LedgerGuard.readLedger(batch.sparkSession, path)
-      .unionByName(bigramCounts(batch, textCol))
-      .groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("n"))
+    BigramParams.check(batch.sparkSession, path, "merge",
+      Seq("tokenizerId" -> tokenizerId))
+    Ledger.merged(batch.sparkSession, path, BigramSpec,
+      bigramCounts(batch, textCol))
   }
 
   /** Fold a batch into the at-rest counts IN PLACE (staged swap,
@@ -764,16 +758,9 @@ object CurationOps {
     * adopts the caller's tag on first advance (trusted once).
     */
   def advanceBigramLedger(batch: DataFrame, textCol: String, path: String,
-      tokenizerId: String = "ws", batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    LedgerGuard.advanceInPlace(spark, path, "bigram ledger", batchId) { staging =>
-      mergeBigramLedger(batch, textCol, path, tokenizerId)
-        .write.mode("overwrite").parquet(staging)
-    }
-    if (readBigramMeta(spark, path).isEmpty)
-      LedgerGuard.writeSidecarMetaStr(spark, path, BigramMetaFile,
-        Seq("tokenizerId" -> tokenizerId))
-  }
+      tokenizerId: String = "ws", batchId: Option[String] = None): Unit =
+    Ledger.advance(batch.sparkSession, path, BigramSpec, batchId,
+      Seq("tokenizerId" -> tokenizerId))(bigramCounts(batch, textCol))
 
   /** Score a batch's documents against the AT-REST language model —
     * [[bigramLmScore]]'s output shape `(idCol, n_bigrams,
@@ -790,19 +777,7 @@ object CurationOps {
   def bigramScoreFromLedger(batch: DataFrame, idCol: String, textCol: String,
       path: String, tokenizerId: String = "ws"): DataFrame = {
     val spark = batch.sparkSession
-    readBigramMeta(spark, path) match {
-      case Some(t) if t != tokenizerId =>
-        throw new IllegalArgumentException(
-          s"bigram-LM probe at $path: ledger was created with " +
-            s"tokenizerId=$t but the caller passed tokenizerId=$tokenizerId " +
-            "— scores under a different tokenization are incomparable; " +
-            "pass the creation-time tag (or rebuild)")
-      case Some(_) => ()
-      case None => throw new IllegalStateException(
-        s"bigram-LM probe at $path: no ${BigramMetaFile} sidecar — cannot " +
-          "verify the ledger's tokenizer; rebuild the ledger (or restore " +
-          "the sidecar)")
-    }
+    requireBigramProbe(spark, path, tokenizerId)
     // compaction-time model sidecar when present (see
     // [[compactBigramLedger]] / [[bindBigram]]): per-token sums and
     // the vocab total are READ, not recomputed. Same arithmetic on
@@ -855,12 +830,7 @@ object CurationOps {
       s"λ must be a distribution with λ0 > 0 (the finite-score floor): " +
         s"($lambda2, $lambda1, $lambda0)")
     val spark = batch.sparkSession
-    if (readBigramMeta(spark, path).isEmpty)
-      throw new IllegalStateException(
-        s"bigram-LM probe at $path: no ${BigramMetaFile} sidecar — cannot " +
-          "verify the ledger's tokenizer; rebuild the ledger (or restore " +
-          "the sidecar)")
-    requireBigramMeta(spark, path, tokenizerId, "probe")
+    requireBigramProbe(spark, path, tokenizerId)
     // model sidecar when present: every recompute aggregation becomes
     // a read (see [[bindBigram]]; identical arithmetic)
     val b = bindBigram(spark, path)
@@ -920,12 +890,7 @@ object CurationOps {
     require(alpha > 0 && alpha < 1,
       s"alpha must be in (0,1) — it is the finite-score floor: $alpha")
     val spark = batch.sparkSession
-    if (readBigramMeta(spark, path).isEmpty)
-      throw new IllegalStateException(
-        s"bigram-LM probe at $path: no ${BigramMetaFile} sidecar — cannot " +
-          "verify the ledger's tokenizer; rebuild the ledger (or restore " +
-          "the sidecar)")
-    requireBigramMeta(spark, path, tokenizerId, "probe")
+    requireBigramProbe(spark, path, tokenizerId)
     // model sidecar when present: every recompute aggregation becomes
     // a read (see [[bindBigram]]; identical arithmetic)
     val b = bindBigram(spark, path)
@@ -988,27 +953,9 @@ object CurationOps {
     */
   def retractFromBigramLedger(forgotten: DataFrame, textCol: String,
       path: String, tokenizerId: String = "ws",
-      batchId: Option[String] = None): Unit = {
-    val spark = forgotten.sparkSession
-    requireBigramMeta(spark, path, tokenizerId, "retract")
-    LedgerGuard.advanceInPlace(spark, path, "bigram-ledger retraction",
-      batchId) { staging =>
-      val merged = LedgerGuard.readLedger(spark, path)
-        .unionByName(bigramCounts(forgotten, textCol)
-          .withColumn("n", -col("n")))
-        .groupBy(col("w1"), col("w2"))
-        .agg(sum(col("n")).as("n"))
-        .localCheckpoint() // one computation: the guard and the write
-      val neg = merged.filter(col("n") < 0).limit(1).collect()
-      if (neg.nonEmpty)
-        throw new IllegalArgumentException(
-          s"bigram-ledger retraction at $path: bigram (${neg.head.get(0)}, " +
-            s"${neg.head.get(1)}) would go negative — the forgotten rows " +
-            "were never admitted (or already retracted, or tokenized " +
-            "differently); retraction must subtract exactly what was added")
-      merged.filter(col("n") > 0).write.mode("overwrite").parquet(staging)
-    }
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.retract(forgotten.sparkSession, path, BigramSpec, batchId,
+      Seq("tokenizerId" -> tokenizerId))(bigramCounts(forgotten, textCol))
 
   /** Compact the bigram ledger IN PLACE: re-sum accreted duplicate
     * `(w1, w2)` rows and rewrite small files keyed for pruning — and
@@ -1027,12 +974,10 @@ object CurationOps {
   def compactBigramLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "bigram-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path)
-      LayoutOps.writeSized(
-        led.groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n")),
-        staging, col("w1"), targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
+    Ledger.compactWith(spark, path, BigramSpec) { staging =>
+      Ledger.writeSized(spark, path, BigramSpec,
+        Ledger.fold(BigramSpec, Ledger.read(spark, path)), staging,
+        targetFiles, maxRecordsPerFile)
       // derive the model from the rows JUST WRITTEN (read back, one
       // materialization) so model ≡ file contents by construction
       writeBigramModel(LedgerGuard.readParquetSniffed(spark, staging), staging)
@@ -1440,6 +1385,12 @@ object CurationOps {
     * note there: a just-merged `a+b` can never string-equal `a`).
     */
   private def mergeRewrite(syms: Array[String], a: String, b: String): Array[String] = {
+    // a word with no adjacent (a, b) pair cannot change (the fold merges
+    // only such pairs): hand its array back instead of rebuilding it —
+    // most words, most rounds
+    var j = 1
+    while (j < syms.length && !(syms(j - 1) == a && syms(j) == b)) j += 1
+    if (j >= syms.length) return syms
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < syms.length) {
@@ -1767,10 +1718,15 @@ object CurationOps {
         sum(TextOps.tokenCount(col(textCol)).cast("long")).as("n_tokens"),
         sum(length(col(textCol)).cast("long")).as("n_chars"))
 
+  private def statsSpec(keyCol: String) = Ledger.Spec("stats ledger",
+    Seq(keyCol), Ledger.Merge.Sum("n_docs", "n_tokens", "n_chars"),
+    Ledger.Retract.Negate)
+
   /** Create/overwrite the stats ledger from an initial corpus. */
   def writeStatsLedger(df: DataFrame, keyCol: String, textCol: String,
       path: String): Unit =
-    corpusStats(df, keyCol, textCol).write.mode("overwrite").parquet(path)
+    Ledger.create(df.sparkSession, path, statsSpec(keyCol),
+      corpusStats(df, keyCol, textCol))
 
   /** Fold a new batch into the at-rest stats without touching the
     * original documents: union the ledger rows with the batch's delta
@@ -1784,15 +1740,9 @@ object CurationOps {
     * [[advanceStatsLedger]], which stages and swaps for you.
     */
   def mergeStatsLedger(batch: DataFrame, keyCol: String, textCol: String,
-      path: String): DataFrame = {
-    LedgerGuard.readLedger(batch.sparkSession, path)
-      .unionByName(corpusStats(batch, keyCol, textCol))
-      .groupBy(col(keyCol))
-      .agg(
-        sum(col("n_docs")).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_chars")).as("n_chars"))
-  }
+      path: String): DataFrame =
+    Ledger.merged(batch.sparkSession, path, statsSpec(keyCol),
+      corpusStats(batch, keyCol, textCol))
 
   /** Merge `batch` into the ledger at `path` IN PLACE: the merged frame
     * is materialized to a staging sibling first, then swapped in with
@@ -1810,10 +1760,8 @@ object CurationOps {
     */
   def advanceStatsLedger(batch: DataFrame, keyCol: String, textCol: String,
       path: String, batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(batch.sparkSession, path, "stats ledger", batchId) { staging =>
-      mergeStatsLedger(batch, keyCol, textCol, path)
-        .write.mode("overwrite").parquet(staging)
-    }
+    Ledger.advance(batch.sparkSession, path, statsSpec(keyCol), batchId)(
+      corpusStats(batch, keyCol, textCol))
 
   /** Right-to-be-forgotten for the stats ledger, by SUBTRACTION — the
     * [[retractFromQuantileLedger]] contract: exact (all three stats
@@ -1827,34 +1775,9 @@ object CurationOps {
     * because clamping would silently skew every later corpus card.
     */
   def retractFromStatsLedger(forgotten: DataFrame, keyCol: String,
-      textCol: String, path: String, batchId: Option[String] = None): Unit = {
-    val spark = forgotten.sparkSession
-    LedgerGuard.advanceInPlace(spark, path, "stats-ledger retraction",
-      batchId) { staging =>
-      val neg = corpusStats(forgotten, keyCol, textCol)
-        .select(col(keyCol), (-col("n_docs")).as("n_docs"),
-          (-col("n_tokens")).as("n_tokens"), (-col("n_chars")).as("n_chars"))
-      val merged = LedgerGuard.readLedger(spark, path)
-        .unionByName(neg)
-        .groupBy(col(keyCol))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"))
-        .localCheckpoint() // one computation: the guard and the write
-      val bad = merged.filter(col("n_docs") < 0 || col("n_tokens") < 0 ||
-          col("n_chars") < 0 ||
-          (col("n_docs") === 0 && (col("n_tokens") =!= 0 || col("n_chars") =!= 0)))
-        .limit(1).collect()
-      if (bad.nonEmpty)
-        throw new IllegalArgumentException(
-          s"stats-ledger retraction at $path: key ${bad.head.get(0)} would " +
-            "go inconsistent (a negative stat, or zero docs with leftover " +
-            "tokens/chars) — the forgotten rows were never admitted, were " +
-            "already retracted, or carry text that differs from admission; " +
-            "retraction must subtract exactly what was added")
-      merged.filter(col("n_docs") > 0).write.mode("overwrite").parquet(staging)
-    }
-  }
+      textCol: String, path: String, batchId: Option[String] = None): Unit =
+    Ledger.retract(forgotten.sparkSession, path, statsSpec(keyCol), batchId)(
+      corpusStats(forgotten, keyCol, textCol))
 
   // ------------------------------------------------------------------
   // Distinct-content SKETCH ledger — at-rest per-key HLL sketches
@@ -1890,10 +1813,15 @@ object CurationOps {
         hll_sketch_agg(distinctCol, lit(lgK)).as("hll"),
         min(lit(lgK)).as("lgk"))
 
+  private def sketchSpec(keyCol: String) = Ledger.Spec("sketch ledger",
+    Seq(keyCol), Ledger.Merge.Sketch(sum(col("n_docs")).as("n_docs"),
+      hll_union_agg(col("hll")).as("hll"), min(col("lgk")).as("lgk")))
+
   /** Create/overwrite the sketch ledger from an initial corpus. */
   def writeSketchLedger(df: DataFrame, keyCol: String, distinctCol: Column,
       path: String, lgK: Int = 12): Unit =
-    corpusSketch(df, keyCol, distinctCol, lgK).write.mode("overwrite").parquet(path)
+    Ledger.create(df.sparkSession, path, sketchSpec(keyCol),
+      corpusSketch(df, keyCol, distinctCol, lgK))
 
   /** Fold a batch's delta sketch into the at-rest ledger: union rows,
     * sum exact counts, HLL-union sketches per key. Same read-side
@@ -1902,21 +1830,20 @@ object CurationOps {
     * [[advanceSketchLedger]] for fixed-location in-place swaps).
     */
   def mergeSketchLedger(batch: DataFrame, keyCol: String, distinctCol: Column,
-      path: String, lgK: Int = 12): DataFrame = {
-    val ledger = LedgerGuard.readLedger(batch.sparkSession, path)
+      path: String, lgK: Int = 12): DataFrame =
+    sketchMerged(Ledger.read(batch.sparkSession, path), batch, keyCol,
+      distinctCol, lgK)
+
+  private def sketchMerged(ledger: DataFrame, batch: DataFrame, keyCol: String,
+      distinctCol: Column, lgK: Int): DataFrame = {
     // the delta MUST be sketched at the ledger's own lgK or the union
     // throws (HLL_UNION_DIFFERENT_LG_K) — the `lgK` parameter is only
     // the fallback for a ledger with zero rows (empty initial corpus).
     // One-row driver lookup against a model-sized table.
     val atRestLgK = ledger.select(col("lgk")).take(1).headOption
       .map(_.getInt(0)).getOrElse(lgK)
-    ledger
-      .unionByName(corpusSketch(batch, keyCol, distinctCol, atRestLgK))
-      .groupBy(col(keyCol))
-      .agg(
-        sum(col("n_docs")).as("n_docs"),
-        hll_union_agg(col("hll")).as("hll"),
-        min(col("lgk")).as("lgk"))
+    Ledger.fold(sketchSpec(keyCol),
+      ledger.unionByName(corpusSketch(batch, keyCol, distinctCol, atRestLgK)))
   }
 
   /** Merge `batch` into the sketch ledger at `path` IN PLACE — the same
@@ -1924,9 +1851,8 @@ object CurationOps {
     */
   def advanceSketchLedger(batch: DataFrame, keyCol: String, distinctCol: Column,
       path: String, lgK: Int = 12, batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(batch.sparkSession, path, "sketch ledger", batchId) { staging =>
-      mergeSketchLedger(batch, keyCol, distinctCol, path, lgK)
-        .write.mode("overwrite").parquet(staging)
+    Ledger.advanceWith(batch.sparkSession, path, sketchSpec(keyCol), batchId)(()) {
+      (stored, _) => sketchMerged(stored, batch, keyCol, distinctCol, lgK)
     }
 
   /** Readable view of the sketch ledger: per key, the exact doc count
@@ -2001,31 +1927,26 @@ object CurationOps {
   // discipline as every other ledger family.
   // ------------------------------------------------------------------
 
-  private val QhistMetaFile = LedgerGuard.SidecarPrefix + "QHIST_META"
+  private val QhistParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "QHIST_META", "quantile ledger",
+    "histograms bucketed differently are incomparable")
 
-  private def writeQhistMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, shift: Int, keyCol: String, valueCol: String): Unit =
-    LedgerGuard.writeSidecarMetaStr(spark, path, QhistMetaFile,
-      Seq("shift" -> shift.toString, "keyCol" -> keyCol, "valueCol" -> valueCol))
+  private def qhistSpec(keyCol: String) = Ledger.Spec("quantile ledger",
+    Seq(keyCol, "qh_b"), Ledger.Merge.Sum("qh_c"), Ledger.Retract.Negate,
+    params = Some(QhistParams))
 
-  private def readQhistMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(Int, String, String)] =
-    LedgerGuard.readSidecarMetaStr(spark, path, QhistMetaFile).flatMap { kv =>
-      for (s <- kv.get("shift"); k <- kv.get("keyCol"); v <- kv.get("valueCol"))
-        yield (s.toInt, k, v)
-    }
+  private def qhistParams(shift: Int, keyCol: String, valueCol: String) =
+    Seq("shift" -> shift, "keyCol" -> keyCol, "valueCol" -> valueCol)
 
-  private def requireQhistMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, shift: Int, keyCol: String, valueCol: String, op: String): Unit =
-    readQhistMeta(spark, path).foreach { case (s, k, v) =>
-      if (s != shift || k != keyCol || v != valueCol)
-        throw new IllegalArgumentException(
-          s"quantile ledger $op at $path: ledger was created with " +
-            s"shift=$s, keyCol=$k, valueCol=$v but the caller passed " +
-            s"shift=$shift, keyCol=$keyCol, valueCol=$valueCol — " +
-            "histograms bucketed differently are incomparable; pass the " +
-            "creation-time values (or rebuild the ledger)")
-    }
+  /** The persisted (shift, keyCol, valueCol) of a quantile ledger — a
+    * probe cannot recover the shift any other way, and guessing would
+    * return plausible wrong bounds.
+    */
+  private def qhistMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, op: String): (Int, String, String) = {
+    val kv = QhistParams.need(spark, path, op)
+    (kv("shift").toInt, kv("keyCol"), kv("valueCol"))
+  }
 
   /** Per-key bucket counts of an integral measure: `(key, qh_b, qh_c)`
     * with `qh_b = value >> shift`. The mergeable unit — and the probe's
@@ -2048,11 +1969,10 @@ object CurationOps {
 
   /** Create/overwrite the quantile ledger from an initial corpus. */
   def writeQuantileLedger(df: DataFrame, keyCol: String, valueCol: String,
-      shift: Int, path: String): Unit = {
-    longHistogram(df, keyCol, valueCol, shift)
-      .write.mode("overwrite").parquet(path)
-    writeQhistMeta(df.sparkSession, path, shift, keyCol, valueCol)
-  }
+      shift: Int, path: String): Unit =
+    Ledger.create(df.sparkSession, path, qhistSpec(keyCol),
+      longHistogram(df, keyCol, valueCol, shift),
+      qhistParams(shift, keyCol, valueCol))
 
   /** Ledger ∪ batch, re-summed per (key, bucket) — lazily reads `path`;
     * persist to a NEW generation dir (see [[mergeStatsLedger]]) or use
@@ -2060,11 +1980,10 @@ object CurationOps {
     */
   def mergeQuantileLedger(batch: DataFrame, keyCol: String, valueCol: String,
       shift: Int, path: String): DataFrame = {
-    requireQhistMeta(batch.sparkSession, path, shift, keyCol, valueCol, "merge")
-    LedgerGuard.readLedger(batch.sparkSession, path)
-      .unionByName(longHistogram(batch, keyCol, valueCol, shift))
-      .groupBy(col(keyCol), col("qh_b"))
-      .agg(sum(col("qh_c")).as("qh_c"))
+    QhistParams.check(batch.sparkSession, path, "merge",
+      qhistParams(shift, keyCol, valueCol))
+    Ledger.merged(batch.sparkSession, path, qhistSpec(keyCol),
+      longHistogram(batch, keyCol, valueCol, shift))
   }
 
   /** Fold a batch into the at-rest histogram IN PLACE (staged swap,
@@ -2073,15 +1992,10 @@ object CurationOps {
     * caller's parameters on first advance (trusted once).
     */
   def advanceQuantileLedger(batch: DataFrame, keyCol: String, valueCol: String,
-      shift: Int, path: String, batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    LedgerGuard.advanceInPlace(spark, path, "quantile ledger", batchId) { staging =>
-      mergeQuantileLedger(batch, keyCol, valueCol, shift, path)
-        .write.mode("overwrite").parquet(staging)
-    }
-    if (readQhistMeta(spark, path).isEmpty)
-      writeQhistMeta(spark, path, shift, keyCol, valueCol)
-  }
+      shift: Int, path: String, batchId: Option[String] = None): Unit =
+    Ledger.advance(batch.sparkSession, path, qhistSpec(keyCol), batchId,
+      qhistParams(shift, keyCol, valueCol))(
+      longHistogram(batch, keyCol, valueCol, shift))
 
   /** Quantile BOUNDS from the at-rest histogram, no corpus access: for
     * each key and probability, the `percentile_disc`-selected value
@@ -2096,12 +2010,7 @@ object CurationOps {
       path: String, probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0.0 && p <= 1.0),
       "probs must be in (0, 1]")
-    val (shift, keyCol, _) = readQhistMeta(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"quantile ledger probe at $path: no _GRAFT_QHIST_META sidecar — " +
-          "cannot recover the creation-time shift, and guessing would " +
-          "return plausible wrong bounds; rebuild the ledger (or restore " +
-          "the sidecar)"))
+    val (shift, keyCol, _) = qhistMeta(spark, path, "probe")
     val led = LedgerGuard.readLedger(spark, path)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(col("qh_b"))
@@ -2245,17 +2154,19 @@ object CurationOps {
     top.select(col(idCol), pr, col("rk"))
   }
 
-  private val SampleMetaFile = "_GRAFT_SAMPLE_META"
+  private val SampleParams = Ledger.Params("_GRAFT_SAMPLE_META",
+    "sample ledger", "different parameters define a different sample")
+
+  private def sampleSpec(idCol: String, k: Int) = Ledger.Spec(
+    "bottom-k sample ledger", Seq(idCol), Ledger.Merge.BottomK("pr", k),
+    layout = Ledger.Layout.OneFile, params = Some(SampleParams))
 
   /** Create/overwrite the at-rest bottom-k sample. */
   def writeSampleLedger(docs: DataFrame, idCol: String, salt: String, k: Int,
-      path: String): Unit = {
-    val spark = docs.sparkSession
-    bottomKSample(docs, idCol, salt, k).drop("rk")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(spark, path, SampleMetaFile,
-      Seq("idCol" -> idCol, "salt" -> salt, "k" -> k.toString))
-  }
+      path: String): Unit =
+    Ledger.create(docs.sparkSession, path, sampleSpec(idCol, k),
+      bottomKSample(docs, idCol, salt, k).drop("rk"),
+      Seq("idCol" -> idCol, "salt" -> salt, "k" -> k))
 
   /** Fold a batch into the at-rest sample IN PLACE (staged swap, lease,
     * manifest mode, exactly-once batchId): union the stored k rows with
@@ -2265,32 +2176,10 @@ object CurationOps {
     * is a DIFFERENT sample and merging them yields silent garbage.
     */
   def advanceSampleLedger(batch: DataFrame, idCol: String, salt: String,
-      k: Int, path: String, batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    LedgerGuard.readSidecarMetaStr(spark, path, SampleMetaFile).foreach { kv =>
-      if (kv.get("idCol") != Some(idCol) || kv.get("salt") != Some(salt) ||
-          kv.get("k") != Some(k.toString))
-        throw new IllegalArgumentException(
-          s"sample ledger advance at $path: ledger was created with " +
-            s"${kv.toSeq.sorted.mkString(", ")} but the caller passed " +
-            s"idCol=$idCol, salt=$salt, k=$k — different parameters define " +
-            "a different sample; pass the creation-time values")
-    }
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    val delta = bottomKSample(batch, idCol, salt, k).drop("rk")
-    LedgerGuard.advanceInPlace(spark, path, "bottom-k sample ledger", batchId) {
-      staging =>
-        val merged = LedgerGuard.readLedger(spark, path)
-          .unionByName(delta)
-          .groupBy(col(idCol)).agg(first(col("pr")).as("pr")) // replayed ids dedup
-          .orderBy(col("pr"), col(idCol)).limit(k)
-        merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-    if (LedgerGuard.readSidecarMetaStr(spark, path, SampleMetaFile).isEmpty)
-      LedgerGuard.writeSidecarMetaStr(spark, path, SampleMetaFile,
-        Seq("idCol" -> idCol, "salt" -> salt, "k" -> k.toString))
-  }
+      k: Int, path: String, batchId: Option[String] = None): Unit =
+    Ledger.advance(batch.sparkSession, path, sampleSpec(idCol, k), batchId,
+      Seq("idCol" -> idCol, "salt" -> salt, "k" -> k))(
+      bottomKSample(batch, idCol, salt, k).drop("rk"))
 
   /** Deterministic per-EPOCH corpus reshuffle: position = global rank of
     * `md5(salt:id)` (id tiebreak) — the reproducible data-ordering every
@@ -2342,14 +2231,8 @@ object CurationOps {
     */
   def histogramDrift(spark: org.apache.spark.sql.SparkSession,
       pathA: String, pathB: String): DataFrame = {
-    def meta(p: String): (Int, String, String) = readQhistMeta(spark, p)
-      .getOrElse(throw new IllegalStateException(
-        s"histogram drift: no _GRAFT_QHIST_META sidecar at $p — cannot " +
-          "verify the two ledgers bucket identically, and comparing " +
-          "differently-bucketed histograms returns plausible wrong drift; " +
-          "rebuild the ledger (or restore the sidecar)"))
-    val (sa, ka, va) = meta(pathA)
-    val (sb, kb, vb) = meta(pathB)
+    val (sa, ka, va) = qhistMeta(spark, pathA, "drift")
+    val (sb, kb, vb) = qhistMeta(spark, pathB, "drift")
     if ((sa, ka, va) != ((sb, kb, vb)))
       throw new IllegalArgumentException(
         s"histogram drift: $pathA was created with shift=$sa, keyCol=$ka, " +
@@ -2410,27 +2293,10 @@ object CurationOps {
     */
   def retractFromQuantileLedger(forgotten: DataFrame, keyCol: String,
       valueCol: String, shift: Int, path: String,
-      batchId: Option[String] = None): Unit = {
-    val spark = forgotten.sparkSession
-    requireQhistMeta(spark, path, shift, keyCol, valueCol, "retract")
-    LedgerGuard.advanceInPlace(spark, path, "quantile-ledger retraction",
-      batchId) { staging =>
-      val merged = LedgerGuard.readLedger(spark, path)
-        .unionByName(longHistogram(forgotten, keyCol, valueCol, shift)
-          .withColumn("qh_c", -col("qh_c")))
-        .groupBy(col(keyCol), col("qh_b"))
-        .agg(sum(col("qh_c")).as("qh_c"))
-        .localCheckpoint() // one computation: the guard and the write
-      val neg = merged.filter(col("qh_c") < 0).limit(1).collect()
-      if (neg.nonEmpty)
-        throw new IllegalArgumentException(
-          s"quantile-ledger retraction at $path: bucket ${neg.head.get(1)} " +
-            s"of key ${neg.head.get(0)} would go negative — the forgotten " +
-            "rows were never admitted (or already retracted); retraction " +
-            "must subtract exactly what was added")
-      merged.filter(col("qh_c") > 0).write.mode("overwrite").parquet(staging)
-    }
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.retract(forgotten.sparkSession, path, qhistSpec(keyCol), batchId,
+      qhistParams(shift, keyCol, valueCol))(
+      longHistogram(forgotten, keyCol, valueCol, shift))
 
   /** Compact the quantile ledger IN PLACE: re-sum any accreted
     * duplicate (key, bucket) rows and rewrite small files, sorted by
@@ -2441,22 +2307,7 @@ object CurationOps {
   def compactQuantileLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "quantile-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path)
-      // key BY NAME from the sidecar, field-order fallback for legacy
-      // stores, loud failure on a drifted layout (compactBucketedIndex
-      // contract — re-summing on the wrong key would be silent)
-      val keyName = readQhistMeta(spark, path).map(_._2) match {
-        case Some(name) =>
-          require(led.columns.contains(name),
-            s"quantile-ledger compaction at $path: sidecar names key column " +
-              s"'$name' but the files carry ${led.columns.mkString(", ")}")
-          name
-        case None => led.columns.head
-      }
-      LayoutOps.writeSized(
-        led.groupBy(col(keyName), col("qh_b")).agg(sum(col("qh_c")).as("qh_c")),
-        staging, col(keyName), targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path,
+      qhistSpec(Ledger.storedKey(spark, path, QhistParams, "keyCol")),
+      targetFiles, maxRecordsPerFile)
 }

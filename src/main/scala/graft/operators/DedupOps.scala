@@ -538,10 +538,10 @@ object DedupOps {
     */
   def writeSignatureLedger(df: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 8, shingleSize: Int = 5): Unit = {
-    minHashSignatures(df, idCol, textCol, numHashes, shingleSize)
-      .filter(col("mh0").isNotNull)
-      .write.mode("overwrite").parquet(path)
-    writeSigMeta(df.sparkSession, path, numHashes, shingleSize)
+    Ledger.create(df.sparkSession, path, SigSpec,
+      minHashSignatures(df, idCol, textCol, numHashes, shingleSize)
+        .filter(col("mh0").isNotNull),
+      sigParams(numHashes, shingleSize))
     // NO pre-banded index at creation: the standalone ledger's steady
     // state is append-then-probe ingest, and the first append drops
     // the index — creation-time banding would be a pure write tax
@@ -550,44 +550,20 @@ object DedupOps {
     // probes immediately — the build-then-ingest shape).
   }
 
-  /** Sidecar name of the signature ledger's creation-time parameters
-    * (`numHashes=<k>\nshingleSize=<n>`): `_GRAFT_`-prefixed so parquet
-    * readers skip it and the staged swap carries it forward.
+  /** The signature ledger's creation-time parameters
+    * (`numHashes=<k>\nshingleSize=<n>`): every append/probe runs the
+    * fail-loudly drift guard against them — signatures built with
+    * different shingling are incomparable, and the resulting recall
+    * loss is silent.
     */
-  private val SigMetaFile = LedgerGuard.SidecarPrefix + "SIG_META"
+  private val SigParams = Ledger.Params(LedgerGuard.SidecarPrefix + "SIG_META",
+    "signature ledger", "mixed shingling silently degrades near-dup recall")
 
-  private def writeSigMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, numHashes: Int, shingleSize: Int): Unit =
-    LedgerGuard.writeSidecarMeta(spark, path, SigMetaFile,
-      Seq("numHashes" -> numHashes.toLong, "shingleSize" -> shingleSize.toLong))
+  private val SigSpec = Ledger.Spec("signature ledger", Nil,
+    Ledger.Merge.UnionDistinct, params = Some(SigParams))
 
-  /** The persisted (numHashes, shingleSize) of the ledger generation a
-    * reader would bind (staging fallback included); None for a ledger
-    * created before the sidecar existed.
-    */
-  private def readSigMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(Int, Int)] =
-    LedgerGuard.readSidecarMeta(spark, path, SigMetaFile).flatMap { kv =>
-      for (nh <- kv.get("numHashes"); ss <- kv.get("shingleSize"))
-        yield (nh.toInt, ss.toInt)
-    }
-
-  /** Fail-loudly gate every signature-ledger append/probe runs: the
-    * caller's parameters must equal the persisted creation-time ones —
-    * signatures built with different shingling are incomparable, and
-    * the resulting recall loss is silent.
-    */
-  private def requireSigMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, numHashes: Int, shingleSize: Int, op: String): Unit =
-    readSigMeta(spark, path).foreach { case (nh, ss) =>
-      if (nh != numHashes || ss != shingleSize)
-        throw new IllegalArgumentException(
-          s"signature ledger $op at $path: ledger was created with " +
-            s"numHashes=$nh, shingleSize=$ss but the caller passed " +
-            s"numHashes=$numHashes, shingleSize=$shingleSize — mixed " +
-            "shingling silently degrades near-dup recall; pass the " +
-            "creation-time values (or rebuild the ledger)")
-    }
+  private def sigParams(numHashes: Int, shingleSize: Int) =
+    Seq("numHashes" -> numHashes, "shingleSize" -> shingleSize)
 
   /** Admit a batch's signatures (append-only, like [[appendToLedger]]).
     * Pass rows already vetted for admission — the ledger should hold
@@ -601,26 +577,12 @@ object DedupOps {
       path: String, numHashes: Int = 8, shingleSize: Int = 5,
       batchId: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    // drift guard FIRST: a replayed delivery with drifted parameters
-    // must still fail loudly (the family contract), not be silently
-    // absorbed by the marker fast-path
-    requireSigMeta(spark, path, numHashes, shingleSize, "append")
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    val dest = LedgerGuard.appendPath(spark, path)
     // the pre-banded index is about to go stale: drop it BEFORE the
     // rows land (see invalidateSigIndex for the crash-order argument)
-    invalidateSigIndex(spark, dest)
-    minHashSignatures(batch, idCol, textCol, numHashes, shingleSize)
-      .filter(col("mh0").isNotNull)
-      .write.mode("append").parquet(dest)
-    // adopt: first append to a pre-sidecar ledger stamps the caller's
-    // values (trusted once), so every LATER append/probe is validated
-    if (readSigMeta(spark, path).isEmpty)
-      writeSigMeta(spark, path, numHashes, shingleSize)
-    // marker lands AFTER the append: a crash in between leaves the
-    // safe unmarked state (replay re-appends, tolerated as ever)
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
+    Ledger.append(spark, path, SigSpec, batchId, sigParams(numHashes, shingleSize),
+      beforeWrite = invalidateSigIndex(spark, _))(
+      minHashSignatures(batch, idCol, textCol, numHashes, shingleSize)
+        .filter(col("mh0").isNotNull))
   }
 
   /** [[crossDedupPairs]] with the corpus side read from the at-rest
@@ -631,7 +593,8 @@ object DedupOps {
   def crossDedupAgainstSignatures(newDocs: DataFrame, idCol: String,
       textCol: String, path: String,
       numHashes: Int = 8, bandSize: Int = 4, shingleSize: Int = 5): DataFrame = {
-    requireSigMeta(newDocs.sparkSession, path, numHashes, shingleSize, "probe")
+    SigParams.check(newDocs.sparkSession, path, "probe",
+      sigParams(numHashes, shingleSize))
     val (rows, index) = boundSigLedger(newDocs.sparkSession, path, bandSize)
     crossPairsCore(
       sigTable(newDocs, idCol, textCol, numHashes, shingleSize),
@@ -660,11 +623,7 @@ object DedupOps {
     * cycle forever. Same knob as the query-level helper.
     */
   private def awaitLane[T](f: scala.concurrent.Future[T]): T = {
-    val sec = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => scala.util.Try(
-        s.conf.get("spark.graft.concurrentLegTimeoutSec")).toOption)
-      .orElse(sys.env.get("SPARK_GRAFT_LEG_TIMEOUT_S"))
-      .map(_.toLong).getOrElse(900L)
+    val sec = graft.queries.Qf.legTimeoutSec
     try scala.concurrent.Await.result(f,
       scala.concurrent.duration.Duration(sec, "s"))
     catch {
@@ -692,8 +651,8 @@ object DedupOps {
   def compactSignatureLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000, bandSize: Int = 4): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "signature-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path).dropDuplicates()
+    Ledger.compactWith(spark, path, SigSpec) { staging =>
+      val led = Ledger.fold(SigSpec, Ledger.read(spark, path))
       // rebuild the pre-banded probe index CONCURRENT with the sized
       // rewrite: both derive from the same dedup'd frame, so the
       // index's wall cost hides under the rewrite. It writes into a
@@ -702,9 +661,8 @@ object DedupOps {
       // and renames in after both jobs land, so it still rides into
       // the promoted generation with the swap. The dedup certificate
       // the index carries holds: the promoted rows ARE `led`.
-      implicit val ec = scala.concurrent.ExecutionContext.global
       val idxTmp = staging + ".idx"
-      val idxF = scala.concurrent.Future {
+      val idxF = graft.queries.Qf.lane {
         writeSigIndex(spark, idxTmp, bandSize, fromRows = Some(led))
       }
       val fs = new org.apache.hadoop.fs.Path(staging)
@@ -717,9 +675,8 @@ object DedupOps {
       try {
         // sort by the id column (first at-rest column) so file-level
         // min/max stats prune id-ranged reads
-        LayoutOps.writeSized(led, staging, col(led.columns.head),
-          targetFiles, maxRecordsPerFile,
-          srcBytes = LedgerGuard.readableDataBytes(spark, path))
+        Ledger.writeSized(spark, path, SigSpec, led, staging, targetFiles,
+          maxRecordsPerFile)
         sigCompactMainLegFailpoint()
         awaitLane(idxF)
         val idxName = sigIndexDirName(bandSize)
@@ -820,20 +777,20 @@ object DedupOps {
 
   private def markAsgClean(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    LedgerGuard.writeSidecarMetaStr(spark, clusterAsgPath(path),
+    LedgerGuard.writeSidecarMeta(spark, clusterAsgPath(path),
       AsgCleanFile, Seq("clean" -> "1"))
 
   private def clearAsgClean(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(
-      LedgerGuard.appendPath(spark, clusterAsgPath(path)))
+      Ledger.appendDir(spark, clusterAsgPath(path)))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir, AsgCleanFile), false): Unit
   }
 
   private def asgClean(spark: org.apache.spark.sql.SparkSession,
       path: String): Boolean =
-    LedgerGuard.readSidecarMetaStr(spark, clusterAsgPath(path), AsgCleanFile)
+    LedgerGuard.readSidecarMeta(spark, clusterAsgPath(path), AsgCleanFile)
       .isDefined
 
   private def resolvedView(spark: org.apache.spark.sql.SparkSession,
@@ -927,11 +884,10 @@ object DedupOps {
       // has no partial-retry contract (a failed create is re-created
       // from scratch, unlike the advance's ordered self-heal), so no
       // cross-leg ordering is owed.
-      implicit val ec = scala.concurrent.ExecutionContext.global
-      val idxF = scala.concurrent.Future {
+      val idxF = graft.queries.Qf.lane {
         clusterCreateSigLaneFailpoint()
-        sig.write.mode("overwrite").parquet(clusterSigPath(path))
-        writeSigMeta(docs.sparkSession, clusterSigPath(path), numHashes, shingleSize)
+        Ledger.create(docs.sparkSession, clusterSigPath(path), SigSpec, sig,
+          sigParams(numHashes, shingleSize))
         writeSigIndex(docs.sparkSession, clusterSigPath(path), bandSize,
           fromRows = Some(sig))
         // seed the (empty) remap table in the same side lane: advances
@@ -980,15 +936,16 @@ object DedupOps {
     * label's merge as a row in the model-sized `/rmp` remap table
     * (old_label → new_label; readers resolve chains transitively, so
     * no stored row is ever rewritten by an advance). The remap rewrite
-    * under the staged swap is merge-event-sized, carries the
-    * exactly-once `batchId` marker, and [[compactClusterLedger]] folds
+    * under the staged swap is merge-event-sized, the exactly-once
+    * `batchId` marker lands on the remap ledger after every write of
+    * the advance, and [[compactClusterLedger]] folds
     * deltas + remaps back into a clean sorted base — compaction pays
     * the O(corpus) write ONCE per maintenance cycle instead of every
     * advance paying it. Replay-safe end to end: a retried advance
     * re-derives identical rows (probe collapses the replayed signature
     * rows; labels are already minimal), the duplicate delta rows
     * collapse in [[readClusterAssignments]]'s dedup and at compaction,
-    * and the marker skips the remap rewrite outright.
+    * and the marker skips the whole advance outright.
     */
   /** The CC edge list for a cluster-ledger advance, FUSED into one
     * banded star pass: the union of the batch's banded rows and the
@@ -1066,14 +1023,15 @@ object DedupOps {
       path: String, batchId: Option[String] = None, numHashes: Int = 8,
       bandSize: Int = 4, shingleSize: Int = 5): Unit = {
     val spark = batch.sparkSession
-    // Replay fast-path: a batchId the remap ledger already recorded makes
+    // Drift guard, then the replay fast-path (the Ledger exactly-once
+    // rule): a batchId the remap ledger already recorded makes
     // the WHOLE advance a no-op — appends included. The swap-side marker
     // alone only guarded merge-bearing advances; a hot retry loop around
     // a no-merge batch would otherwise re-append duplicate sig/asg delta
     // rows every pass (reader-tolerated, but unbounded until compaction).
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, clusterRmpPath(path)) == batchId) return
-    requireSigMeta(spark, clusterSigPath(path), numHashes, shingleSize, "probe")
+    SigParams.check(spark, clusterSigPath(path), "probe",
+      sigParams(numHashes, shingleSize))
+    if (Ledger.applied(spark, clusterRmpPath(path), batchId)) return
     // shingle the batch ONCE: the probe, the signature append, the
     // internal star edges, and the assignments id set all read this
     // cached table (batch-bounded persist, released before return) —
@@ -1111,20 +1069,20 @@ object DedupOps {
       // below deletes — executing it first reads a deterministic
       // pre-append snapshot (the old action-time read could also see
       // the batch's own appended rows; harmless, but no longer
-      // possible). Persistence ORDER is unchanged: signatures still
-      // land before assignments — a crash between the two self-heals
-      // on retry (the edge pass tolerates its own replayed rows), where
-      // the reverse order could leave admitted assignments whose
-      // signatures later batches never probe; a crash before the sig
-      // append persists nothing at all.
+      // possible).
+      //
+      // Persistence ORDER is what makes a crash-then-retry exact:
+      // assignments, then the remap, then the signatures, then the
+      // marker. The fused edge pass lifts each stored signature to ONE
+      // member's label, which is sound only while every member of a
+      // signature shares its resolved label. Signatures that landed
+      // ahead of their remap (or their assignments) would break that
+      // on the retry: a batch doc identical to a corpus doc would mask
+      // the corpus label whose merge was never recorded. Until the
+      // signatures land, a retry re-derives exactly this advance.
       val comp = connectedComponents(
         advanceEdges(sig, storedSig, storedIdx,
           asg, idCol, numHashes, bandSize), "d1", "d2")
-      // the pre-banded index is about to go stale: drop it BEFORE the
-      // rows land (crash in between: no index and no rows — just slower)
-      val sigDest = LedgerGuard.appendPath(spark, clusterSigPath(path))
-      invalidateSigIndex(spark, sigDest)
-      sig.write.mode("append").parquet(sigDest)
       val batchAsg = sigAll.select(col(idCol).cast("long").as("node"))
         .join(comp, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
@@ -1150,14 +1108,13 @@ object DedupOps {
       // the advance's single most expensive fixed cost (lease + staged
       // write + rename + sidecar carry ≈ 0.5 s at bench scale, SCALE.md
       // round-11 d66 A/B), paid only when a merge actually happened.
-      // Collected CONCURRENT with the two delta appends below (comp is
+      // Collected CONCURRENT with the assignments append below (comp is
       // CC-cached; the asg read binds the pre-append snapshot, which
       // is the set "labels existing before this advance" the semantics
       // want — the old post-append read was equivalent only because
       // freshly appended labels are merge winners and can never match
       // a loser): the collect's join overlaps the appends' I/O.
-      implicit val ec = scala.concurrent.ExecutionContext.global
-      val newEntriesF = scala.concurrent.Future {
+      val newEntriesF = graft.queries.Qf.lane {
         newRemap.collect()
           .map(r => r.getLong(0) -> r.getLong(1))
           .filterNot { case (o, n) => existingRemap.get(o).contains(n) }
@@ -1167,11 +1124,10 @@ object DedupOps {
       // safe unmarked state (readers dedup), never a lying marker.
       clearAsgClean(spark, path)
       batchAsg.write.mode("append")
-        .parquet(LedgerGuard.appendPath(spark, clusterAsgPath(path)))
+        .parquet(Ledger.appendDir(spark, clusterAsgPath(path)))
       val newEntries = awaitLane(newEntriesF)
       if (newEntries.nonEmpty) {
-        // merge-event-sized remap rewrite under the staged swap; carries
-        // the exactly-once marker for the whole advance
+        // merge-event-sized remap rewrite under the staged swap
         val rmpPath = clusterRmpPath(path)
         val fs = new org.apache.hadoop.fs.Path(rmpPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1183,18 +1139,22 @@ object DedupOps {
         // literal relation instead of re-scanning parquet inside the
         // swap (one fewer job per advance)
         import spark.implicits._
-        LedgerGuard.advanceInPlace(spark, rmpPath,
-          "cluster-ledger remap advance", batchId) { staging =>
+        Ledger.swap(spark, rmpPath, "cluster-ledger remap advance") { staging =>
           (existingRemap.toSeq ++ newEntries).toDF("old_label", "new_label")
             .dropDuplicates()
-            .write.parquet(staging)
+            // overwrite: a stale staging dir left by a crash must not
+            // wedge every later advance of this batch
+            .write.mode("overwrite").parquet(staging)
         }
-      } else batchId.foreach { id =>
-        // no-merge advance: nothing to swap, but the exactly-once marker
-        // must still land (on the same remap ledger the swap path marks)
-        // or every replay of this batch re-appends its delta rows
-        LedgerGuard.recordBatchApplied(spark, clusterRmpPath(path), id)
       }
+      // the pre-banded index is about to go stale: drop it BEFORE the
+      // rows land (crash in between: no index and no rows — just slower)
+      val sigDest = Ledger.appendDir(spark, clusterSigPath(path))
+      invalidateSigIndex(spark, sigDest)
+      sig.write.mode("append").parquet(sigDest)
+      // the exactly-once marker for the whole advance, on the remap
+      // ledger, last: every replay before it re-derives the same rows
+      Ledger.markApplied(spark, clusterRmpPath(path), batchId)
     } finally sigAll.unpersist(false)
   }
 
@@ -1218,8 +1178,7 @@ object DedupOps {
     // idle cores; on a cluster the two swaps were always independent
     // (per-path locks + leases). The rmp reset below still waits for
     // the asg fold (it reads /rmp).
-    implicit val ec = scala.concurrent.ExecutionContext.global
-    val sigF = scala.concurrent.Future {
+    val sigF = graft.queries.Qf.lane {
       compactSignatureLedger(spark, clusterSigPath(path), targetFiles,
         bandSize = bandSize)
     }
@@ -1235,8 +1194,7 @@ object DedupOps {
     // small jobs + renames) overlaps the signature compaction's tail
     // instead of extending the cycle after it.
     try {
-      LedgerGuard.advanceInPlace(spark, clusterAsgPath(path),
-        "cluster-ledger compaction") { staging =>
+      Ledger.swap(spark, clusterAsgPath(path), "cluster-ledger compaction") { staging =>
         LayoutOps.writeSized(
           readClusterAssignments(spark, path),
           staging, col("node"), targetFiles, 64L * 1000 * 1000,
@@ -1250,8 +1208,7 @@ object DedupOps {
       val fs = new org.apache.hadoop.fs.Path(rmpPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(new org.apache.hadoop.fs.Path(rmpPath)))
-        LedgerGuard.advanceInPlace(spark, rmpPath,
-          "cluster-ledger remap reset") { staging =>
+        Ledger.swap(spark, rmpPath, "cluster-ledger remap reset") { staging =>
           spark.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](), RemapSchema)
             .write.mode("overwrite").parquet(staging)
@@ -1534,28 +1491,16 @@ object DedupOps {
   // sides.
   // ------------------------------------------------------------------
 
-  private val BloomMetaFile = LedgerGuard.SidecarPrefix + "BLOOM_META"
+  private val BloomParams = Ledger.Params(LedgerGuard.SidecarPrefix + "BLOOM_META",
+    "bloom ledger", "a bloom OR-merge is only sound between identically-" +
+      "sized, identically-hashed filters over the same digest", strict = true)
 
-  private def requireBloomMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, digestTag: String, expectedItems: Long, fpp: Double,
-      op: String): Unit =
-    LedgerGuard.readSidecarMetaStr(spark, path, BloomMetaFile) match {
-      case None => throw new IllegalStateException(
-        s"bloom ledger $op at $path: no ${BloomMetaFile} sidecar — cannot " +
-          "verify digest/sizing compatibility (merging differently-sized " +
-          "filters corrupts both); rebuild the ledger (or restore the sidecar)")
-      case Some(kv) =>
-        val want = Seq("digestTag" -> digestTag,
-          "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString)
-        if (want.exists { case (k, v) => kv.get(k) != Some(v) })
-          throw new IllegalArgumentException(
-            s"bloom ledger $op at $path: ledger was created with " +
-              s"${kv.toSeq.sorted.mkString(", ")} but the caller passed " +
-              s"${want.map { case (k, v) => s"$k=$v" }.mkString(", ")} — a " +
-              "bloom OR-merge is only sound between identically-sized, " +
-              "identically-hashed filters over the same digest; pass the " +
-              "creation-time values (or rebuild)")
-    }
+  private val BloomSpec = Ledger.Spec("bloom membership ledger", Nil,
+    Ledger.Merge.Sketch(), layout = Ledger.Layout.OneFile,
+    params = Some(BloomParams))
+
+  private def bloomParams(digestTag: String, expectedItems: Long, fpp: Double) =
+    Seq("digestTag" -> digestTag, "expectedItems" -> expectedItems, "fpp" -> fpp)
 
   private def bloomOf(df: DataFrame, digestCol: Column, expectedItems: Long,
       fpp: Double): org.apache.spark.util.sketch.BloomFilter =
@@ -1570,11 +1515,17 @@ object DedupOps {
 
   /** The at-rest filter, deserialized. */
   def readBloomLedger(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val bytes = LedgerGuard.readLedger(spark, path)
-      .select(col("bloom_bits")).head().getAs[Array[Byte]](0)
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
+      path: String): org.apache.spark.util.sketch.BloomFilter =
+    bloomFrom(Ledger.read(spark, path))
+
+  private def bloomFrom(rows: DataFrame): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+      rows.select(col("bloom_bits")).head().getAs[Array[Byte]](0)))
+
+  private def bloomRows(spark: org.apache.spark.sql.SparkSession,
+      f: org.apache.spark.util.sketch.BloomFilter): DataFrame = {
+    import spark.implicits._
+    Seq(bloomBytes(f)).toDF("bloom_bits")
   }
 
   /** At-rest BLOOM MEMBERSHIP ledger over a 64-bit digest — the
@@ -1599,16 +1550,10 @@ object DedupOps {
     * target, not the first batch.
     */
   def writeBloomLedger(docs: DataFrame, digestCol: Column, digestTag: String,
-      expectedItems: Long, fpp: Double, path: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq(bloomBytes(bloomOf(docs, digestCol, expectedItems, fpp)))
-      .toDF("bloom_bits")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(spark, path, BloomMetaFile,
-      Seq("digestTag" -> digestTag,
-        "expectedItems" -> expectedItems.toString, "fpp" -> fpp.toString))
-  }
+      expectedItems: Long, fpp: Double, path: String): Unit =
+    Ledger.create(docs.sparkSession, path, BloomSpec,
+      bloomRows(docs.sparkSession, bloomOf(docs, digestCol, expectedItems, fpp)),
+      bloomParams(digestTag, expectedItems, fpp))
 
   /** Fold a batch into the at-rest filter IN PLACE (staged swap, lease,
     * manifest mode, exactly-once batchId with the replay fast-path).
@@ -1617,16 +1562,10 @@ object DedupOps {
       expectedItems: Long, fpp: Double, path: String,
       batchId: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    requireBloomMeta(spark, path, digestTag, expectedItems, fpp, "advance")
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    val delta = bloomOf(batch, digestCol, expectedItems, fpp)
-    LedgerGuard.advanceInPlace(spark, path, "bloom membership ledger", batchId) {
-      staging =>
-        val merged = readBloomLedger(spark, path).mergeInPlace(delta)
-        Seq(bloomBytes(merged)).toDF("bloom_bits")
-          .coalesce(1).write.mode("overwrite").parquet(staging)
+    Ledger.advanceWith(spark, path, BloomSpec, batchId,
+      bloomParams(digestTag, expectedItems, fpp))(
+      bloomOf(batch, digestCol, expectedItems, fpp)) { (stored, delta) =>
+      bloomRows(spark, bloomFrom(stored).mergeInPlace(delta))
     }
   }
 
@@ -1648,7 +1587,8 @@ object DedupOps {
       path: String, digestTag: String, expectedItems: Long,
       fpp: Double): DataFrame = {
     val spark = batch.sparkSession
-    requireBloomMeta(spark, path, digestTag, expectedItems, fpp, "probe")
+    BloomParams.check(spark, path, "probe",
+      bloomParams(digestTag, expectedItems, fpp))
     // shared codegen probe kernel (graft.functions.BloomMightContain) —
     // same task-binary distribution the explicit broadcast gave the
     // old UDF form, zero per-row UDF seam
@@ -1658,31 +1598,18 @@ object DedupOps {
         lit(true)).as("might_contain"))
   }
 
-  private val SimHashMetaFile = LedgerGuard.SidecarPrefix + "SIMHASH_META"
+  private val SimHashParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "SIMHASH_META", "simhash ledger",
+    "simhashes under different tokenizations are incomparable")
 
-  private def readSimHashMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] =
-    LedgerGuard.readSidecarMetaStr(spark, path, SimHashMetaFile)
-      .flatMap(_.get("tokenizerId"))
-
-  private def requireSimHashMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, tokenizerId: String, op: String): Unit =
-    readSimHashMeta(spark, path).foreach { t =>
-      if (t != tokenizerId)
-        throw new IllegalArgumentException(
-          s"simhash ledger $op at $path: ledger was created with " +
-            s"tokenizerId=$t but the caller passed tokenizerId=$tokenizerId " +
-            "— simhashes under different tokenizations are incomparable; " +
-            "pass the creation-time tag (or rebuild the ledger)")
-    }
+  private val SimHashSpec = Ledger.Spec("simhash ledger", Nil,
+    Ledger.Merge.UnionDistinct, params = Some(SimHashParams))
 
   /** Create the simhash ledger from the initial corpus — one scan. */
   def writeSimHashLedger(df: DataFrame, idCol: String, textCol: String,
-      path: String, tokenizerId: String = "ws-md5-60"): Unit = {
-    simHash60Df(df, idCol, textCol).write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(df.sparkSession, path, SimHashMetaFile,
-      Seq("tokenizerId" -> tokenizerId))
-  }
+      path: String, tokenizerId: String = "ws-md5-60"): Unit =
+    Ledger.create(df.sparkSession, path, SimHashSpec,
+      simHash60Df(df, idCol, textCol), Seq("tokenizerId" -> tokenizerId))
 
   /** O(batch) append — crash-and-retry replays tolerated (see family
     * note); a pre-sidecar ledger adopts the caller's tag (trusted once).
@@ -1690,19 +1617,9 @@ object DedupOps {
     */
   def appendToSimHashLedger(batch: DataFrame, idCol: String, textCol: String,
       path: String, tokenizerId: String = "ws-md5-60",
-      batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    // drift guard first (see appendToSignatureLedger)
-    requireSimHashMeta(spark, path, tokenizerId, "append")
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    simHash60Df(batch, idCol, textCol)
-      .write.mode("append").parquet(LedgerGuard.appendPath(spark, path))
-    if (readSimHashMeta(spark, path).isEmpty)
-      LedgerGuard.writeSidecarMetaStr(spark, path, SimHashMetaFile,
-        Seq("tokenizerId" -> tokenizerId))
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.append(batch.sparkSession, path, SimHashSpec, batchId,
+      Seq("tokenizerId" -> tokenizerId))(simHash60Df(batch, idCol, textCol))
 
   /** Near-dup pairs of a NEW batch against the at-rest corpus
     * signatures: the batch simhashes per-row (one batch scan), the
@@ -1714,13 +1631,9 @@ object DedupOps {
       textCol: String, path: String, maxHamming: Int = 6,
       tokenizerId: String = "ws-md5-60"): DataFrame = {
     val spark = newDocs.sparkSession
-    if (readSimHashMeta(spark, path).isEmpty)
-      throw new IllegalStateException(
-        s"simhash-ledger probe at $path: no ${SimHashMetaFile} sidecar — " +
-          "cannot verify the ledger's tokenizer; rebuild the ledger (or " +
-          "restore the sidecar)")
-    requireSimHashMeta(spark, path, tokenizerId, "probe")
-    val led = LedgerGuard.readLedger(spark, path)
+    SimHashParams.check(spark, path, "probe", Seq("tokenizerId" -> tokenizerId),
+      mustExist = true)
+    val led = Ledger.read(spark, path)
       .select(col(idCol), col("simhash")).dropDuplicates() // replayed appends
     hammingJoin(
       simHash60Df(newDocs, idCol, textCol)
@@ -1739,13 +1652,9 @@ object DedupOps {
     */
   def removeFromSimHashLedger(ids: DataFrame, idCol: String, path: String,
       batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(ids.sparkSession, path, "simhash-ledger removal",
-      batchId) { staging =>
-      val gone = ids.select(col(idCol).as("__gone")).distinct()
-      LedgerGuard.readLedger(ids.sparkSession, path)
-        .join(broadcast(gone), col(idCol) === col("__gone"), "left_anti")
-        .write.parquet(staging)
-    }
+    Ledger.remove(ids.sparkSession, path,
+      SimHashSpec.copy(retract = Ledger.Retract.AntiJoin(idCol)), batchId)(
+      ids.select(col(idCol)))
 
   /** Compact the simhash ledger IN PLACE: collapse replayed duplicate
     * rows, rewrite accreted per-batch small files id-sorted for stats
@@ -1754,12 +1663,7 @@ object DedupOps {
   def compactSimHashLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "simhash-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path).dropDuplicates()
-      LayoutOps.writeSized(led, staging, col(led.columns.head),
-        targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path, SimHashSpec, targetFiles, maxRecordsPerFile)
 
   def simHash16Df(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val aggs = (0 until 16).map(j =>
@@ -2052,14 +1956,16 @@ object DedupOps {
     * two generations can never diverge.
     */
   private def ledgerRows(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame =
-    df.select(rowFingerprint(keyCols.map(col)).as("digest"), col(idCol).as("admitted_id"))
-      .groupBy(col("digest"))
-      .agg(min(col("admitted_id")).as("admitted_id"))
+    Ledger.fold(DigestSpec, df.select(rowFingerprint(keyCols.map(col)).as("digest"),
+      col(idCol).as("admitted_id")))
+
+  private val DigestSpec = Ledger.Spec("digest ledger", Seq("digest"),
+    Ledger.Merge.MinLabel("admitted_id"), Ledger.Retract.AntiJoin("digest"))
 
   /** Create/overwrite the ledger from an initial corpus. */
   def writeLedger(df: DataFrame, idCol: String, keyCols: Seq[String],
       path: String): Unit =
-    ledgerRows(df, idCol, keyCols).write.mode("overwrite").parquet(path)
+    Ledger.create(df.sparkSession, path, DigestSpec, ledgerRows(df, idCol, keyCols))
 
   /** The rows of `df` that survive BOTH dedup regimes: never admitted to
     * the ledger at `path` (anti-join on digest), and first (lowest id)
@@ -2069,7 +1975,7 @@ object DedupOps {
       path: String): DataFrame = {
     // binds through the staging fallback; the bind-vs-action caveat is
     // documented once on LedgerGuard.readLedger
-    val ledger = LedgerGuard.readLedger(df.sparkSession, path)
+    val ledger = Ledger.read(df.sparkSession, path)
       .select(col("digest").as("__digest"))
     val withD = df.withColumn("__digest", rowFingerprint(keyCols.map(col)))
     val fresh = withD.join(ledger, Seq("__digest"), "left_anti")
@@ -2087,8 +1993,8 @@ object DedupOps {
     */
   def appendToLedger(df: DataFrame, idCol: String, keyCols: Seq[String],
       path: String): Unit =
-    ledgerRows(df, idCol, keyCols).write.mode("append")
-      .parquet(LedgerGuard.appendPath(df.sparkSession, path))
+    Ledger.append(df.sparkSession, path, DigestSpec, None)(
+      ledgerRows(df, idCol, keyCols))
 
   /** Right-to-be-forgotten for the digest ledger: forget the CONTENT of
     * the given rows — their digests leave the ledger inside one staged
@@ -2112,13 +2018,8 @@ object DedupOps {
     */
   def removeFromLedger(df: DataFrame, keyCols: Seq[String], path: String,
       batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(df.sparkSession, path, "ledger removal",
-      batchId) { staging =>
-      val gone = df.select(rowFingerprint(keyCols.map(col)).as("__gone")).distinct()
-      LedgerGuard.readLedger(df.sparkSession, path)
-        .join(broadcast(gone), col("digest") === col("__gone"), "left_anti")
-        .write.parquet(staging)
-    }
+    Ledger.remove(df.sparkSession, path, DigestSpec, batchId)(
+      df.select(rowFingerprint(keyCols.map(col))))
 
   /** The same purge for the SIGNATURE ledger (d48), by document id: the
     * ids' signature rows leave the ledger, so later probes stop pairing
@@ -2127,13 +2028,9 @@ object DedupOps {
     */
   def removeFromSignatureLedger(ids: DataFrame, idCol: String, path: String,
       batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(ids.sparkSession, path, "signature-ledger removal",
-      batchId) { staging =>
-      val gone = ids.select(col(idCol).as("__gone")).distinct()
-      LedgerGuard.readLedger(ids.sparkSession, path)
-        .join(broadcast(gone), col(idCol) === col("__gone"), "left_anti")
-        .write.parquet(staging)
-    }
+    Ledger.remove(ids.sparkSession, path,
+      SigSpec.copy(retract = Ledger.Retract.AntiJoin(idCol)), batchId)(
+      ids.select(col(idCol)))
 
   /** Compact an append-only ledger IN PLACE: collapse any duplicate
     * digests that accumulated across appends (keeping the lowest
@@ -2156,17 +2053,7 @@ object DedupOps {
     */
   def compactLedger(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 16, maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "ledger compaction") { staging =>
-      // readLedger binds the current generation (manifest mode) or the
-      // healed target (plain mode) — advanceInPlace runs this only
-      // after the self-heal, under the lock and lease
-      val compacted = LedgerGuard.readLedger(spark, path)
-        .groupBy(col("digest"))
-        .agg(min(col("admitted_id")).as("admitted_id"))
-      LayoutOps.writeSized(compacted, staging, col("digest"),
-        targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path, DigestSpec, targetFiles, maxRecordsPerFile)
 
   /** Snapshot diff between two corpus generations by content digest:
     * one row per id present in either side, labeled
@@ -2330,29 +2217,11 @@ object DedupOps {
     * same own-parameters treatment as the signature ledger's
     * (numHashes, shingleSize).
     */
-  private val SpanMetaFile = LedgerGuard.SidecarPrefix + "SPAN_META"
+  private val SpanParams = Ledger.Params(LedgerGuard.SidecarPrefix + "SPAN_META",
+    "span-hash ledger", "window hashes of different widths are incomparable")
 
-  private def writeSpanMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, k: Int): Unit =
-    LedgerGuard.writeSidecarMeta(spark, path, SpanMetaFile, Seq("k" -> k.toLong))
-
-  private def readSpanMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Int] =
-    LedgerGuard.readSidecarMeta(spark, path, SpanMetaFile)
-      .flatMap(_.get("k")).map(_.toInt)
-
-  private def requireSpanMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, k: Int, op: String): Int =
-    readSpanMeta(spark, path) match {
-      case Some(kk) if kk != k =>
-        throw new IllegalArgumentException(
-          s"span-hash ledger $op at $path: ledger was created with k=$kk " +
-            s"but the caller passed k=$k — window hashes of different " +
-            "widths are incomparable; pass the creation-time width " +
-            "(or rebuild the ledger)")
-      case Some(kk) => kk
-      case None => k // pre-sidecar ledger: trust the caller once
-    }
+  private val SpanSpec = Ledger.Spec("span-hash ledger", Seq("h"),
+    Ledger.Merge.UnionDistinct, params = Some(SpanParams))
 
   /** Create/overwrite the span-hash ledger: the distinct window hashes
     * of an initial corpus.
@@ -2360,9 +2229,8 @@ object DedupOps {
   def writeSpanHashLedger(df: DataFrame, idCol: String, textCol: String,
       k: Int, path: String): Unit = {
     require(k >= 1, "window width must be >= 1")
-    windowGrams(df, idCol, textCol, k).select(col("h")).distinct()
-      .write.mode("overwrite").parquet(path)
-    writeSpanMeta(df.sparkSession, path, k)
+    Ledger.create(df.sparkSession, path, SpanSpec,
+      windowGrams(df, idCol, textCol, k).select(col("h")).distinct(), Seq("k" -> k))
   }
 
   /** Admit a batch's window hashes (append-only; duplicates across
@@ -2371,18 +2239,9 @@ object DedupOps {
     * corpus kept.
     */
   def appendToSpanHashLedger(batch: DataFrame, idCol: String, textCol: String,
-      k: Int, path: String, batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    // drift guard first (see appendToSignatureLedger)
-    requireSpanMeta(spark, path, k, "append")
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    windowGrams(batch, idCol, textCol, k).select(col("h")).distinct()
-      .write.mode("append").parquet(LedgerGuard.appendPath(spark, path))
-    if (readSpanMeta(spark, path).isEmpty)
-      writeSpanMeta(spark, path, k)
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
-  }
+      k: Int, path: String, batchId: Option[String] = None): Unit =
+    Ledger.append(batch.sparkSession, path, SpanSpec, batchId, Seq("k" -> k))(
+      windowGrams(batch, idCol, textCol, k).select(col("h")).distinct())
 
   /** Scrub a new batch against the corpus-so-far: every window whose
     * hash is in the ledger is cut (the corpus already holds its
@@ -2395,9 +2254,7 @@ object DedupOps {
   def scrubAgainstSpanLedger(df: DataFrame, idCol: String, textCol: String,
       path: String, minOccurrences: Int = 2): DataFrame = {
     val spark = df.sparkSession
-    val k = readSpanMeta(spark, path).getOrElse(throw new IllegalStateException(
-      s"span-hash ledger at $path has no $SpanMetaFile sidecar — cannot " +
-        "determine the window width it was built with"))
+    val k = SpanParams.need(spark, path, "probe", "k").toInt
     val id = col(idCol)
     // the batch's gram frame feeds THREE branches of the one scrub plan
     // (ledger semi-join, fresh anti-join into the stats aggregate, fresh
@@ -2408,7 +2265,7 @@ object DedupOps {
     // outlive this call; an early eviction merely recomputes from text).
     val grams = windowGrams(df, idCol, textCol, k).persist()
     swapScrubGramCache(grams)
-    val led = LedgerGuard.readLedger(spark, path).select(col("h"))
+    val led = Ledger.read(spark, path).select(col("h"))
     val inLed = grams.join(led, Seq("h"), "left_semi").select(id, col("pos"))
     val fresh = grams.join(led, Seq("h"), "left_anti")
     val stats = fresh.groupBy(col("h")).agg(
@@ -2445,9 +2302,5 @@ object DedupOps {
   def compactSpanHashLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "span-hash-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path).distinct()
-      LayoutOps.writeSized(led, staging, col("h"), targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path, SpanSpec, targetFiles, maxRecordsPerFile)
 }

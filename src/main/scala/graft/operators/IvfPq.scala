@@ -134,26 +134,26 @@ object IvfPq {
       path: String, batchId: Option[String] = None,
       preloadedModel: Option[Model] = None): Unit = {
     val spark = newRows.sparkSession
-    // exactly-once fast-path (the LSH index's appendToBucketedIndex
-    // regime): a marked replayed delivery appends nothing — without a
-    // marker a crash-retried append stores every batch row twice and
-    // the probe's top-k heap (which does not dedup ids) surfaces the
-    // duplicate at two ranks until compaction. Marker lands AFTER the
-    // append, so a crash in between degrades to the old
-    // replay-tolerated-at-compaction state, never a lying marker.
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, s"$path/codes") == batchId) return
-    // an ingest loop that just built (or already probed) the index can
-    // hand the model over — loadModel round-trips bit-exactly, so the
-    // encode is identical either way; skipping it saves one model
-    // read + collect per appended batch
-    val model = preloadedModel.getOrElse(loadModel(spark, path))
-    codeTable(newRows, cId, cVec, model)
-      .repartition(col("__cluster")) // one file per touched cell per batch
-      .write.mode("append").partitionBy("__cluster").parquet(s"$path/codes")
-    batchId.foreach(id =>
-      LedgerGuard.recordBatchApplied(spark, s"$path/codes", id))
+    // exactly-once (the Ledger rule): a marked replayed delivery appends
+    // nothing — without a marker a crash-retried append stores every
+    // batch row twice and the probe's top-k heap (which does not dedup
+    // ids) surfaces the duplicate at two ranks until compaction.
+    Ledger.append(spark, s"$path/codes", CodesSpec, batchId)({
+      // an ingest loop that just built (or already probed) the index can
+      // hand the model over — loadModel round-trips bit-exactly, so the
+      // encode is identical either way; skipping it saves one model
+      // read + collect per appended batch
+      val model = preloadedModel.getOrElse(loadModel(spark, path))
+      codeTable(newRows, cId, cVec, model)
+        .repartition(col("__cluster")) // one file per touched cell per batch
+    })
   }
+
+  /** The codes table as a ledger family: cell-partitioned, append-only,
+    * replayed rows collapsing at compaction.
+    */
+  private val CodesSpec = Ledger.Spec("IVFPQ index", Nil,
+    Ledger.Merge.UnionDistinct, layout = Ledger.Layout.Partitioned("__cluster"))
 
   /** Reserved tombstone partition for [[deleteFromIndex]]. */
   private val TombstoneCell = -1
@@ -238,13 +238,13 @@ object IvfPq {
     * cell's accreted per-batch small files into one sized file —
     * [[SimilarityOps.compactBucketedIndex]]'s contract for this layout,
     * under the same staged-swap/lease/manifest discipline
-    * ([[LedgerGuard.advanceInPlace]] over the codes directory; the
+    * ([[Ledger.compactWith]] over the codes directory; the
     * model table is immutable and stays in place).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       maxRecordsPerFile: Long = 8L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, s"$path/codes", "IVFPQ index compaction") { staging =>
-      val led = readCodes(spark, path).dropDuplicates()
+    Ledger.compactWith(spark, s"$path/codes", CodesSpec) { staging =>
+      val led = Ledger.fold(CodesSpec, readCodes(spark, path))
       val tombs = led.filter(col("__cluster") === TombstoneCell)
         .select(col("neighbor_id").as("__del")).distinct()
       val kept = led.filter(col("__cluster") =!= TombstoneCell)

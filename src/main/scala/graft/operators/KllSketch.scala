@@ -195,42 +195,24 @@ object KllSketch {
   // comparable and must not silently merge.
   // ------------------------------------------------------------------
 
-  private val MetaFile = LedgerGuard.SidecarPrefix + "KLL_META"
+  // creation ALWAYS writes the sidecar (no pre-sidecar legacy for this
+  // family), so an existing ledger without one is damaged state — and
+  // merging at a guessed k would DECODE the stored rows as k'-sketches
+  // and silently corrupt every later quantile, then stamp the wrong k
+  // permanently: strict, every step fails loudly
+  private val KllParams = Ledger.Params(LedgerGuard.SidecarPrefix + "KLL_META",
+    "KLL ledger", "sketches with different parameters are incomparable",
+    strict = true)
+
+  private val KllSpec = Ledger.Spec("KLL sketch ledger", Seq("key"),
+    Ledger.Merge.Sketch(), layout = Ledger.Layout.OneFile,
+    params = Some(KllParams))
 
   /** Hard bound on per-key driver folds — batch side AND stored side. */
   private val MaxKeys = 4096
 
-  private def writeMeta(spark: SparkSession, path: String, k: Int,
-      keyCol: String, valueCol: String): Unit =
-    LedgerGuard.writeSidecarMetaStr(spark, path, MetaFile,
-      Seq("k" -> k.toString, "keyCol" -> keyCol, "valueCol" -> valueCol))
-
-  private def requireMeta(spark: SparkSession, path: String, k: Int,
-      keyCol: String, valueCol: String, op: String): Unit =
-    LedgerGuard.readSidecarMetaStr(spark, path, MetaFile) match {
-      case Some(kv) =>
-        val (sk, skk, skv) = (kv.getOrElse("k", "?"), kv.getOrElse("keyCol", "?"),
-          kv.getOrElse("valueCol", "?"))
-        if (sk != k.toString || skk != keyCol || skv != valueCol)
-          throw new IllegalArgumentException(
-            s"KLL ledger $op at $path: ledger was created with k=$sk, " +
-              s"keyCol=$skk, valueCol=$skv but the caller passed k=$k, " +
-              s"keyCol=$keyCol, valueCol=$valueCol — sketches with " +
-              "different parameters are incomparable; pass the " +
-              "creation-time values (or rebuild the ledger)")
-      case None =>
-        // creation ALWAYS writes the sidecar (no pre-sidecar legacy for
-        // this family), so an existing ledger without one is damaged
-        // state — and merging at a guessed k would DECODE the stored
-        // rows as k'-sketches and silently corrupt every later
-        // quantile, then stamp the wrong k permanently. Fail loudly
-        // like compaction/probe do.
-        throw new IllegalStateException(
-          s"KLL ledger $op at $path: no ${MetaFile} sidecar — cannot " +
-            "verify (k, keyCol, valueCol), and a k-mismatched decode " +
-            "silently corrupts the sketches; rebuild the ledger (or " +
-            "restore the sidecar)")
-    }
+  private def kllParams(k: Int, keyCol: String, valueCol: String) =
+    Seq("k" -> k, "keyCol" -> keyCol, "valueCol" -> valueCol)
 
   /** Per-key sketches of a double measure, built distributed: one
     * sketch per (partition, key) at the executors (each O(k·log)
@@ -345,11 +327,11 @@ object KllSketch {
     * caller reads ahead of its staged swap). The ledger itself is
     * left untouched.
     */
-  private def guardedLedgerRows(spark: SparkSession, path: String,
+  private def guardedLedgerRows(stored: DataFrame, path: String,
       what: String, k: Int): Array[org.apache.spark.sql.Row] = {
     val rowCap = math.min(MaxKeys.toLong * (12L * k + 4L),
       Int.MaxValue.toLong - 1L).toInt
-    val rows = LedgerGuard.readLedger(spark, path).limit(rowCap + 1).collect()
+    val rows = stored.limit(rowCap + 1).collect()
     def oversized(kind: String) = new IllegalArgumentException(
       s"KLL sketch ledger $what at $path: more than $kind " +
         "in the stored ledger — per-key sketches fold on the driver and the " +
@@ -381,13 +363,10 @@ object KllSketch {
 
   /** Create/overwrite the KLL ledger from an initial corpus. */
   def writeKllLedger(df: DataFrame, keyCol: String, valueCol: String,
-      k: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    toRows(spark, sketchPerKey(df, keyCol, valueCol, k))
-      .coalesce(1) // model-sized: one file, not one per shuffle partition
-      .write.mode("overwrite").parquet(path)
-    writeMeta(spark, path, k, keyCol, valueCol)
-  }
+      k: Int, path: String): Unit =
+    Ledger.create(df.sparkSession, path, KllSpec,
+      toRows(df.sparkSession, sketchPerKey(df, keyCol, valueCol, k)),
+      kllParams(k, keyCol, valueCol))
 
   /** Fold a batch into the at-rest ledger IN PLACE — staged swap,
     * lease, manifest mode, exactly-once `batchId`: the
@@ -398,27 +377,15 @@ object KllSketch {
   def advanceKllLedger(batch: DataFrame, keyCol: String, valueCol: String,
       k: Int, path: String, batchId: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    requireMeta(spark, path, k, keyCol, valueCol, "advance")
-    // replay fast-path (the DedupOps pattern): a re-delivered batchId is
-    // a no-op, so skip the batch sketch job + driver fold entirely —
-    // advanceInPlace would refuse it anyway, but only AFTER the compute
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    val delta = sketchPerKey(batch, keyCol, valueCol, k)
-    LedgerGuard.advanceInPlace(spark, path, "KLL sketch ledger", batchId) { staging =>
-      // read INSIDE the swap so a concurrent advance's rows are not lost
-      val stored =
-        fromRows(guardedLedgerRows(spark, path, "advance", k), k)
-      val merged = (stored.keySet ++ delta.keySet).iterator.map { key =>
-        key -> stored.getOrElse(key, KllSketch.empty(k))
-          .merge(delta.getOrElse(key, KllSketch.empty(k)))
-      }.toMap
-      // overwrite: a crash that left a stale .staging dir must not
-      // wedge every later advance (the advanceStatsLedger pattern)
-      toRows(spark, merged).coalesce(1).write.mode("overwrite").parquet(staging)
+    Ledger.advanceWith(spark, path, KllSpec, batchId,
+      kllParams(k, keyCol, valueCol))(sketchPerKey(batch, keyCol, valueCol, k)) {
+      (stored, delta) =>
+        val st = fromRows(guardedLedgerRows(stored, path, "advance", k), k)
+        toRows(spark, (st.keySet ++ delta.keySet).iterator.map { key =>
+          key -> st.getOrElse(key, KllSketch.empty(k))
+            .merge(delta.getOrElse(key, KllSketch.empty(k)))
+        }.toMap)
     }
-    // no adopt-on-missing backfill here: requireMeta above already
-    // failed loudly if the sidecar was absent (see its rationale)
   }
 
   /** Compact the ledger: collapse replayed duplicate row accretion by
@@ -427,16 +394,14 @@ object KllSketch {
     * swap discipline; a no-op on a clean ledger.
     */
   def compactKllLedger(spark: SparkSession, path: String): Unit = {
-    val k = LedgerGuard.readSidecarMetaStr(spark, path, MetaFile)
-      .flatMap(_.get("k")).map(_.toInt).getOrElse(throw new IllegalStateException(
-        s"KLL ledger compaction at $path: no ${MetaFile} sidecar"))
-    LedgerGuard.advanceInPlace(spark, path, "KLL-ledger compaction") { staging =>
+    val k = KllParams.need(spark, path, "compaction", "k").toInt
+    Ledger.compactWith(spark, path, KllSpec) { staging =>
       // duplicate (key, level, idx) rows come only from replayed
       // appends, so they are bit-identical — first-wins on the driver
       // matches what dropDuplicates kept, without its shuffle job
       val seen = scala.collection.mutable.LinkedHashMap
         .empty[(String, Int, Int), org.apache.spark.sql.Row]
-      guardedLedgerRows(spark, path, "compaction", k).foreach { r =>
+      guardedLedgerRows(Ledger.read(spark, path), path, "compaction", k).foreach { r =>
         seen.getOrElseUpdate((r.getString(0), r.getInt(1), r.getInt(2)), r)
       }
       toRows(spark, fromRows(seen.valuesIterator.toArray, k)).coalesce(1)
@@ -454,11 +419,9 @@ object KllSketch {
     require(probs.nonEmpty && probs.forall(p => p > 0.0 && p <= 1.0),
       "probs must be in (0, 1]")
     import spark.implicits._
-    val k = LedgerGuard.readSidecarMetaStr(spark, path, MetaFile)
-      .flatMap(_.get("k")).map(_.toInt).getOrElse(throw new IllegalStateException(
-        s"KLL ledger probe at $path: no ${MetaFile} sidecar — not a KLL ledger"))
+    val k = KllParams.need(spark, path, "probe", "k").toInt
     val sketches =
-      fromRows(guardedLedgerRows(spark, path, "probe", k), k)
+      fromRows(guardedLedgerRows(Ledger.read(spark, path), path, "probe", k), k)
     sketches.toSeq.sortBy(_._1).flatMap { case (key, s) =>
       probs.zip(s.quantiles(probs)).map { case (p, est) => (key, p, est, s.n) }
     }.toDF("key", "prob", "est", "n")

@@ -236,17 +236,29 @@ object LedgerGuard {
                   spark.sparkContext.hadoopConfiguration)
             }
         } catch { case _: java.io.IOException => () } // carry is best-effort
+        stepFailpoint("staged")
         fs.delete(retired, true)
         if (!fs.rename(target, retired))
           throw new java.io.IOException(s"$what swap: cannot retire $target")
+        stepFailpoint("retired")
         if (!fs.rename(staging, target)) {
           fs.rename(retired, target) // roll back so the ledger is never absent
           throw new java.io.IOException(s"$what swap: cannot promote $staging")
         }
+        stepFailpoint("promoted")
         fs.delete(retired, true)
       }
     }
   }
+
+  /** Test-only crash injection, called with the name of each commit step
+    * a ledger write has just completed — a swap's "staged", "retired",
+    * "promoted" (plain mode) or "staged", "committed" (manifest mode),
+    * and an append's "appended" ([[Ledger.append]]) — so a spec can crash
+    * a lifecycle step between any two of them and prove the retry heals.
+    * Production value is a no-op.
+    */
+  private[graft] var stepFailpoint: String => Unit = _ => ()
 
   /** Last-applied batch id, stored INSIDE the generation directory: the
     * `_` prefix hides it from parquet readers, and living inside the
@@ -265,20 +277,11 @@ object LedgerGuard {
   /** Write a `key=value` metadata sidecar into the generation an
     * APPENDER would target (current gen in manifest mode, the path in
     * plain mode) — the shared mechanism behind every self-describing
-    * at-rest store: the parameters data was built with must live WITH
-    * that data, because a caller-side default can drift while the
-    * files cannot.
+    * at-rest store ([[Ledger.Params]]): the parameters data was built
+    * with must live WITH that data, because a caller-side default can
+    * drift while the files cannot. Values must be newline-free.
     */
   private[graft] def writeSidecarMeta(spark: SparkSession, path: String,
-      file: String, kv: Seq[(String, Long)]): Unit =
-    writeSidecarMetaStr(spark, path, file, kv.map { case (k, v) => k -> v.toString })
-
-  /** String-valued variant of [[writeSidecarMeta]] — same `k=v` line
-    * format; numeric and string keys coexist in one file (the numeric
-    * reader skips lines it can't parse, the string reader returns
-    * everything). Values must be newline-free.
-    */
-  private[graft] def writeSidecarMetaStr(spark: SparkSession, path: String,
       file: String, kv: Seq[(String, String)]): Unit = {
     require(kv.forall { case (k, v) => !k.contains('\n') && !v.contains('\n') },
       "sidecar keys/values must be newline-free")
@@ -290,34 +293,11 @@ object LedgerGuard {
   }
 
   /** The metadata sidecar of the generation a READER would bind
-    * (manifest pointer or staging fallback included); None when the
-    * store predates the sidecar or the file is unreadable.
+    * (manifest pointer or staging fallback included), every `k=v` line
+    * verbatim (values trimmed); None when the store predates the
+    * sidecar or the file is unreadable.
     */
   private[graft] def readSidecarMeta(spark: SparkSession, path: String,
-      file: String): Option[Map[String, Long]] = {
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val gen = readablePath(fs, target)
-      val in = fs.open(new Path(gen, file))
-      val text = try new String(in.readNBytes(4096), "UTF-8") finally in.close()
-      Some(text.linesIterator.flatMap { l =>
-        l.split("=", 2) match {
-          // skip (don't fail on) non-numeric values: a sidecar may mix
-          // numeric parameters with string ones (e.g. an id-column
-          // name); returning None here would silently disable the
-          // fail-loudly parameter gates that read this file
-          case Array(k, v) => scala.util.Try(v.trim.toLong).toOption.map(k -> _)
-          case _ => None
-        }
-      }.toMap)
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** String-valued variant of [[readSidecarMeta]]: every `k=v` line
-    * verbatim (values trimmed), numeric or not.
-    */
-  private[graft] def readSidecarMetaStr(spark: SparkSession, path: String,
       file: String): Option[Map[String, String]] = {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -539,7 +519,9 @@ object LedgerGuard {
                 spark.sparkContext.hadoopConfiguration)
           }
       } catch { case _: java.io.IOException => () }
+      stepFailpoint("staged")
       replaceManifest(fs, target, Manifest(name, m.seq + 1))
+      stepFailpoint("committed")
       // keep-2 retention: everything except the new and the outgoing
       // generation goes — older generations in-flight readers may lag
       // on, and orphans of crashed attempts alike

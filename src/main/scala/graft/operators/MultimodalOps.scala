@@ -831,44 +831,30 @@ object MultimodalOps {
   // be silent.
   // ------------------------------------------------------------------
 
-  private val AudioFpMetaFile = LedgerGuard.SidecarPrefix + "AUDIOFP_META"
   private def fpGeometry: String = s"sbe:$FpBands:$FpLoHz:$FpHiHz:$FpFrame"
 
-  private def requireAudioFpMeta(spark: SparkSession, path: String,
-      op: String, mustExist: Boolean, idCol: Option[String] = None): Unit =
-    LedgerGuard.readSidecarMetaStr(spark, path, AudioFpMetaFile) match {
-      case Some(kv) =>
-        kv.get("geometry").filter(_ != fpGeometry).foreach { g =>
-          throw new IllegalArgumentException(
-            s"audio-fp ledger $op at $path: ledger was created with " +
-              s"geometry=$g but this build fingerprints with $fpGeometry — " +
-              "fingerprints under different band layouts are incomparable; " +
-              "rebuild the ledger")
-        }
-        // an id-column drift would anti-join/probe on the wrong column —
-        // loud, never a silent no-op (the compactBucketedIndex lesson)
-        for (want <- idCol; have <- kv.get("idCol") if have != want)
-          throw new IllegalArgumentException(
-            s"audio-fp ledger $op at $path: ledger stores ids in column " +
-              s"'$have' but the caller passed '$want'")
-      case None if mustExist =>
-        throw new IllegalStateException(
-          s"audio-fp ledger $op at $path: no $AudioFpMetaFile sidecar — " +
-            "cannot verify the ledger's fingerprint geometry; rebuild the " +
-            "ledger (or restore the sidecar)")
-      case None => ()
-    }
+  // the id column rides the drift guard too: an id-column drift would
+  // anti-join/probe on the wrong column — loud, never a silent no-op
+  // (the compactBucketedIndex lesson)
+  private val AudioFpParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "AUDIOFP_META", "audio-fp ledger",
+    "fingerprints under different band layouts (or keyed by a different " +
+      "id column) are incomparable")
+
+  private val AudioFpSpec = Ledger.Spec("audio-fp ledger", Nil,
+    Ledger.Merge.UnionDistinct, params = Some(AudioFpParams))
+
+  private def audioFpParams(idCol: String) =
+    Seq("geometry" -> fpGeometry, "idCol" -> idCol)
 
   /** Create the audio-fingerprint ledger from the initial corpus — one
     * payload scan, fingerprints computed at the partition seam.
     */
   def writeAudioFpLedger(df: DataFrame, idCol: String, binCol: String,
-      path: String): Unit = {
-    audioFingerprintPartitioned(df.select(col(idCol), col(binCol)), binCol)
-      .write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(df.sparkSession, path, AudioFpMetaFile,
-      Seq("geometry" -> fpGeometry, "idCol" -> idCol))
-  }
+      path: String): Unit =
+    Ledger.create(df.sparkSession, path, AudioFpSpec,
+      audioFingerprintPartitioned(df.select(col(idCol), col(binCol)), binCol),
+      audioFpParams(idCol))
 
   /** O(batch) append — crash-and-retry replays tolerated (probes dedup
     * the stored rows; compaction removes duplicates at rest). Optional
@@ -877,15 +863,10 @@ object MultimodalOps {
     * duplicate append outright; see [[appendToFrameLedger]].
     */
   def appendToAudioFpLedger(batch: DataFrame, idCol: String, binCol: String,
-      path: String, batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    requireAudioFpMeta(spark, path, "append", mustExist = false, Some(idCol)) // drift guard first
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    audioFingerprintPartitioned(batch.select(col(idCol), col(binCol)), binCol)
-      .write.mode("append").parquet(LedgerGuard.appendPath(spark, path))
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
-  }
+      path: String, batchId: Option[String] = None): Unit =
+    Ledger.append(batch.sparkSession, path, AudioFpSpec, batchId,
+      audioFpParams(idCol))(
+      audioFingerprintPartitioned(batch.select(col(idCol), col(binCol)), binCol))
 
   /** Near-dup pairs of a NEW audio batch against the at-rest corpus
     * fingerprints — batch payloads fingerprint per-row (one batch
@@ -896,8 +877,9 @@ object MultimodalOps {
   def audioNearDupAgainstLedger(newAudio: DataFrame, idCol: String,
       binCol: String, path: String, maxHamming: Int = 2): DataFrame = {
     val spark = newAudio.sparkSession
-    requireAudioFpMeta(spark, path, "probe", mustExist = true, Some(idCol))
-    val led = LedgerGuard.readLedger(spark, path)
+    AudioFpParams.check(spark, path, "probe", audioFpParams(idCol),
+      mustExist = true)
+    val led = Ledger.read(spark, path)
       .select(col(idCol), col("afp")).dropDuplicates() // replayed appends
     DedupOps.hammingJoin(
       audioFingerprintPartitioned(newAudio.select(col(idCol), col(binCol)), binCol)
@@ -913,24 +895,18 @@ object MultimodalOps {
     * lease, manifest mode, exactly-once `batchId`.
     */
   def removeFromAudioFpLedger(ids: DataFrame, idCol: String, path: String,
-      batchId: Option[String] = None): Unit = {
-    requireAudioFpMeta(ids.sparkSession, path, "forget", mustExist = false,
-      Some(idCol))
-    LedgerGuard.advanceInPlace(ids.sparkSession, path, "audio-fp ledger removal",
-      batchId) { staging =>
-      val gone = ids.select(col(idCol).as("__gone")).distinct()
-      LedgerGuard.readLedger(ids.sparkSession, path)
-        .join(broadcast(gone), col(idCol) === col("__gone"), "left_anti")
-        .write.parquet(staging)
-    }
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.remove(ids.sparkSession, path,
+      AudioFpSpec.copy(retract = Ledger.Retract.AntiJoin(idCol)), batchId,
+      audioFpParams(idCol))(ids.select(col(idCol)))
 
-  /** Compact IN PLACE — [[DedupOps.compactSignatureLedger]]'s generic
-    * contract (it sorts by the first at-rest column = the id).
+  /** Compact IN PLACE — the append-only families' generic contract:
+    * replayed rows collapse, sized files sort by the first at-rest
+    * column (the id).
     */
   def compactAudioFpLedger(spark: SparkSession, path: String,
       targetFiles: Int = 16): Unit =
-    DedupOps.compactSignatureLedger(spark, path, targetFiles)
+    Ledger.compact(spark, path, AudioFpSpec, targetFiles)
 
   val VideoMetaType: StructType = StructType(Seq(
     StructField("duration_ms", LongType, nullable = false),
@@ -1320,30 +1296,15 @@ object MultimodalOps {
   // framing are incomparable, and the recall loss would be silent.
   // ------------------------------------------------------------------
 
-  private val FrameMetaFile = LedgerGuard.SidecarPrefix + "FRAME_META"
+  private val FrameParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "FRAME_META", "frame ledger",
+    "mixed framing silently degrades dedup recall")
 
-  private def writeFrameMeta(spark: SparkSession, path: String,
-      frameBytes: Int, everyK: Int): Unit =
-    LedgerGuard.writeSidecarMeta(spark, path, FrameMetaFile,
-      Seq("frameBytes" -> frameBytes.toLong, "everyK" -> everyK.toLong))
+  private val FrameSpec = Ledger.Spec("frame ledger", Nil,
+    Ledger.Merge.UnionDistinct, params = Some(FrameParams))
 
-  private def readFrameMeta(spark: SparkSession, path: String): Option[(Int, Int)] =
-    LedgerGuard.readSidecarMeta(spark, path, FrameMetaFile).flatMap { kv =>
-      for (fb <- kv.get("frameBytes"); ek <- kv.get("everyK"))
-        yield (fb.toInt, ek.toInt)
-    }
-
-  private def requireFrameMeta(spark: SparkSession, path: String,
-      frameBytes: Int, everyK: Int, op: String): Unit =
-    readFrameMeta(spark, path).foreach { case (fb, ek) =>
-      if (fb != frameBytes || ek != everyK)
-        throw new IllegalArgumentException(
-          s"frame ledger $op at $path: ledger was created with " +
-            s"frameBytes=$fb, everyK=$ek but the caller passed " +
-            s"frameBytes=$frameBytes, everyK=$everyK — mixed framing " +
-            "silently degrades dedup recall; pass the creation-time " +
-            "values (or rebuild the ledger)")
-    }
+  private def frameParams(frameBytes: Int, everyK: Int) =
+    Seq("frameBytes" -> frameBytes, "everyK" -> everyK)
 
   private def frameLedgerRows(df: DataFrame, idCol: String, binCol: String,
       frameBytes: Int, everyK: Int): DataFrame =
@@ -1354,11 +1315,10 @@ object MultimodalOps {
     * payload scan, hashes at rest thereafter.
     */
   def writeFrameLedger(df: DataFrame, idCol: String, binCol: String,
-      frameBytes: Int, everyK: Int, path: String): Unit = {
-    frameLedgerRows(df, idCol, binCol, frameBytes, everyK)
-      .write.mode("overwrite").parquet(path)
-    writeFrameMeta(df.sparkSession, path, frameBytes, everyK)
-  }
+      frameBytes: Int, everyK: Int, path: String): Unit =
+    Ledger.create(df.sparkSession, path, FrameSpec,
+      frameLedgerRows(df, idCol, binCol, frameBytes, everyK),
+      frameParams(frameBytes, everyK))
 
   /** Admit a batch's frame signatures (append-only; pass rows already
     * vetted for admission — the ledger should hold what the corpus
@@ -1367,22 +1327,10 @@ object MultimodalOps {
     */
   def appendToFrameLedger(batch: DataFrame, idCol: String, binCol: String,
       frameBytes: Int, everyK: Int, path: String,
-      batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    // exactly-once fast-path (the cluster ledger's regime): a marked
-    // replay skips the re-hash and the duplicate append outright;
-    // unmarked replays stay LSM-tolerated (probes dedup, compaction
-    // removes). Marker lands AFTER the append — a crash in between
-    // leaves the safe unmarked state.
-    requireFrameMeta(spark, path, frameBytes, everyK, "append") // drift guard first
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
-    frameLedgerRows(batch, idCol, binCol, frameBytes, everyK)
-      .write.mode("append").parquet(LedgerGuard.appendPath(spark, path))
-    if (readFrameMeta(spark, path).isEmpty)
-      writeFrameMeta(spark, path, frameBytes, everyK)
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.append(batch.sparkSession, path, FrameSpec, batchId,
+      frameParams(frameBytes, everyK))(
+      frameLedgerRows(batch, idCol, binCol, frameBytes, everyK))
 
   /** At-rest byte size of the ledger's readable generation — the
     * cheap fs probe behind the reduce-route decision; unknown reads
@@ -1436,8 +1384,8 @@ object MultimodalOps {
   def frameDedupAgainstLedger(newDocs: DataFrame, idCol: String, binCol: String,
       path: String, frameBytes: Int, everyK: Int, minJaccard: Double): DataFrame = {
     val spark = newDocs.sparkSession
-    requireFrameMeta(spark, path, frameBytes, everyK, "probe")
-    val rows = LedgerGuard.readLedger(spark, path)
+    FrameParams.check(spark, path, "probe", frameParams(frameBytes, everyK))
+    val rows = Ledger.read(spark, path)
     val batch = frameSignatures(newDocs, idCol, binCol, frameBytes, everyK)
     def groupsOf(t: DataFrame): DataFrame = t.groupBy(col("fhs"))
       .agg(sort_array(collect_set(col(idCol))).as("__members"),
@@ -1529,13 +1477,9 @@ object MultimodalOps {
     */
   def removeFromFrameLedger(ids: DataFrame, idCol: String, path: String,
       batchId: Option[String] = None): Unit =
-    LedgerGuard.advanceInPlace(ids.sparkSession, path, "frame-ledger removal",
-      batchId) { staging =>
-      val gone = ids.select(col(idCol).as("__gone")).distinct()
-      LedgerGuard.readLedger(ids.sparkSession, path)
-        .join(broadcast(gone), col(idCol) === col("__gone"), "left_anti")
-        .write.parquet(staging)
-    }
+    Ledger.remove(ids.sparkSession, path,
+      FrameSpec.copy(retract = Ledger.Retract.AntiJoin(idCol)), batchId)(
+      ids.select(col(idCol)))
 
   /** Compact the frame ledger IN PLACE: collapse duplicate rows
     * (replayed appends) and rewrite accreted per-batch small files,
@@ -1545,10 +1489,5 @@ object MultimodalOps {
     */
   def compactFrameLedger(spark: SparkSession, path: String,
       targetFiles: Int = 16, maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "frame-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path).dropDuplicates()
-      LayoutOps.writeSized(led, staging, col(led.columns.head),
-        targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path, FrameSpec, targetFiles, maxRecordsPerFile)
 }

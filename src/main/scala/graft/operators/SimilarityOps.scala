@@ -455,7 +455,7 @@ object SimilarityOps {
         col(vecCol).as("vec"))
       .write.mode("overwrite").parquet(path)
     LedgerGuard.writeSidecarMeta(df.sparkSession, path, MrlMetaFile,
-      Seq("prefixDim" -> prefixDim.toLong))
+      Seq("prefixDim" -> prefixDim.toString))
   }
 
   /** [[matryoshkaTopK]] against [[writeMatryoshkaCorpus]]'s at-rest
@@ -471,7 +471,7 @@ object SimilarityOps {
       scoreDecimals: Int = 6, allowMissingMeta: Boolean = false): DataFrame = {
     require(candFactor >= 1, "candFactor must be >= 1")
     LedgerGuard.readSidecarMeta(spark, path, MrlMetaFile)
-      .flatMap(_.get("prefixDim")) match {
+      .flatMap(_.get("prefixDim")).flatMap(_.toLongOption) match {
       case Some(p) if p != prefixDim =>
         throw new IllegalArgumentException(
           s"MRL corpus probe at $path: corpus was written with " +
@@ -553,9 +553,7 @@ object SimilarityOps {
     // idCol rides along so maintenance ops bind the id BY NAME instead
     // of inferring it from parquet field order (a layout change would
     // otherwise anti-join tombstones on the wrong column without error)
-    LedgerGuard.writeSidecarMetaStr(candidates.sparkSession, path, AnnMetaFile,
-      Seq("numPlanes" -> numPlanes.toString, "dim" -> dim.toString,
-        "idCol" -> idCol))
+    AnnParams.write(candidates.sparkSession, path, annParams(numPlanes, dim, idCol))
   }
 
   /** Sidecar of the index's creation-time (numPlanes, dim): planes are
@@ -565,22 +563,16 @@ object SimilarityOps {
     * on probes and corrupting the layout on appends. Same treatment as
     * the signature ledger's shingling meta and the sketch ledger's lgK.
     */
-  private val AnnMetaFile = graft.operators.LedgerGuard.SidecarPrefix + "ANN_META"
+  private val AnnParams = Ledger.Params(
+    graft.operators.LedgerGuard.SidecarPrefix + "ANN_META", "ANN index",
+    "different planes assign different buckets, so probes silently lose " +
+      "recall and appends corrupt the layout", recordOnly = Set("idCol"))
 
-  private def requireAnnMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, numPlanes: Int, dim: Int, op: String): Unit =
-    LedgerGuard.readSidecarMeta(spark, path, AnnMetaFile).foreach { kv =>
-      (kv.get("numPlanes"), kv.get("dim")) match {
-        case (Some(np), Some(d)) if np != numPlanes || d != dim =>
-          throw new IllegalArgumentException(
-            s"ANN index $op at $path: index was built with numPlanes=$np, " +
-              s"dim=$d but the caller passed numPlanes=$numPlanes, dim=$dim — " +
-              "different planes assign different buckets, so probes silently " +
-              "lose recall and appends corrupt the layout; pass the " +
-              "creation-time values (or rebuild the index)")
-        case _ => ()
-      }
-    }
+  private val AnnSpec = Ledger.Spec("ANN index", Nil, Ledger.Merge.UnionDistinct,
+    layout = Ledger.Layout.Partitioned("bucket"), params = Some(AnnParams))
+
+  private def annParams(numPlanes: Int, dim: Int, idCol: String) =
+    Seq("numPlanes" -> numPlanes, "dim" -> dim, "idCol" -> idCol)
 
   /** Admit a batch of vectors to the at-rest ANN index — the ingest
     * loop's maintenance path: the batch gets the SAME deterministic
@@ -595,27 +587,14 @@ object SimilarityOps {
   def appendToBucketedIndex(batch: DataFrame, idCol: String, vecCol: String,
       numPlanes: Int, dim: Int, path: String,
       batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    // exactly-once fast-path: a marked replayed delivery skips the
-    // re-bucket and the duplicate append (which would otherwise
-    // surface as duplicate candidates until compaction); marker lands
-    // AFTER the append so a crash in between degrades to the old
-    // replay-tolerated state, never to a lying marker
-    requireAnnMeta(spark, path, numPlanes, dim, "append") // drift guard first
-    if (batchId.isDefined &&
-        LedgerGuard.lastAppliedBatchId(spark, path) == batchId) return
+    // exactly-once (the Ledger rule): a marked replayed delivery skips
+    // the re-bucket and the duplicate append (which would otherwise
+    // surface as duplicate candidates until compaction)
     val planes = hyperplanes(numPlanes, dim)
-    batch.select(col(idCol), col(vecCol),
-        hyperplaneBucket(col(vecCol), planes).as("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(LedgerGuard.appendPath(spark, path))
-    // adopt: first append to a pre-sidecar index stamps the caller's
-    // values, so every later append/probe is validated
-    if (LedgerGuard.readSidecarMeta(spark, path, AnnMetaFile).isEmpty)
-      LedgerGuard.writeSidecarMetaStr(spark, path, AnnMetaFile,
-        Seq("numPlanes" -> numPlanes.toString, "dim" -> dim.toString,
-          "idCol" -> idCol))
-    batchId.foreach(id => LedgerGuard.recordBatchApplied(spark, path, id))
+    Ledger.append(batch.sparkSession, path, AnnSpec, batchId,
+      annParams(numPlanes, dim, idCol))(
+      batch.select(col(idCol), col(vecCol),
+        hyperplaneBucket(col(vecCol), planes).as("bucket")))
   }
 
   /** Reserved partition holding delete TOMBSTONES: real vectors bucket
@@ -645,7 +624,7 @@ object SimilarityOps {
         lit(null).cast(ArrayType(FloatType)).as(vecCol),
         lit(TombstoneBucket).as("bucket"))
       .write.mode("append").partitionBy("bucket")
-      .parquet(LedgerGuard.appendPath(spark, path))
+      .parquet(Ledger.appendDir(spark, path))
   }
 
   /** Compact the at-rest ANN index: collapse exact duplicate rows
@@ -660,21 +639,13 @@ object SimilarityOps {
     */
   def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, maxRecordsPerFile: Long = 8L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "ANN index compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path).dropDuplicates()
+    Ledger.compactWith(spark, path, AnnSpec) { staging =>
+      val led = Ledger.fold(AnnSpec, Ledger.read(spark, path))
       // bind the id BY NAME from the sidecar when present (legacy
       // pre-idCol indexes fall back to field order); a sidecar naming
       // a column the files don't carry fails loudly here rather than
       // anti-joining tombstones on the wrong column
-      val idc = LedgerGuard.readSidecarMetaStr(spark, path, AnnMetaFile)
-        .flatMap(_.get("idCol")) match {
-        case Some(name) =>
-          require(led.columns.contains(name),
-            s"ANN index compaction at $path: sidecar names id column " +
-              s"'$name' but the index files carry ${led.columns.mkString(", ")}")
-          name
-        case None => led.columns.head // at-rest layout: (id, vec) + bucket
-      }
+      val idc = Ledger.storedKey(spark, path, AnnParams, "idCol")
       val tombs = led.filter(col("bucket") === TombstoneBucket)
         .select(col(idc).as("__del")).distinct()
       led.filter(col("bucket") =!= TombstoneBucket)
@@ -706,7 +677,7 @@ object SimilarityOps {
       cId: String, cVec: String,
       numPlanes: Int, dim: Int, k: Int,
       maxLiteralBuckets: Int = 1024): DataFrame = {
-    requireAnnMeta(spark, path, numPlanes, dim, "probe")
+    AnnParams.check(spark, path, "probe", Seq("numPlanes" -> numPlanes, "dim" -> dim))
     val planes = hyperplanes(numPlanes, dim)
     val qb = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"),
       hyperplaneBucket(col(qVec), planes).as("bucket"))

@@ -124,25 +124,16 @@ object SketchOps {
   // exactly-once batchId discipline as every ledger family.
   // ------------------------------------------------------------------
 
-  private val VocabMetaFile = LedgerGuard.SidecarPrefix + "VOCAB_META"
+  private val VocabParams = Ledger.Params(
+    LedgerGuard.SidecarPrefix + "VOCAB_META", "vocab ledger",
+    "counts from different tokenizations are incomparable")
 
-  private def readVocabMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(String, String)] =
-    LedgerGuard.readSidecarMetaStr(spark, path, VocabMetaFile).flatMap { kv =>
-      for (k <- kv.get("keyCol"); t <- kv.get("tokenizerId")) yield (k, t)
-    }
+  private def vocabSpec(keyCol: String) = Ledger.Spec("vocab ledger",
+    Seq(keyCol, "token"), Ledger.Merge.Sum("tc"), Ledger.Retract.Negate,
+    params = Some(VocabParams))
 
-  private def requireVocabMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, keyCol: String, tokenizerId: String, op: String): Unit =
-    readVocabMeta(spark, path).foreach { case (k, t) =>
-      if (k != keyCol || t != tokenizerId)
-        throw new IllegalArgumentException(
-          s"vocab ledger $op at $path: ledger was created with keyCol=$k, " +
-            s"tokenizerId=$t but the caller passed keyCol=$keyCol, " +
-            s"tokenizerId=$tokenizerId — counts from different " +
-            "tokenizations are incomparable; pass the creation-time values " +
-            "(or rebuild the ledger)")
-    }
+  private def vocabParams(keyCol: String, tokenizerId: String) =
+    Seq("keyCol" -> keyCol, "tokenizerId" -> tokenizerId)
 
   /** Per-key token counts: `(key, token, tc)` — the mergeable unit.
     * `tokenCol` yields one ARRAY of tokens per row (e.g.
@@ -160,22 +151,19 @@ object SketchOps {
     * stable tag per tokenizer config.
     */
   def writeVocabLedger(df: DataFrame, keyCol: String, tokenCol: Column,
-      path: String, tokenizerId: String = "ws"): Unit = {
-    tokenCounts(df, keyCol, tokenCol).write.mode("overwrite").parquet(path)
-    LedgerGuard.writeSidecarMetaStr(df.sparkSession, path, VocabMetaFile,
-      Seq("keyCol" -> keyCol, "tokenizerId" -> tokenizerId))
-  }
+      path: String, tokenizerId: String = "ws"): Unit =
+    Ledger.create(df.sparkSession, path, vocabSpec(keyCol),
+      tokenCounts(df, keyCol, tokenCol), vocabParams(keyCol, tokenizerId))
 
   /** Ledger ∪ batch counts, re-summed — lazily reads `path`; persist to
     * a NEW generation dir or use [[advanceVocabLedger]].
     */
   def mergeVocabLedger(batch: DataFrame, keyCol: String, tokenCol: Column,
       path: String, tokenizerId: String = "ws"): DataFrame = {
-    requireVocabMeta(batch.sparkSession, path, keyCol, tokenizerId, "merge")
-    LedgerGuard.readLedger(batch.sparkSession, path)
-      .unionByName(tokenCounts(batch, keyCol, tokenCol))
-      .groupBy(col(keyCol), col("token"))
-      .agg(sum(col("tc")).as("tc"))
+    VocabParams.check(batch.sparkSession, path, "merge",
+      vocabParams(keyCol, tokenizerId))
+    Ledger.merged(batch.sparkSession, path, vocabSpec(keyCol),
+      tokenCounts(batch, keyCol, tokenCol))
   }
 
   /** Fold a batch into the at-rest counts IN PLACE (staged swap, lease,
@@ -185,16 +173,9 @@ object SketchOps {
     */
   def advanceVocabLedger(batch: DataFrame, keyCol: String, tokenCol: Column,
       path: String, tokenizerId: String = "ws",
-      batchId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    LedgerGuard.advanceInPlace(spark, path, "vocab ledger", batchId) { staging =>
-      mergeVocabLedger(batch, keyCol, tokenCol, path, tokenizerId)
-        .write.mode("overwrite").parquet(staging)
-    }
-    if (readVocabMeta(spark, path).isEmpty)
-      LedgerGuard.writeSidecarMetaStr(spark, path, VocabMetaFile,
-        Seq("keyCol" -> keyCol, "tokenizerId" -> tokenizerId))
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.advance(batch.sparkSession, path, vocabSpec(keyCol), batchId,
+      vocabParams(keyCol, tokenizerId))(tokenCounts(batch, keyCol, tokenCol))
 
   /** EXACT per-key top-k tokens from the at-rest counts, no corpus
     * access: `(key, rk, token, tc)` ranked by (count desc, token) —
@@ -204,11 +185,7 @@ object SketchOps {
   def topTokensFromLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val (keyCol, _) = readVocabMeta(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"vocab ledger probe at $path: no _GRAFT_VOCAB_META sidecar — " +
-          "cannot verify the ledger's key/tokenizer; rebuild the ledger " +
-          "(or restore the sidecar)"))
+    val keyCol = VocabParams.need(spark, path, "probe", "keyCol")
     // re-sum defensively BEFORE the heap (the vocabLedgerJsd contract:
     // a pre-compaction ledger may hold one row per generation for a
     // (key, token) — the merge contract, not an error; ranking the
@@ -238,11 +215,10 @@ object SketchOps {
     */
   def vocabLedgerJsd(spark: org.apache.spark.sql.SparkSession,
       pathA: String, pathB: String, decimals: Int = 4): DataFrame = {
-    def meta(p: String): (String, String) = readVocabMeta(spark, p)
-      .getOrElse(throw new IllegalStateException(
-        s"vocab ledger drift: no _GRAFT_VOCAB_META sidecar at $p — cannot " +
-          "verify the two ledgers tokenize identically; rebuild the ledger " +
-          "(or restore the sidecar)"))
+    def meta(p: String): (String, String) = {
+      val kv = VocabParams.need(spark, p, "drift")
+      (kv("keyCol"), kv("tokenizerId"))
+    }
     val (ka, ta) = meta(pathA)
     val (kb, tb) = meta(pathB)
     if ((ka, ta) != ((kb, tb)))
@@ -291,19 +267,8 @@ object SketchOps {
       tokenizerId: String = "ws-distinct"): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = batch.sparkSession
-    readVocabMeta(spark, dfLedgerPath) match {
-      case Some((_, t)) if t != tokenizerId =>
-        throw new IllegalArgumentException(
-          s"tf-idf probe at $dfLedgerPath: df ledger was created with " +
-            s"tokenizerId=$t but the caller passed tokenizerId=$tokenizerId " +
-            "— document frequencies from a different tokenization are " +
-            "incomparable; pass the creation-time tag (or rebuild)")
-      case Some(_) => ()
-      case None => throw new IllegalStateException(
-        s"tf-idf probe at $dfLedgerPath: no _GRAFT_VOCAB_META sidecar — " +
-          "cannot verify the df ledger's tokenizer; rebuild the ledger " +
-          "(or restore the sidecar)")
-    }
+    VocabParams.check(spark, dfLedgerPath, "tf-idf probe",
+      Seq("tokenizerId" -> tokenizerId), mustExist = true)
     val tf = batch
       .select(col(idCol), explode(tokenCol).as("token"))
       .filter(col("token").isNotNull && col("token") =!= "")
@@ -335,27 +300,9 @@ object SketchOps {
     */
   def retractFromVocabLedger(forgotten: DataFrame, keyCol: String,
       tokenCol: Column, path: String, tokenizerId: String = "ws",
-      batchId: Option[String] = None): Unit = {
-    val spark = forgotten.sparkSession
-    requireVocabMeta(spark, path, keyCol, tokenizerId, "retract")
-    LedgerGuard.advanceInPlace(spark, path, "vocab-ledger retraction",
-      batchId) { staging =>
-      val merged = LedgerGuard.readLedger(spark, path)
-        .unionByName(tokenCounts(forgotten, keyCol, tokenCol)
-          .withColumn("tc", -col("tc")))
-        .groupBy(col(keyCol), col("token"))
-        .agg(sum(col("tc")).as("tc"))
-        .localCheckpoint() // one computation: the guard and the write
-      val neg = merged.filter(col("tc") < 0).limit(1).collect()
-      if (neg.nonEmpty)
-        throw new IllegalArgumentException(
-          s"vocab-ledger retraction at $path: token '${neg.head.get(1)}' " +
-            s"of key ${neg.head.get(0)} would go negative — the forgotten " +
-            "rows were never admitted (or already retracted, or tokenized " +
-            "differently); retraction must subtract exactly what was added")
-      merged.filter(col("tc") > 0).write.mode("overwrite").parquet(staging)
-    }
-  }
+      batchId: Option[String] = None): Unit =
+    Ledger.retract(forgotten.sparkSession, path, vocabSpec(keyCol), batchId,
+      vocabParams(keyCol, tokenizerId))(tokenCounts(forgotten, keyCol, tokenCol))
 
   /** Compact the vocab ledger IN PLACE: re-sum accreted duplicate
     * (key, token) rows and rewrite small files keyed for pruning.
@@ -363,23 +310,7 @@ object SketchOps {
   def compactVocabLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 16,
       maxRecordsPerFile: Long = 64L * 1000 * 1000): Unit =
-    LedgerGuard.advanceInPlace(spark, path, "vocab-ledger compaction") { staging =>
-      val led = LedgerGuard.readLedger(spark, path)
-      // bind the key BY NAME from the sidecar (legacy pre-sidecar
-      // ledgers fall back to field order); a sidecar naming a column
-      // the files don't carry fails loudly rather than re-summing on
-      // the wrong key — the compactBucketedIndex contract
-      val keyName = readVocabMeta(spark, path).map(_._1) match {
-        case Some(name) =>
-          require(led.columns.contains(name),
-            s"vocab-ledger compaction at $path: sidecar names key column " +
-              s"'$name' but the files carry ${led.columns.mkString(", ")}")
-          name
-        case None => led.columns.head
-      }
-      LayoutOps.writeSized(
-        led.groupBy(col(keyName), col("token")).agg(sum(col("tc")).as("tc")),
-        staging, col(keyName), targetFiles, maxRecordsPerFile,
-        srcBytes = LedgerGuard.readableDataBytes(spark, path))
-    }
+    Ledger.compact(spark, path,
+      vocabSpec(Ledger.storedKey(spark, path, VocabParams, "keyCol")),
+      targetFiles, maxRecordsPerFile)
 }

@@ -73,28 +73,40 @@ object Qf {
     * legs via `spark.graft.concurrentLegTimeoutSec` or the
     * `SPARK_GRAFT_LEG_TIMEOUT_S` env var.
     */
-  private def legTimeoutSec: Long =
+  private[graft] def legTimeoutSec: Long = {
+    val key = "spark.graft.concurrentLegTimeoutSec"
+    val env = "SPARK_GRAFT_LEG_TIMEOUT_S"
     org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => scala.util.Try(
-        s.conf.get("spark.graft.concurrentLegTimeoutSec")).toOption)
-      .orElse(sys.env.get("SPARK_GRAFT_LEG_TIMEOUT_S"))
-      .map(_.toLong).getOrElse(900L)
+      .flatMap(_.conf.getOption(key).map(key -> _))
+      .orElse(sys.env.get(env).map(env -> _))
+      .map { case (k, v) =>
+        // a present but malformed override fails loudly naming itself —
+        // silently falling back to the default would hide the typo
+        v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"$k must be a whole number of seconds, got '$v'"))
+      }
+      .getOrElse(900L)
+  }
+
+  /** Start `body` on the global pool through an explicit Promise
+    * completed on EVERY throwable — `Future(body)` never completes on a
+    * fatal error (OOM, StackOverflow), which turns a dead lane into a
+    * wait for the full deadline. Every side lane (the legs here, the
+    * ledger maintenance overlaps) starts through this one launcher.
+    */
+  private[graft] def lane[T](body: => T): scala.concurrent.Future[T] = {
+    val p = scala.concurrent.Promise[T]()
+    scala.concurrent.ExecutionContext.global.execute { () =>
+      try p.success(body)
+      catch { case t: Throwable => p.tryFailure(t) }
+    }
+    p.future
+  }
 
   def concurrently(legs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Promise}
+    import scala.concurrent.Await
     import scala.concurrent.duration._
-    val ec = ExecutionContext.global
-    // run each leg through an explicit Promise completed on EVERY
-    // throwable — Future(l()) never completes on a fatal error (OOM,
-    // StackOverflow), which turns a dead leg into an infinite hang
-    val fs = legs.zipWithIndex.map { case (l, i) =>
-      val p = Promise[Unit]()
-      ec.execute { () =>
-        try { l(); p.success(()) }
-        catch { case t: Throwable => p.tryFailure(t) }
-      }
-      (i, p.future)
-    }
+    val fs = legs.zipWithIndex.map { case (l, i) => (i, lane(l())) }
     val deadline = legTimeoutSec.seconds
     val outcomes = fs.map { case (i, f) =>
       scala.util.Try(Await.result(f, deadline)).recoverWith {

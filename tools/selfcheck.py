@@ -25,6 +25,15 @@ def canon(df):
     return df.reset_index(drop=True)
 
 fail = ok = skip = 0
+# a query the oracle expects but Verify wrote no output for (it threw)
+# is a failure, not a silent drop from the tally
+present = {os.path.basename(q.rstrip("/")) for q in glob.glob(f"{out_dir}/*/")}
+for name in sorted(set(oracles) - present):
+    if only and name not in only:
+        continue
+    print(f"[MISSING] {name}: no output directory")
+    fail += 1
+
 for qdir in sorted(glob.glob(f"{out_dir}/*/")):
     name = os.path.basename(qdir.rstrip("/"))
     if only and name not in only:
