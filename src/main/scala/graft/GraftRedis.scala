@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StringType
 
 /** User-facing facade — the one-import surface for a RedDuck user moving
   * to this engine (README.md:16-38 workflow parity):
@@ -11,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * val keys = GraftRedis.scan(spark, "user:*")   // ≈ FROM redis_scan('user:*')
   * val kv   = GraftRedis.kv(spark, "user:*")     // ≈ redis_kv (batched MGET)
   * GraftRedis.registerSql(spark)                 // redis_get / redis_hgetall /
-  *                                               // redduck / set_name in SQL
+  *                                               // redduck / set_name and the
+  *                                               // redis_* table functions in SQL
   * }}}
   */
 object GraftRedis {
@@ -31,12 +35,9 @@ object GraftRedis {
 
   private def reader(spark: SparkSession, fmt: String, pattern: String,
       numPartitionsPatterns: Seq[String]) = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val base0 = spark.read.format(fmt)
-      .option("host", host).option("port", port.toString)
+    val base = spark.read.format(fmt)
+      .options(functions.RedduckFunctions.targetOptions(spark))
       .option("pattern", pattern)
-    val base = functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => base0.option("password", a)).getOrElse(base0)
     (if (numPartitionsPatterns.nonEmpty)
       base.option("partition.patterns", numPartitionsPatterns.mkString(","))
     else base).load()
@@ -57,31 +58,65 @@ object GraftRedis {
   /** Write (key STRING, value STRING) rows back to Redis: per-partition
     * pipelined SET batches (idempotent upsert — safe under task retry).
     */
-  def writeKv(df: DataFrame): Unit = {
-    val (host, port) = functions.RedduckFunctions.target(df.sparkSession)
-    val w0 = df.write.format("redis-kv")
-      .option("host", host).option("port", port.toString)
-    functions.RedduckFunctions.sessionAuth(df.sparkSession)
-      .map(a => w0.option("password", a)).getOrElse(w0)
+  def writeKv(df: DataFrame): Unit =
+    df.write.format("redis-kv")
+      .options(functions.RedduckFunctions.targetOptions(df.sparkSession))
       .mode("append").save()
-  }
 
   /** Streaming keyspace → (key_name STRING): each micro-batch emits the
     * keys that appeared since the previous snapshot (see
     * `sources.RedisKeyStreamProvider` for the fault-tolerance contract).
     */
-  def keyStream(spark: SparkSession, pattern: String = "*"): DataFrame = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r0 = spark.readStream.format("redis-key-stream")
-      .option("host", host).option("port", port.toString)
-      .option("pattern", pattern)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r0.option("password", a)).getOrElse(r0).load()
+  def keyStream(spark: SparkSession, pattern: String = "*"): DataFrame =
+    spark.readStream.format("redis-key-stream")
+      .options(functions.RedduckFunctions.targetOptions(spark))
+      .option("pattern", pattern).load()
+
+  /** The Redis SQL table functions, each defined once: the extension
+    * injects these, and [[registerSql]] registers the same ones on an
+    * existing session. The builders read the `redis_connect` target of
+    * the ACTIVE session (they run inside analysis, where a session is
+    * always active), so `redis_connect(...)` → `SELECT * FROM
+    * redis_scan(...)` behaves like the reference's global-target flow.
+    * Arguments must be literal (foldable) strings — the restriction the
+    * reference enforces by evaluating the pattern at bind time.
+    */
+  val tableFunctions: Seq[(String, Seq[Expression] => LogicalPlan)] = {
+    def plan(df: DataFrame) = org.apache.spark.sql.GraftSqlShims.logicalPlan(df)
+    def active = SparkSession.active
+    Seq(
+      "redis_scan" -> (es => plan(scan(active, patternArg(es, "redis_scan")))),
+      "redis_kv" -> (es => plan(kv(active, patternArg(es, "redis_kv")))),
+      "redis_hash" -> (es => plan(hash(active, patternArg(es, "redis_hash")))),
+      // Redis Streams batch face: SELECT * FROM redis_stream('events') —
+      // or several streams at once, redis_stream('a', 'b', ...), which
+      // returns the multi-stream shape with the leading `stream` column
+      "redis_stream" -> (es => plan(stringArgs(es) match {
+        case keys if keys.isEmpty || keys.length != es.length =>
+          throw new IllegalArgumentException(
+            "redis_stream expects one or more literal string stream keys, " +
+              "e.g. redis_stream('events') or redis_stream('a', 'b')")
+        case Seq(one) => stream(active, one)
+        case many => streams(active, many)
+      })))
   }
 
-  /** Register the SQL scalar surface AND the table-valued functions on
-    * the session — after this, the reference's primary syntax parses
-    * as-is (/root/reference/README.md:24, test/sql/scan.test:20):
+  /** The literal string values among a call's arguments. */
+  private def stringArgs(es: Seq[Expression]): Seq[String] = es.flatMap { e =>
+    if (e.foldable && e.dataType == StringType) Option(e.eval()).map(_.toString) else None
+  }
+
+  private def patternArg(es: Seq[Expression], fn: String): String = stringArgs(es) match {
+    case Seq(p) if es.length == 1 => p
+    case _ => throw new IllegalArgumentException(
+      s"$fn expects exactly one literal string pattern, e.g. $fn('user:*')")
+  }
+
+  /** Register the SQL scalar surface, the Redis table functions and the
+    * engine's optimizer rules on an existing session — the same ones
+    * `GraftSparkExtensions` injects. After this, the reference's primary
+    * syntax parses as-is (the reference's README.md:24 and
+    * test/sql/scan.test:20):
     *
     * {{{
     * SELECT * FROM redis_scan('testkey:*');
@@ -90,63 +125,12 @@ object GraftRedis {
     */
   def registerSql(spark: SparkSession): Unit = {
     functions.RedduckFunctions.registerAll(spark)
-    registerTableFunctions(spark)
-    // session-scoped dual of the extension's injectOptimizerRule: the
-    // naive levenshtein join rewrites to the PassJoin blocking plan
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LevenshteinJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LevenshteinJoinRewrite
-    // built-in percentile aggregates route onto the distributed
-    // histogram-selection plan instead of per-group value-map buffering
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PercentileAggregateRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PercentileAggregateRewrite
-  }
-
-  /** Register `redis_scan('glob')` / `redis_kv('glob')` as SQL
-    * table-valued functions. The builder captures this session and
-    * resolves the host/port defaults at call time, so
-    * `redis_connect(...)` → `SELECT * FROM redis_scan(...)` behaves
-    * like the reference's global-target flow. The argument must be one
-    * literal (foldable) string — same restriction the reference enforces
-    * by evaluating the pattern at bind time.
-    */
-  def registerTableFunctions(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.GraftSqlShims
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.types.StringType
-
-    def patternArg(exprs: Seq[Expression], fn: String): String = exprs match {
-      case Seq(e) if e.foldable && e.dataType == StringType && e.eval() != null =>
-        e.eval().toString
-      case _ => throw new IllegalArgumentException(
-        s"$fn expects exactly one literal string pattern, e.g. $fn('user:*')")
-    }
     val reg = spark.sessionState.tableFunctionRegistry
-    reg.createOrReplaceTempFunction("redis_scan",
-      exprs => GraftSqlShims.logicalPlan(scan(spark, patternArg(exprs, "redis_scan"))), "scala_udf")
-    reg.createOrReplaceTempFunction("redis_kv",
-      exprs => GraftSqlShims.logicalPlan(kv(spark, patternArg(exprs, "redis_kv"))), "scala_udf")
-    reg.createOrReplaceTempFunction("redis_hash",
-      exprs => GraftSqlShims.logicalPlan(hash(spark, patternArg(exprs, "redis_hash"))), "scala_udf")
-    // Redis Streams batch face: SELECT * FROM redis_stream('events') —
-    // or several streams at once, redis_stream('a', 'b', ...), which
-    // returns the multi-stream shape with the leading `stream` column
-    def streamArgs(exprs: Seq[Expression]): Seq[String] = {
-      val lits = exprs.flatMap { e =>
-        if (e.foldable && e.dataType == StringType) Option(e.eval()).map(_.toString)
-        else None
-      }
-      require(lits.nonEmpty && lits.length == exprs.length,
-        "redis_stream expects one or more literal string stream keys, " +
-          "e.g. redis_stream('events') or redis_stream('a', 'b')")
-      lits
+    tableFunctions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    reg.createOrReplaceTempFunction("redis_stream",
-      exprs => GraftSqlShims.logicalPlan(streamArgs(exprs) match {
-        case Seq(one) => stream(spark, one)
-        case many => streams(spark, many)
-      }), "scala_udf")
+    spark.experimental.extraOptimizations ++=
+      GraftSparkExtensions.optimizerRules.filterNot(spark.experimental.extraOptimizations.contains)
   }
 
   /** Hash keys → (key STRING, fields MAP<STRING,STRING>). */
@@ -154,24 +138,18 @@ object GraftRedis {
       shards: Seq[String] = Nil): DataFrame =
     reader(spark, "redis-hash", pattern, shards)
 
-  private def streamOpts(r0: org.apache.spark.sql.DataFrameReader,
-      spark: SparkSession): org.apache.spark.sql.DataFrameReader = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r1 = r0.option("host", host).option("port", port.toString)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r1.option("password", a)).getOrElse(r1)
-  }
-
   /** Redis Stream contents, batch face → (entry_id, fields MAP). */
   def stream(spark: SparkSession, key: String): DataFrame =
-    streamOpts(spark.read.format("redis-stream"), spark)
+    spark.read.format("redis-stream")
+      .options(functions.RedduckFunctions.targetOptions(spark))
       .option("stream", key).load()
 
   /** Several streams at once, batch face → (stream, entry_id, fields)
     * — the multi-stream read's leading origin column.
     */
   def streams(spark: SparkSession, keys: Seq[String]): DataFrame =
-    streamOpts(spark.read.format("redis-stream"), spark)
+    spark.read.format("redis-stream")
+      .options(functions.RedduckFunctions.targetOptions(spark))
       .option("streams", keys.mkString(",")).load()
 
   /** Trim a stream to (approximately) its newest `maxLen` entries —
@@ -184,7 +162,7 @@ object GraftRedis {
       approx: Boolean = true): Long = {
     val (host, port) = functions.RedduckFunctions.target(spark)
     net.RedisConnection.withPooled(host, port,
-        functions.RedduckFunctions.sessionAuth(spark))(c =>
+        net.RedisLink(functions.RedduckFunctions.sessionAuth(spark)))(c =>
       net.RedisCommands.xtrim(c, key, maxLen, approx))
   }
 
@@ -193,27 +171,19 @@ object GraftRedis {
     * `sources.RedisStreamEntriesProvider`).
     */
   def entryStream(spark: SparkSession, key: String,
-      maxEntriesPerTrigger: Option[Int] = None): DataFrame = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r0 = spark.readStream.format("redis-stream")
-      .option("host", host).option("port", port.toString)
+      maxEntriesPerTrigger: Option[Int] = None): DataFrame =
+    spark.readStream.format("redis-stream")
+      .options(functions.RedduckFunctions.targetOptions(spark))
       .option("stream", key)
-    val r1 = maxEntriesPerTrigger
-      .map(n => r0.option("maxEntriesPerTrigger", n.toString)).getOrElse(r0)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r1.option("password", a)).getOrElse(r1).load()
-  }
+      .options(maxEntriesPerTrigger.map(n => "maxEntriesPerTrigger" -> n.toString).toMap)
+      .load()
 
   /** XADD rows into a Redis Stream (batch face; at-least-once — see
     * the sink's contract in `RedisStreamSource.scala`).
     */
-  def writeStreamEntries(df: DataFrame, key: String): Unit = {
-    val (host, port) = functions.RedduckFunctions.target(df.sparkSession)
-    val w0 = df.write.format("redis-stream")
-      .option("host", host).option("port", port.toString)
+  def writeStreamEntries(df: DataFrame, key: String): Unit =
+    df.write.format("redis-stream")
+      .options(functions.RedduckFunctions.targetOptions(df.sparkSession))
       .option("stream", key)
-    functions.RedduckFunctions.sessionAuth(df.sparkSession)
-      .map(a => w0.option("password", a)).getOrElse(w0)
       .mode("append").save()
-  }
 }

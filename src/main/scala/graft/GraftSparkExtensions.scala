@@ -22,37 +22,19 @@ import org.apache.spark.sql.types.StringType
   * `frame_md5s`, `merge_spans`, `scrub_spans` — same expression trees
   * as the Scala API, so the surfaces cannot drift), the table-valued
   * `redis_scan('glob')` / `redis_kv('glob')` / `redis_hash('glob')`
-  * sources (the reference's primary syntax), and the
+  * sources (the reference's primary syntax) and `redis_stream('key', ...)`
+  * (`GraftRedis.tableFunctions`), the engine's optimizer rules
+  * ([[GraftSparkExtensions.optimizerRules]]), and the
   * `frame_dedup('<path>', idCol, binCol, frameBytes, everyK,
   * minJaccard)` table function (m06's whole pair plan over an at-rest
   * corpus).
-  * Session-scoped registration for an existing session remains
-  * available via `GraftRedis.registerSql`.
+  * `GraftRedis.registerSql` registers the same Redis table functions and
+  * optimizer rules on an existing session.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String): ExpressionInfo =
     new ExpressionInfo("graft", name)
-
-  private def patternArg(exprs: Seq[Expression], fn: String): String = exprs match {
-    case Seq(e) if e.foldable && e.dataType == StringType && e.eval() != null =>
-      e.eval().toString
-    case _ => throw new IllegalArgumentException(
-      s"$fn expects exactly one literal string pattern, e.g. $fn('user:*')")
-  }
-
-  /** DataFrame for a Redis source against the ACTIVE session (the builder
-    * runs inside analysis, where a session is always active).
-    */
-  private def sourceDf(fmt: String, pattern: String) = {
-    val spark = SparkSession.active
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val base = spark.read.format(fmt)
-      .option("host", host).option("port", port.toString)
-      .option("pattern", pattern)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => base.option("auth", a)).getOrElse(base).load()
-  }
 
   private def intArg(e: Expression, fn: String): Int = {
     val v = longArg(e, fn)
@@ -89,15 +71,6 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    registerFunctions(ext)
-    registerOptimizerRules(ext)
-  }
-
-  /** Scalar kernels + Redis TVFs only (no optimizer rules) — split out so
-    * profiling harnesses can A/B rule overhead with the SQL surface held
-    * constant.
-    */
-  def registerFunctions(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((FunctionIdentifier("dot_f"), info("dot_f"),
       (es: Seq[Expression]) => graft.functions.DotProductF(es(0), es(1))))
     ext.injectFunction((FunctionIdentifier("dot_fd"), info("dot_fd"),
@@ -208,12 +181,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       (es: Seq[Expression]) => graft.functions.MergeSpans(es(0),
         intArg(es(1), "merge_spans"))))
 
-    Seq("redis_scan" -> "redis-scan", "redis_kv" -> "redis-kv", "redis_hash" -> "redis-hash")
-      .foreach { case (fn, fmt) =>
-        ext.injectTableFunction((FunctionIdentifier(fn), info(fn),
-          (es: Seq[Expression]) =>
-            org.apache.spark.sql.GraftSqlShims.logicalPlan(sourceDf(fmt, patternArg(es, fn)))))
-      }
+    GraftRedis.tableFunctions.foreach { case (fn, builder) =>
+      ext.injectTableFunction((FunctionIdentifier(fn), info(fn), builder))
+    }
     // frame_dedup('<parquet path>', 'idCol', 'binCol', frameBytes,
     // everyK, minJaccard): m06's pair generator as a table function over
     // an at-rest corpus — the whole collapse + prefix-filter plan, built
@@ -291,6 +261,8 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
             strLit(es(0), "histogram_drift", "pathA"),
             strLit(es(1), "histogram_drift", "pathB")))
       }))
+
+    GraftSparkExtensions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 
   /** Numeric literal → Double (integral literals widen). */
@@ -326,16 +298,19 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       s"$fn expects a literal ARRAY of strings as its vocabulary, e.g. " +
         s"$fn(text, ARRAY('a', '##a'))")
   }
+}
 
-  /** The engine's optimizer rules. */
-  def registerOptimizerRules(ext: SparkSessionExtensions): Unit = {
-    // optimizer: `JOIN ... ON levenshtein(a,b) <= k` (a cartesian
-    // nested loop as written) rewrites to the PassJoin blocking plan
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinJoinRewrite)
-    // optimizer: built-in percentile/percentile_disc/percentile_cont/
-    // median aggregates (per-group value-map buffering — the ObjectHash
-    // OOM cliff at scale) rewrite to the distributed histogram-selection
-    // plan
-    ext.injectOptimizerRule(_ => graft.plans.PercentileAggregateRewrite)
-  }
+object GraftSparkExtensions {
+  /** The engine's optimizer rules, injected by the extension and added to
+    * a session's extra optimizations by `GraftRedis.registerSql`.
+    */
+  val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] = Seq(
+    // `JOIN ... ON levenshtein(a,b) <= k` (a cartesian nested loop as
+    // written) rewrites to the PassJoin blocking plan
+    graft.plans.LevenshteinJoinRewrite,
+    // built-in percentile/percentile_disc/percentile_cont/median
+    // aggregates (per-group value-map buffering — the ObjectHash OOM
+    // cliff at scale) rewrite to the distributed histogram-selection plan
+    graft.plans.PercentileAggregateRewrite)
 }

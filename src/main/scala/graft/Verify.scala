@@ -39,12 +39,14 @@ object Verify {
     val names = scala.jdk.CollectionConverters.CollectionHasAsScala(failed)
       .asScala.toSeq.sorted
     System.err.println(s"[verify] ${names.size} failed: ${names.mkString(", ")}")
-    writeOracleSql(outDir)
+    writeOracleSql(outDir, sfDir)
     spark.stop()
   }
 
-  /** `<outDir>/oracle_sql.json`: every SparkEntry oracle query by name. */
-  def writeOracleSql(outDir: String): Unit = {
+  /** `<outDir>/oracle_sql.json`: every SparkEntry oracle query by name,
+    * for a run over the tables in `sfDir`.
+    */
+  def writeOracleSql(outDir: String, sfDir: String): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -58,7 +60,8 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${q(k)}: ${q(queries.OlapQueries.oracleFor(v, sfDir))}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType, StructType}
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisLink}
 
 /** Scalar-function parity surface (reference registrations at
   * /root/reference/src/redduck_extension.cpp:348-362).
@@ -66,7 +66,7 @@ object RedduckFunctions {
     // password (the server answers "ERR Client sent AUTH, but no password
     // is set" and the eager ping fails loudly) with no API way out.
     // connect(target, None) therefore also DROPS the persisted credential.
-    val c = new RedisConnection(host, port, auth = auth)
+    val c = new RedisConnection(host, port, RedisLink(auth))
     try c.ping() finally c.close()
     spark.conf.set(HostConf, host)
     spark.conf.set(PortConf, port.toString)
@@ -80,13 +80,22 @@ object RedduckFunctions {
   def target(spark: SparkSession): (String, Int) =
     (spark.conf.get(HostConf, "127.0.0.1"), spark.conf.get(PortConf, "6379").toInt)
 
+  /** The session's `redis_connect` target as reader/writer options: host,
+    * port and, when one is set, the credential under `password` — the
+    * option name Spark's default redaction regex masks in plan dumps.
+    */
+  def targetOptions(spark: SparkSession): Map[String, String] = {
+    val (host, port) = target(spark)
+    Map("host" -> host, "port" -> port.toString) ++ sessionAuth(spark).map("password" -> _)
+  }
+
   /** Register the SQL-facing UDFs on a session. `redis_get`/`redis_hgetall`
     * capture the session's target at registration time (executor closures
     * cannot read driver conf).
     */
   def registerAll(spark: SparkSession): Unit = {
     val (host, port) = target(spark)
-    val auth = sessionAuth(spark)
+    val link = RedisLink(sessionAuth(spark))
     val missingDefault: String = if (legacyEmpty(spark)) "" else null
 
     // demo scalars, kept for smoke-test parity (redduck_extension.cpp:17-40)
@@ -99,12 +108,12 @@ object RedduckFunctions {
     // was set at registration time.
     spark.udf.register("redis_get", (key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, auth)(c =>
+      else RedisConnection.withPooled(host, port, link)(c =>
         RedisCommands.get(c, key).getOrElse(missingDefault)))
 
     spark.udf.register("redis_hgetall", (key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, auth)(c => RedisCommands.hgetall(c, key)))
+      else RedisConnection.withPooled(host, port, link)(c => RedisCommands.hgetall(c, key)))
   }
 
   /** Batched `redis_get`: resolves `keyCol` for a whole DataFrame with one
@@ -120,7 +129,7 @@ object RedduckFunctions {
       auth: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
     val (host, port) = hostPort.getOrElse(target(spark))
-    val creds = auth.orElse(sessionAuth(spark))
+    val link = RedisLink(auth.orElse(sessionAuth(spark)))
     val missingDefault: String = if (legacyEmpty(spark)) "" else null
     val schema = StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField(valueCol, StringType, nullable = true))
@@ -135,7 +144,7 @@ object RedduckFunctions {
         val keys = group.filterNot(_.isNullAt(keyIdx)).map(_.getString(keyIdx))
         val values =
           if (keys.isEmpty) Iterator.empty
-          else RedisConnection.withPooled(host, port, creds)(c => RedisCommands.mget(c, keys)).iterator
+          else RedisConnection.withPooled(host, port, link)(c => RedisCommands.mget(c, keys)).iterator
         group.iterator.map { row =>
           val v = if (row.isNullAt(keyIdx)) null else values.next().getOrElse(missingDefault)
           org.apache.spark.sql.Row.fromSeq(row.toSeq :+ v)
@@ -153,10 +162,10 @@ object RedduckFunctions {
       hostPort: Option[(String, Int)] = None, auth: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
     val (host, port) = hostPort.getOrElse(target(spark))
-    val creds = auth.orElse(sessionAuth(spark))
+    val link = RedisLink(auth.orElse(sessionAuth(spark)))
     val hget = udf((key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, creds)(c => RedisCommands.hgetall(c, key)))
+      else RedisConnection.withPooled(host, port, link)(c => RedisCommands.hgetall(c, key)))
     val withMap = df.withColumn("hash", hget(col(keyCol)))
     structSchema match {
       case None => withMap

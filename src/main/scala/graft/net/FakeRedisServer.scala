@@ -33,6 +33,10 @@ final class FakeRedisServer(requestedPort: Int = 0,
   private val scanCallCount = new java.util.concurrent.atomic.AtomicInteger(0)
   def scanCalls: Int = scanCallCount.get()
   def resetScanCalls(): Unit = scanCallCount.set(0)
+  // HELLO counter: tests assert that every connection of a resp=3 read,
+  // the cluster seed's included, negotiates the protocol
+  private val helloCallCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  def helloCalls: Int = helloCallCount.get()
   // last SCAN's raw argument vector: tests assert options (TYPE, MATCH)
   // actually reached the server as COMMANDS, not as client-side filters
   @volatile private var lastScanArgsVar: Seq[String] = Nil
@@ -196,6 +200,7 @@ final class FakeRedisServer(requestedPort: Int = 0,
         case "PING" => Simple("PONG")
         case "ECHO" => Bulk(args(1))
         case "HELLO" =>
+          helloCallCount.incrementAndGet()
           // real ≥6.0 semantics: bare HELLO reports, HELLO 2|3 switches;
           // anything else is NOPROTO
           val want = if (args.length >= 2) args(1) else (if (st.resp3) "3" else "2")

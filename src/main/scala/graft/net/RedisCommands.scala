@@ -60,6 +60,28 @@ object RedisCommands {
     (next, Vector.tabulate(keys.size)(keys.string))
   }
 
+  /** Walks `pattern`'s whole SCAN cursor, from 0 until the server answers
+    * 0 again, running `page` after each page with that page's keys in
+    * `keys` (views, valid until the next page is read).
+    */
+  def scanWalk(c: RedisConnection, pattern: String, count: Int,
+      scanType: Option[String], keys: RespCodec.ArrayView)(page: => Unit): Unit = {
+    var cursor = "0"
+    do {
+      cursor = scanPageView(c, cursor, pattern, count, scanType, keys)
+      page
+    } while (cursor != "0")
+  }
+
+  /** Every key of `pattern`'s whole SCAN cursor, as `String`s. */
+  def scanAll(c: RedisConnection, pattern: String, count: Int,
+      scanType: Option[String] = None): Seq[String] = {
+    val keys = new RespCodec.ArrayView
+    val out = Seq.newBuilder[String]
+    scanWalk(c, pattern, count, scanType, keys)(out ++= Iterator.tabulate(keys.size)(keys.string))
+    out.result()
+  }
+
   private def encoded(args: Seq[String]): RespCodec.CommandBuffer = {
     val cmd = new RespCodec.CommandBuffer()
     cmd.command(args)
@@ -79,14 +101,15 @@ object RedisCommands {
     case _ => None
   }
 
-  /** Run `f` against a redirect target. ASK redirects require the ASKING
+  /** Run `f` against a redirect target, reached over the redirected
+    * connection's own link. ASK redirects require the ASKING
     * prefix on the target node (the slot is mid-migration and not yet owned
     * there — without it the target answers MOVED back and the query fails);
     * MOVED targets own the slot and take the plain command.
     */
   private def onRedirectTarget[T](host: String, port: Int, ask: Boolean,
-      auth: Option[String])(f: RedisConnection => T): T =
-    RedisConnection.withPooled(host, port, auth) { rc =>
+      link: RedisLink)(f: RedisConnection => T): T =
+    RedisConnection.withPooled(host, port, link) { rc =>
       if (ask) rc.command("ASKING") match {
         case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
         case _ => ()
@@ -103,7 +126,7 @@ object RedisCommands {
       case b: Bulk => Some(b.text)
       case Null => None
       case Err(m) => redirectTarget(m) match {
-        case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.auth) { rc =>
+        case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.link) { rc =>
           rc.command("GET", key) match {
             case b: Bulk => Some(b.text)
             case Null => None
@@ -142,7 +165,7 @@ object RedisCommands {
         } else RespCodec.decodeFrame(buf, start, end) match {
           case Err(m) => redirectTarget(m) match {
             case Some((h, p, ask)) if where.isEmpty =>
-              onRedirectTarget(h, p, ask, c.auth)(read(_, " after redirect"))
+              onRedirectTarget(h, p, ask, c.link)(read(_, " after redirect"))
             case _ => throw new java.io.IOException(s"MGET error$where: $m")
           }
           case other => fail("MGET reply", other)
@@ -198,7 +221,7 @@ object RedisCommands {
         entries.collect { case (k: Bulk, value: Bulk) => k.text -> value.text }.toMap
       case Err(m) => redirectTarget(m) match {
         case Some((h, p, ask)) if !afterRedirect =>
-          onRedirectTarget(h, p, ask, c.auth)(rc => parse(rc.command("HGETALL", key), afterRedirect = true))
+          onRedirectTarget(h, p, ask, c.link)(rc => parse(rc.command("HGETALL", key), afterRedirect = true))
         case _ => throw new java.io.IOException(s"HGETALL error: $m")
       }
       case other => fail("HGETALL reply", other)

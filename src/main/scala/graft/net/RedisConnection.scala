@@ -3,6 +3,22 @@ package graft.net
 import java.net.{InetSocketAddress, Socket}
 import graft.resp.{RespCodec, RespValue}
 
+/** How to reach a Redis deployment, beyond its address: the credential
+  * ("password" or "user password"), TLS, trust-all TLS and RESP3. One link
+  * runs from the reader/writer options or `redis_connect` to every socket
+  * opened for them; a connection hands its own link to its MOVED/ASK
+  * redirect targets, so a redirect target is reached with the same
+  * transport, credential and protocol as the connection redirected.
+  */
+final case class RedisLink(auth: Option[String] = None, tls: Boolean = false,
+    tlsTrustAll: Boolean = false, resp3: Boolean = false) {
+  // a case-class toString would print the credential into task logs and
+  // debug dumps: mask it (present/absent is all an operator needs)
+  override def toString: String =
+    s"RedisLink(auth=${if (auth.isDefined) "***" else "none"},tls=$tls," +
+      s"tlsTrustAll=$tlsTrustAll,resp3=$resp3)"
+}
+
 /** Blocking Redis client over `java.net.Socket`.
   *
   * Equivalent of the reference's `RedisClient`
@@ -21,17 +37,21 @@ import graft.resp.{RespCodec, RespValue}
   * serializes all I/O behind two process-global mutexes; we scale by
   * giving each Spark partition its own connection instead).
   */
-final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 5000,
-    val auth: Option[String] = None, val tls: Boolean = false,
-    val tlsTrustAll: Boolean = false, val resp3: Boolean = false)
+final class RedisConnection(val host: String, val port: Int, val link: RedisLink)
     extends AutoCloseable {
+  import link.{auth, resp3}
+
+  def this(host: String, port: Int, auth: Option[String] = None, resp3: Boolean = false) =
+    this(host, port, RedisLink(auth, resp3 = resp3))
+
+  private val timeoutMs = 5000
 
   private val socket: Socket = {
     val plain = new Socket()
     plain.setTcpNoDelay(true)
     plain.setSoTimeout(timeoutMs)
     plain.connect(new InetSocketAddress(host, port), timeoutMs)
-    if (!tls) plain
+    if (!link.tls) plain
     else {
       // TLS-wrap the connected socket (the rediss:// deployment shape).
       // `tlsTrustAll` skips chain validation for self-signed test/dev
@@ -39,7 +59,7 @@ final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 50
       // the JVM's CA store (or a custom one via standard javax.net.ssl
       // system properties).
       val factory =
-        if (!tlsTrustAll)
+        if (!link.tlsTrustAll)
           javax.net.ssl.SSLContext.getDefault.getSocketFactory
         else {
           val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
@@ -203,25 +223,22 @@ final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 50
 }
 
 object RedisConnection {
-  /** Per-JVM connection cache keyed by target + thread: Spark partitions
-    * run on a bounded executor thread pool, so this bounds connections at
-    * (threads × targets) while never sharing a socket across threads.
+  /** Per-JVM connection cache keyed by target + link + thread: Spark
+    * partitions run on a bounded executor thread pool, so this bounds
+    * connections at (threads × targets) while never sharing a socket
+    * across threads.
     */
   private val pool = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Option[String], Boolean, Boolean, Boolean, Long), RedisConnection]()
+    (String, Int, RedisLink, Long), RedisConnection]()
 
-  def pooled(host: String, port: Int, auth: Option[String] = None,
-      tls: Boolean = false, tlsTrustAll: Boolean = false,
-      resp3: Boolean = false): RedisConnection = {
-    val key = (host, port, auth, tls, tlsTrustAll, resp3,
-      Thread.currentThread().getId)
+  def pooled(host: String, port: Int, link: RedisLink): RedisConnection = {
+    val key = (host, port, link, Thread.currentThread().getId)
     var c = pool.get(key)
     if (c == null || !c.isOpen) {
       if (c != null) { // close the dead socket before replacing: no fd leak
         try c.close() catch { case _: Throwable => () }
       }
-      c = new RedisConnection(host, port, auth = auth, tls = tls,
-        tlsTrustAll = tlsTrustAll, resp3 = resp3)
+      c = new RedisConnection(host, port, link)
       pool.put(key, c)
     }
     c
@@ -243,17 +260,14 @@ object RedisConnection {
   /** Run `f` with a pooled connection, evicting it on I/O failure so the
     * next call reconnects.
     */
-  def withPooled[T](host: String, port: Int, auth: Option[String] = None,
-      tls: Boolean = false, tlsTrustAll: Boolean = false,
-      resp3: Boolean = false)(
+  def withPooled[T](host: String, port: Int, link: RedisLink)(
       f: RedisConnection => T): T = {
-    val key = (host, port, auth, tls, tlsTrustAll, resp3,
-      Thread.currentThread().getId)
-    val c = pooled(host, port, auth, tls, tlsTrustAll, resp3)
+    val c = pooled(host, port, link)
     try f(c)
     catch {
       case e: java.io.IOException =>
-        pool.remove(key); try c.close() catch { case _: Throwable => () }
+        pool.remove((host, port, link, Thread.currentThread().getId))
+        try c.close() catch { case _: Throwable => () }
         throw e
     }
   }

@@ -28,6 +28,24 @@ object OlapQueries {
       run: (SparkSession, String) => DataFrame): NamedQuery =
     NamedQuery(name, run, Option(oracle).filter(_.nonEmpty))
 
+  /** The file-format round-trips' output directories as their oracle SQL
+    * names them; [[roundtripDir]] keys each by the sf dir.
+    */
+  private val RoundtripDirs = Seq("/tmp/graft_conformance/q57_csv", "/tmp/graft_conformance/q58_json")
+
+  /** A round-trip's output directory for the tables in `dir`, keyed by
+    * the sf dir as q62's Derby database is, so runs at different scales
+    * never share files. Not a `Registry.scratchDir`: the DuckDB oracle
+    * reads it after the run's JVM has exited.
+    */
+  def roundtripDir(base: String, dir: String): String = s"${base}_${dir.hashCode.toHexString}"
+
+  /** `oracle` with each round-trip directory replaced by the one a run
+    * over the tables in `dir` writes.
+    */
+  def oracleFor(oracle: String, dir: String): String =
+    RoundtripDirs.foldLeft(oracle)((sql, base) => sql.replace(base + "/", roundtripDir(base, dir) + "/"))
+
   val all: Seq[NamedQuery] = Seq(
     // ---------------------------------------------------------------- scans + aggregation
     q("q01_pricing_summary",
@@ -1491,10 +1509,9 @@ object OlapQueries {
     // second pass) → aggregate. The oracle reads the SAME part files with
     // DuckDB's read_csv, so BOTH the writer's encoding and the reader's
     // parsing are conformance-checked, not just the aggregate. The write
-    // path stays parallel (one part per task). The path is FIXED (not
-    // per-sf) because the oracle SQL is a static string: verify→oracle
-    // always runs sequentially, so the oracle reads what its own verify
-    // run just wrote, at any scale factor.
+    // path stays parallel (one part per task). The path is keyed by the
+    // sf dir, and Verify writes that path into the oracle SQL
+    // (`oracleFor`), so each scale's oracle reads its own run's files.
     q("q57_csv_roundtrip",
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(user_id) AS BIGINT) AS sum_uid,
@@ -1503,7 +1520,7 @@ object OlapQueries {
         |  columns={'event_id': 'BIGINT', 'user_id': 'BIGINT',
         |           'event_type': 'VARCHAR', 'value': 'DOUBLE'})
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val out = "/tmp/graft_conformance/q57_csv"
+      val out = roundtripDir("/tmp/graft_conformance/q57_csv", dir)
       table(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").option("header", "true").csv(out)
@@ -1528,7 +1545,7 @@ object OlapQueries {
         |  columns={'event_id': 'BIGINT', 'user_id': 'BIGINT',
         |           'event_type': 'VARCHAR', 'value': 'DOUBLE'})
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val out = "/tmp/graft_conformance/q58_json"
+      val out = roundtripDir("/tmp/graft_conformance/q58_json", dir)
       table(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").json(out)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisLink}
 import graft.resp.{RespCodec, RespValue}
 
 /** DataSource V2 connectors for the Redis keyspace — the Spark-native
@@ -49,9 +49,22 @@ object RedisSources {
 
   final case class Options(host: String, port: Int, pattern: String, count: Int,
       partitionPatterns: Seq[String], slots: Int, clusterMode: Boolean,
-      auth: Option[String] = None, tls: Boolean = false,
-      tlsTrustAll: Boolean = false, scanType: Option[String] = None,
-      resp3: Boolean = false) {
+      link: RedisLink, scanType: Option[String] = None) {
+    /** A new connection to the target over the options' link. */
+    def connect(): RedisConnection = new RedisConnection(host, port, link)
+
+    /** Runs `f` with the calling thread's pooled connection to the target. */
+    def withPooled[T](f: RedisConnection => T): T = RedisConnection.withPooled(host, port, link)(f)
+
+    /** The scan's input partitions: one per master node in cluster mode,
+      * else one per pattern list of [[effectivePatterns]].
+      */
+    def partitions(pushed: Option[String], limit: Option[Int],
+        topN: Option[TopN]): Array[InputPartition] =
+      if (clusterMode) clusterPartitions(this, pushed, limit, topN)
+      else effectivePatterns(pushed).map(ps => RedisInputPartition(host, port, ps, count,
+        limit, topN, link, scanType = scanType): InputPartition).toArray
+
     /** Disjoint pattern lists, one per input partition. */
     def effectivePatterns(pushed: Option[String]): Seq[Seq[String]] = pushed match {
       case Some(p) => Seq(Seq(p))
@@ -67,15 +80,26 @@ object RedisSources {
     val opts = Options(
       host = o.getOrDefault("host", "127.0.0.1"),
       port = o.getOrDefault("port", "6379").toInt,
-      // requirepass / ACL credentials: "password" or "user password".
-      // Preferred option name is "password" — it matches Spark's default
-      // SQL-options redaction regex, so EXPLAIN/UI plan dumps mask it;
-      // "auth" stays accepted for back-compat but is NOT auto-redacted.
-      auth = Option(o.get("password")).orElse(Option(o.get("auth"))).filter(_.nonEmpty),
-      // rediss://-style transport: TLS-wrap every connection;
-      // tls.trustAll accepts self-signed certs (test/dev ONLY)
-      tls = o.getOrDefault("tls", "false").toBoolean,
-      tlsTrustAll = o.getOrDefault("tls.trustAll", "false").toBoolean,
+      link = RedisLink(
+        // requirepass / ACL credentials: "password" or "user password".
+        // Preferred option name is "password" — it matches Spark's default
+        // SQL-options redaction regex, so EXPLAIN/UI plan dumps mask it;
+        // "auth" stays accepted for back-compat but is NOT auto-redacted.
+        auth = Option(o.get("password")).orElse(Option(o.get("auth"))).filter(_.nonEmpty),
+        // rediss://-style transport: TLS-wrap every connection;
+        // tls.trustAll accepts self-signed certs (test/dev ONLY)
+        tls = o.getOrDefault("tls", "false").toBoolean,
+        tlsTrustAll = o.getOrDefault("tls.trustAll", "false").toBoolean,
+        // protocol negotiation: .option("resp", "3") sends HELLO 3 on every
+        // connection (loud failure on pre-6.0 servers) — reply SHAPES differ
+        // (map-typed HGETALL, set frames) but the parsed rows are identical,
+        // pinned by spec
+        resp3 = o.getOrDefault("resp", "2") match {
+          case "2" => false
+          case "3" => true
+          case other => throw new IllegalArgumentException(
+            s"resp must be '2' (default) or '3', got '$other'")
+        }),
       pattern = o.getOrDefault("pattern", "*"),
       count = o.getOrDefault("scan.count", "2048").toInt, // reference batch size, resp_parser.cpp:159-161
       // `SCAN ... TYPE t` server-side type filter (Redis ≥6.0): opt-in
@@ -87,16 +111,6 @@ object RedisSources {
         require(valid(t.toLowerCase),
           s"scan.type must be one of ${valid.toSeq.sorted.mkString("/")}, got '$t'")
         t.toLowerCase
-      },
-      // protocol negotiation: .option("resp", "3") sends HELLO 3 on every
-      // connection (loud failure on pre-6.0 servers) — reply SHAPES differ
-      // (map-typed HGETALL, set frames) but the parsed rows are identical,
-      // pinned by spec
-      resp3 = o.getOrDefault("resp", "2") match {
-        case "2" => false
-        case "3" => true
-        case other => throw new IllegalArgumentException(
-          s"resp must be '2' (default) or '3', got '$other'")
       },
       partitionPatterns = Option(o.get("partition.patterns")).toSeq
         .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)),
@@ -126,8 +140,7 @@ object RedisSources {
     */
   def clusterPartitions(opts: Options, pushed: Option[String],
       limit: Option[Int], topN: Option[TopN]): Array[InputPartition] = {
-    val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll)
+    val conn = opts.connect()
     val ranges = try RedisCommands.clusterSlots(conn) finally conn.close()
     val masters = ranges.map(r => (r.host, r.port)).distinct
     val pats = Seq(pushed.getOrElse(opts.pattern))
@@ -138,11 +151,9 @@ object RedisSources {
       // them instead of returning a silently short result.
       val owned = ranges.filter(r => r.host == h && r.port == p)
         .map(r => (r.start, r.end))
-      // cluster nodes share the deployment's credentials
-      RedisInputPartition(h, p, pats, opts.count, limit, topN,
-        auth = opts.auth, tls = opts.tls,
-        tlsTrustAll = opts.tlsTrustAll, ownedSlots = owned,
-        scanType = opts.scanType, resp3 = opts.resp3): InputPartition
+      // cluster nodes share the deployment's link
+      RedisInputPartition(h, p, pats, opts.count, limit, topN, opts.link,
+        ownedSlots = owned, scanType = opts.scanType): InputPartition
     }.toArray
   }
 
@@ -291,14 +302,7 @@ class RedisHashProvider extends TableProvider with DataSourceRegister {
               s"RedisHashScan(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count})"
             override def toBatch: Batch = this
             override def planInputPartitions(): Array[InputPartition] =
-              if (opts.clusterMode)
-                RedisSources.clusterPartitions(opts, pushedGlob, None, None)
-              else opts.effectivePatterns(pushedGlob)
-                .map(ps => RedisInputPartition(opts.host, opts.port, ps, opts.count,
-                  auth = opts.auth, tls = opts.tls,
-                  tlsTrustAll = opts.tlsTrustAll,
-                  scanType = opts.scanType, resp3 = opts.resp3): InputPartition)
-                .toArray
+              opts.partitions(pushedGlob, None, None)
             override def createReaderFactory(): PartitionReaderFactory =
               (partition: InputPartition) =>
                 new RedisHashPartitionReader(partition.asInstanceOf[RedisInputPartition])
@@ -312,8 +316,7 @@ class RedisHashPartitionReader(p: RedisInputPartition)
     extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
+  private val conn = new RedisConnection(p.host, p.port, p.link)
   private var cursor = "0"
   private var patternIdx = 0
   private var done = false
@@ -399,8 +402,7 @@ class RedisBatchWrite(opts: RedisSources.Options)
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
-    new RedisDataWriterFactory(opts.host, opts.port, opts.count, opts.auth,
-      opts.tls, opts.tlsTrustAll, opts.resp3)
+    new RedisDataWriterFactory(opts.host, opts.port, opts.count, opts.link)
   override def commit(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = ()
   // no coordinator: SET is an idempotent upsert, so task retries are safe
@@ -411,18 +413,16 @@ final case class RedisWriteCommit(written: Long)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 class RedisDataWriterFactory(host: String, port: Int, batchSize: Int,
-    auth: Option[String] = None, tls: Boolean = false,
-    tlsTrustAll: Boolean = false, resp3: Boolean = false)
+    link: RedisLink = RedisLink())
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      // resp3 rides to the WRITE connections too: resp=3 documents
-      // "HELLO 3 on every connection", and silently leaving writers on
-      // RESP2 would defeat protocol pinning against a RESP3-required
-      // proxy
-      private val conn = new RedisConnection(host, port, auth = auth,
-        tls = tls, tlsTrustAll = tlsTrustAll, resp3 = resp3)
+      // the whole link rides to the WRITE connections too: resp=3
+      // documents "HELLO 3 on every connection", and silently leaving
+      // writers on RESP2 would defeat protocol pinning against a
+      // RESP3-required proxy
+      private val conn = new RedisConnection(host, port, link)
       // the batch's SET commands, encoded from the rows' UTF-8 bytes
       private val cmds = new RespCodec.CommandBuffer(64 * 1024)
       private var pending = 0
@@ -529,14 +529,7 @@ class RedisScan(fetchValues: Boolean, opts: RedisSources.Options, pushedGlob: Op
   }
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    if (opts.clusterMode)
-      RedisSources.clusterPartitions(opts, pushedGlob, pushedLimit, pushedTopN)
-    else opts.effectivePatterns(pushedGlob)
-      .map(ps => RedisInputPartition(opts.host, opts.port, ps, opts.count,
-        pushedLimit, pushedTopN, auth = opts.auth, tls = opts.tls,
-        tlsTrustAll = opts.tlsTrustAll, scanType = opts.scanType,
-        resp3 = opts.resp3): InputPartition)
-      .toArray
+    opts.partitions(pushedGlob, pushedLimit, pushedTopN)
   override def createReaderFactory(): PartitionReaderFactory =
     new RedisReaderFactory(fetchValues)
 }
@@ -547,24 +540,14 @@ class RedisScan(fetchValues: Boolean, opts: RedisSources.Options, pushedGlob: Op
   */
 final case class RedisInputPartition(host: String, port: Int, patterns: Seq[String], count: Int,
     limit: Option[Int] = None, topN: Option[RedisSources.TopN] = None,
-    auth: Option[String] = None, tls: Boolean = false,
-    tlsTrustAll: Boolean = false,
+    // its toString masks the credential
+    link: RedisLink = RedisLink(),
     // cluster mode: slot ranges this node owned at plan time (empty =
     // standalone; readers re-verify ownership at cursor end)
     ownedSlots: Seq[(Int, Int)] = Nil,
     // `SCAN ... TYPE t` server-side filter (scan.type option)
-    scanType: Option[String] = None,
-    // HELLO 3 per connection (resp option)
-    resp3: Boolean = false)
-    extends InputPartition {
-  // case-class toString would print the credential into task logs /
-  // debug dumps — mask it (present/absent is all an operator needs)
-  override def toString: String =
-    s"RedisInputPartition($host,$port,${patterns.mkString("|")},$count," +
-      s"limit=$limit,topN=$topN,auth=${if (auth.isDefined) "***" else "none"}," +
-      s"tls=$tls,tlsTrustAll=$tlsTrustAll" +
-      scanType.map(t => s",type=$t").getOrElse("") + ")"
-}
+    scanType: Option[String] = None)
+    extends InputPartition
 
 class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
   /** Only pushed-topN partitions read rows; see [[supportColumnarReads]]. */
@@ -609,8 +592,7 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
+  private val conn = new RedisConnection(p.host, p.port, p.link)
   private var cursor = "0"
   private var patternIdx = 0
   private var done = false
@@ -788,8 +770,7 @@ final class RedisStringColumn(rows: Int, payload: Long)
 class RedisTopNPartitionReader(p: RedisInputPartition, t: RedisSources.TopN)
     extends PartitionReader[InternalRow] {
 
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
+  private val conn = new RedisConnection(p.host, p.port, p.link)
   private lazy val rows: Iterator[InternalRow] = drainTopN()
   private var current: InternalRow = _
 
@@ -820,9 +801,7 @@ class RedisTopNPartitionReader(p: RedisInputPartition, t: RedisSources.TopN)
     val seen = new java.util.HashSet[UTF8String]()
     val keys = new RespCodec.ArrayView
     p.patterns.foreach { pattern =>
-      var cursor = "0"
-      do {
-        cursor = RedisCommands.scanPageView(conn, cursor, pattern, p.count, p.scanType, keys)
+      RedisCommands.scanWalk(conn, pattern, p.count, p.scanType, keys) {
         var i = 0
         while (i < keys.size) {
           // a view into the receive buffer; copied only when admitted
@@ -835,7 +814,7 @@ class RedisTopNPartitionReader(p: RedisInputPartition, t: RedisSources.TopN)
           }
           i += 1
         }
-      } while (cursor != "0")
+      }
     }
     // cluster mode: fail loudly if this node's plan-time slots moved
     // while the cursor was walking

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisLink}
 
 /** Structured Streaming source over the Redis keyspace: each micro-batch
   * emits the keys that APPEARED since the previous batch (snapshot diff
@@ -78,20 +78,8 @@ class RedisKeyMicroBatchStream(opts: RedisSources.Options)
   private var initialized = false
 
   private def scanKeys(): Seq[String] = {
-    val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll, resp3 = opts.resp3)
-    try {
-      val out = Seq.newBuilder[String]
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        val (next, keys) = RedisCommands.scanPage(conn, cursor, opts.pattern, opts.count)
-        cursor = next
-        out ++= keys
-      }
-      out.result()
-    } finally conn.close()
+    val conn = opts.connect()
+    try RedisCommands.scanAll(conn, opts.pattern, opts.count) finally conn.close()
   }
 
   override def initialOffset(): Offset = RedisStreamOffset(0L)
@@ -477,29 +465,22 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
         override def description(): String =
           s"RedisStreamEntries(streams=${sopts.describe}, count=${opts.count})"
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          sopts.selection match {
-            case RedisStreamEntries.SingleStream(_) =>
-              new RedisStreamEntriesMicroBatch(opts, sopts)
-            case _ => new RedisMultiStreamMicroBatch(opts, sopts)
-          }
+          new RedisMultiStreamMicroBatch(opts, sopts)
         // batch face: every member stream as of planning time — the
         // oracle face of the streaming read (and a backfill path)
         override def toBatch: org.apache.spark.sql.connector.read.Batch = this
         override def planInputPartitions(): Array[InputPartition] =
-          RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-              tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-              resp3 = opts.resp3) { c =>
+          opts.withPooled { c =>
             val multi = !sopts.selection.isInstanceOf[RedisStreamEntries.SingleStream]
             RedisMultiStreamMicroBatch.members(c, opts, sopts.selection).flatMap {
               stream => RedisCommands.xlast(c, stream).map(last =>
                 RedisStreamRange(opts.host, opts.port, stream,
-                  RedisStreamEntries.ZeroId, last, opts.count,
-                  opts.auth, opts.tls, opts.tlsTrustAll,
-                  emitStream = multi, resp3 = opts.resp3): InputPartition)
+                  RedisStreamEntries.ZeroId, last, opts.count, opts.link,
+                  emitStream = multi): InputPartition)
             }.toArray
           }
         override def createReaderFactory(): PartitionReaderFactory =
-          RedisStreamEntriesMicroBatch.readerFactory
+          RedisMultiStreamMicroBatch.readerFactory
       }
     }
   }
@@ -632,8 +613,7 @@ final case class RedisStreamWriterFactory(opts: RedisSources.Options,
         remaining.head
       else -1
     }
-    private val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll, resp3 = opts.resp3)
+    private val conn = opts.connect()
     // each pending XADD keeps its (stream, id, fields) so a server
     // rejection can be classified (replay vs genuine error) without
     // re-rendering
@@ -782,20 +762,19 @@ final case class RedisStreamWriterFactory(opts: RedisSources.Options,
   }
 }
 
-/** Offset = last entry ID emitted (inclusive); `0-0` before any. */
-final case class RedisEntryOffset(id: String) extends Offset {
-  override def json(): String = id
-}
-
-/** Multi-stream offset: {stream → last entry id emitted (inclusive)}.
-  * Serialized as a JSON object with SORTED keys — Spark decides
-  * "anything new?" by comparing offset JSON, so the form must be
-  * canonical (the Kafka source's {topic: {partition: offset}} JSON
-  * precedent, one level flatter because a Redis stream has exactly one
-  * ordered shard).
+/** Offset: {stream → last entry id emitted (inclusive)}, `0-0` before
+  * any. A `stream=` read (`bare`) serializes its one id as is, `<ms>-<seq>`,
+  * the form its checkpoints have always held. `streams` and
+  * `streams.pattern` reads serialize a JSON object with SORTED keys —
+  * Spark decides "anything new?" by comparing offset JSON, so the form
+  * must be canonical (the Kafka source's {topic: {partition: offset}}
+  * JSON precedent, one level flatter because a Redis stream has exactly
+  * one ordered shard).
   */
-final case class RedisEntryMapOffset(ids: Map[String, String]) extends Offset {
-  override def json(): String = RedisEntryMapOffset.serialize(ids)
+final case class RedisEntryMapOffset(ids: Map[String, String], bare: Boolean = false)
+    extends Offset {
+  override def json(): String =
+    if (bare) ids.values.head else RedisEntryMapOffset.serialize(ids)
 }
 
 object RedisEntryMapOffset {
@@ -825,18 +804,15 @@ object RedisEntryMapOffset {
   */
 final case class RedisStreamRange(host: String, port: Int, stream: String,
     startExclusive: String, endInclusive: String, pageSize: Int,
-    auth: Option[String], tls: Boolean, tlsTrustAll: Boolean,
+    // its toString masks the credential
+    link: RedisLink,
     // multi-stream reads prepend the origin stream column
-    emitStream: Boolean = false,
-    resp3: Boolean = false)
-    extends InputPartition {
-  override def toString: String =
-    s"RedisStreamRange($host,$port,$stream,($startExclusive,$endInclusive]," +
-      s"page=$pageSize,auth=${if (auth.isDefined) "***" else "none"})"
-}
+    emitStream: Boolean = false)
+    extends InputPartition
 
-object RedisStreamEntriesMicroBatch {
+object RedisMultiStreamMicroBatch {
   import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+  import RedisStreamEntries._
 
   /** Shared by the batch and micro-batch faces: drain the range with
     * paged `XRANGE (cursor end COUNT page` — bounded memory per page,
@@ -845,8 +821,7 @@ object RedisStreamEntriesMicroBatch {
   val readerFactory: PartitionReaderFactory = (partition: InputPartition) => {
     val p = partition.asInstanceOf[RedisStreamRange]
     new PartitionReader[InternalRow] {
-      private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-        tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
+      private val conn = new RedisConnection(p.host, p.port, p.link)
       private var cursor = p.startExclusive
       private var done = false
       private var batch: Iterator[InternalRow] = Iterator.empty
@@ -881,98 +856,6 @@ object RedisStreamEntriesMicroBatch {
       override def close(): Unit = conn.close()
     }
   }
-}
-
-class RedisStreamEntriesMicroBatch(opts: RedisSources.Options,
-    sopts: RedisStreamEntries.StreamOptions)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  private val stream: String =
-    sopts.selection.asInstanceOf[RedisStreamEntries.SingleStream].name
-
-  private def withConn[T](f: RedisConnection => T): T =
-    RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-      resp3 = opts.resp3)(f)
-
-  // Trigger.AvailableNow: snapshot the stream tip ONCE at query start;
-  // every admission-capped batch then clamps to it, so the query drains
-  // exactly the backlog that existed at start (entries XADDed during
-  // the drain wait for the next run) and terminates. Without this the
-  // generic wrapper would pin the target to the FIRST capped batch's
-  // end and stop early.
-  // an EMPTY stream at start must still pin the target (to "nothing"):
-  // leaving it None would let a live producer keep the drain running
-  // forever and consume post-start entries
-  @volatile private var availableNowEnd: Option[String] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(withConn(c => RedisCommands.xlast(c, stream))
-      .getOrElse(RedisStreamEntries.ZeroId))
-
-  override def initialOffset(): Offset = sopts.startAt match {
-    case RedisStreamEntries.StartEarliest =>
-      RedisEntryOffset(RedisStreamEntries.ZeroId)
-    case RedisStreamEntries.StartLatest => RedisEntryOffset(
-      withConn(c => RedisCommands.xlast(c, stream))
-        .getOrElse(RedisStreamEntries.ZeroId))
-    case RedisStreamEntries.StartAfter(id) => RedisEntryOffset(id)
-  }
-
-  override def getDefaultReadLimit: ReadLimit =
-    sopts.maxPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[RedisEntryOffset].id
-    val cap = limit match {
-      case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
-        Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
-      case _ => sopts.maxPerTrigger
-    }
-    val end = cap match {
-      case Some(n) => withConn(c =>
-        RedisCommands.xrange(c, stream, "(" + from, "+", Some(n)))
-        .lastOption.map(_.id)
-      case None => withConn(c => RedisCommands.xlast(c, stream))
-        .filter(last => RedisCommands.compareStreamIds(last, from) > 0)
-    }
-    val clamped = (end, availableNowEnd) match {
-      case (Some(e), Some(cap2)) if RedisCommands.compareStreamIds(e, cap2) > 0 =>
-        Some(cap2) // AvailableNow: never pass the start-time tip
-      case _ => end
-    }
-    RedisEntryOffset(clamped.filter(
-      e => RedisCommands.compareStreamIds(e, from) > 0).getOrElse(from))
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[RedisEntryOffset].id
-    val e = end.asInstanceOf[RedisEntryOffset].id
-    if (RedisCommands.compareStreamIds(e, s) <= 0) Array.empty
-    else Array(RedisStreamRange(opts.host, opts.port, stream, s, e,
-      opts.count, opts.auth, opts.tls, opts.tlsTrustAll,
-      resp3 = opts.resp3))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    RedisStreamEntriesMicroBatch.readerFactory
-
-  override def deserializeOffset(json: String): Offset = RedisEntryOffset(json)
-
-  /** Nothing to release: entries live on the server under the
-    * operator's retention policy (`XTRIM`), exactly like Kafka.
-    */
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-object RedisMultiStreamMicroBatch {
-  import RedisStreamEntries._
 
   /** Resolve the member streams of a selection. Pattern mode walks one
     * full `SCAN MATCH glob TYPE stream` cursor DRIVER-side — a keyspace
@@ -985,31 +868,24 @@ object RedisMultiStreamMicroBatch {
     case SingleStream(n) => Seq(n)
     case MultiStreams(ns) => ns
     case PatternStreams(glob) =>
-      val out = Seq.newBuilder[String]
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        val (next, keys) = RedisCommands.scanPage(c, cursor, glob, opts.count,
-          scanType = Some("stream"))
-        cursor = next
-        out ++= keys
-      }
-      out.result().distinct.sorted
+      RedisCommands.scanAll(c, glob, opts.count, Some("stream")).distinct.sorted
   }
 }
 
-/** N streams, one micro-batch query: the 100 TB ingest shape (a single
-  * Redis stream is one ordered partition by design — the server's
-  * ordering guarantee — so scale-out is MANY streams, exactly like
-  * Kafka topics scale by partition count). One [[RedisStreamRange]]
+/** The one micro-batch stream of `redis-stream`, for `stream`, `streams`
+  * and `streams.pattern` alike. N streams, one micro-batch query: the
+  * 100 TB ingest shape (a single Redis stream is one ordered partition
+  * by design — the server's ordering guarantee — so scale-out is MANY
+  * streams, exactly like Kafka topics scale by partition count). One [[RedisStreamRange]]
   * partition per advanced stream per batch; the offset is a composite
-  * {stream → last id} JSON map ([[RedisEntryMapOffset]]).
+  * {stream → last id} map ([[RedisEntryMapOffset]]), bare for `stream`.
+  * A single stream is the one-member case: its share is the whole cap,
+  * the rotation is 0, and a short page marks it drained, so a trigger
+  * costs one capped XRANGE (or one XREVRANGE uncapped), no second pass.
   *
   * Admission-cap split, stated precisely (all deterministic given the
-  * start offset and server state — the same contract as the
-  * single-stream probe, and replay never re-probes: a committed batch
-  * replays from its recorded (start, end] ranges):
+  * start offset and server state, and replay never re-probes: a
+  * committed batch replays from its recorded (start, end] ranges):
   *  - the cap is split evenly across the member streams (n/k each,
   *    the first n%k in probe order get one extra);
   *  - streams are probed in sorted order ROTATED by a hash of the
@@ -1038,10 +914,8 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import RedisStreamEntries._
 
-  private def withConn[T](f: RedisConnection => T): T =
-    RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-      resp3 = opts.resp3)(f)
+  // a `stream=` read: bare-id offsets and no `stream` column
+  private val bare = sopts.selection.isInstanceOf[SingleStream]
 
   private def membersNow(c: RedisConnection): Seq[String] =
     RedisMultiStreamMicroBatch.members(c, opts, sopts.selection)
@@ -1051,11 +925,11 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
   // cannot keep the drain running forever
   @volatile private var availableNowEnds: Option[Map[String, String]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnds = Some(withConn { c =>
+    availableNowEnds = Some(opts.withPooled { c =>
       membersNow(c).map(s => s -> RedisCommands.xlast(c, s).getOrElse(ZeroId)).toMap
     })
 
-  override def initialOffset(): Offset = withConn { c =>
+  override def initialOffset(): Offset = opts.withPooled { c =>
     val ms = membersNow(c)
     RedisEntryMapOffset(ms.map { s =>
       s -> (sopts.startAt match {
@@ -1065,7 +939,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
         // component is a wall-clock timestamp on every stream
         case StartAfter(id) => id
       })
-    }.toMap)
+    }.toMap, bare)
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -1083,7 +957,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
         Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
       case _ => sopts.maxPerTrigger
     }
-    withConn { c =>
+    opts.withPooled { c =>
       // during an AvailableNow drain membership is the pinned set;
       // otherwise re-resolve (new pattern matches enter at 0-0)
       val membership = (availableNowEnds match {
@@ -1091,7 +965,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
         case None => membersNow(c).toSet ++ restored.keySet
       }).toSeq.sorted
       val k = membership.length
-      if (k == 0) RedisEntryMapOffset(restored)
+      if (k == 0) RedisEntryMapOffset(restored, bare)
       else {
         // rotate the probe order by a hash of the canonical start
         // offset: deterministic for a given start, rotates with
@@ -1178,7 +1052,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
             }
           }
         }
-        RedisEntryMapOffset(restored ++ advanced)
+        RedisEntryMapOffset(restored ++ advanced, bare)
       }
     }
   }
@@ -1190,19 +1064,20 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
       val from = s.getOrElse(stream, ZeroId)
       if (RedisCommands.compareStreamIds(endId, from) <= 0) None
       else Some(RedisStreamRange(opts.host, opts.port, stream, from, endId,
-        opts.count, opts.auth, opts.tls, opts.tlsTrustAll,
-        emitStream = true, resp3 = opts.resp3): InputPartition)
+        opts.count, opts.link, emitStream = !bare): InputPartition)
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    RedisStreamEntriesMicroBatch.readerFactory
+    RedisMultiStreamMicroBatch.readerFactory
 
-  override def deserializeOffset(json: String): Offset =
-    RedisEntryMapOffset(RedisEntryMapOffset.parse(json))
+  override def deserializeOffset(json: String): Offset = sopts.selection match {
+    case SingleStream(n) => RedisEntryMapOffset(Map(n -> json), bare = true)
+    case _ => RedisEntryMapOffset(RedisEntryMapOffset.parse(json))
+  }
 
-  /** Like the single-stream source: retention (`XTRIM`) is the
-    * server operator's policy; nothing to release here.
+  /** Nothing to release: entries live on the server under the
+    * operator's retention policy (`XTRIM`), exactly like Kafka.
     */
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -20,7 +20,7 @@ object DumpOne {
     }
     // refresh oracle_sql.json so selfcheck sees queries newer than the
     // last full Verify sweep
-    Verify.writeOracleSql(outDir)
+    Verify.writeOracleSql(outDir, sfDir)
     spark.stop()
   }
 }
