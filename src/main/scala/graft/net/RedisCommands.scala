@@ -1,5 +1,7 @@
 package graft.net
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.resp.{RespCodec, RespValue}
 import graft.resp.RespValue._
 
@@ -88,56 +90,49 @@ object RedisCommands {
     cmd
   }
 
-  /** `MOVED <slot> host:port` / `ASK <slot> host:port` cluster redirect
-    * target, if the error is one. Single-key commands follow ONE hop (the
+  /** A `MOVED <slot> host:port` / `ASK <slot> host:port` cluster
+    * redirect error. Single-key commands follow ONE hop (the
     * standard cluster-client cap per command); batched MGET/pipelines on
     * a real cluster must instead group keys per slot upstream — the
     * partition seam (`partition.slots`/`partition.patterns`) is where
     * that grouping plugs in.
     */
   private val Redirect = """(MOVED|ASK) \d+ ([^:\s]+):(\d+)""".r
-  private def redirectTarget(err: String): Option[(String, Int, Boolean)] = err match {
-    case Redirect(verb, host, port) => Some((host, port.toInt, verb == "ASK"))
-    case _ => None
-  }
 
-  /** Run `f` against a redirect target, reached over the redirected
-    * connection's own link. ASK redirects require the ASKING
+  /** Run `f` against the target of the redirect `err`, reached over the
+    * redirected connection `c`'s own link. ASK redirects require the ASKING
     * prefix on the target node (the slot is mid-migration and not yet owned
     * there — without it the target answers MOVED back and the query fails);
-    * MOVED targets own the slot and take the plain command.
+    * MOVED targets own the slot and take the plain command. Any other
+    * error, or a redirect after the one hop (`where` is not empty), fails
+    * as an error of `what`.
     */
-  private def onRedirectTarget[T](host: String, port: Int, ask: Boolean,
-      link: RedisLink)(f: RedisConnection => T): T =
-    RedisConnection.withPooled(host, port, link) { rc =>
-      if (ask) rc.command("ASKING") match {
-        case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
-        case _ => ()
+  private def onRedirectTarget[T](c: RedisConnection, err: String, what: String, where: String)(
+      f: RedisConnection => T): T = err match {
+    case Redirect(verb, host, port) if where.isEmpty =>
+      RedisConnection.withPooled(host, port.toInt, c.link) { rc =>
+        if (verb == "ASK") rc.command("ASKING") match {
+          case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
+          case _ => ()
+        }
+        f(rc)
       }
-      f(rc)
-    }
+    case _ => throw new java.io.IOException(s"$what error$where: $err")
+  }
 
   /** GET: missing key → None (SQL NULL downstream — deliberate divergence
     * from the reference's empty-string, redis_client.cpp:232-236).
     * Follows one cluster redirect.
     */
-  def get(c: RedisConnection, key: String): Option[String] =
-    c.command("GET", key) match {
+  def get(c: RedisConnection, key: String): Option[String] = {
+    def read(rc: RedisConnection, where: String): Option[String] = rc.command("GET", key) match {
       case b: Bulk => Some(b.text)
       case Null => None
-      case Err(m) => redirectTarget(m) match {
-        case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.link) { rc =>
-          rc.command("GET", key) match {
-            case b: Bulk => Some(b.text)
-            case Null => None
-            case Err(m2) => throw new java.io.IOException(s"GET error after redirect: $m2")
-            case other => fail("GET reply", other)
-          }
-        }
-        case None => throw new java.io.IOException(s"GET error: $m")
-      }
+      case Err(m) => onRedirectTarget(c, m, "GET", where)(read(_, " after redirect"))
       case other => fail("GET reply", other)
     }
+    read(c, "")
+  }
 
   /** Batched point lookups — one round trip for the whole batch.
     * Follows ONE cluster redirect for the whole batch: the partition
@@ -163,11 +158,7 @@ object RedisCommands {
           if (values.size != keyCount) throw new java.io.IOException(
             s"MGET$where returned ${values.size} values for $keyCount keys")
         } else RespCodec.decodeFrame(buf, start, end) match {
-          case Err(m) => redirectTarget(m) match {
-            case Some((h, p, ask)) if where.isEmpty =>
-              onRedirectTarget(h, p, ask, c.link)(read(_, " after redirect"))
-            case _ => throw new java.io.IOException(s"MGET error$where: $m")
-          }
+          case Err(m) => onRedirectTarget(c, m, "MGET", where)(read(_, " after redirect"))
           case other => fail("MGET reply", other)
         }
       }
@@ -201,6 +192,89 @@ object RedisCommands {
     }
   }
 
+  private val Hgetall = "HGETALL".getBytes(UTF_8)
+
+  /** Appends `HGETALL key` to `cmd`, the key being `b[off, off + n)`. */
+  def hgetallCommand(cmd: RespCodec.CommandBuffer, b: Array[Byte], off: Int, n: Int): Unit = {
+    cmd.header(2)
+    cmd.bulk(Hgetall)
+    cmd.bulk(b, off, n)
+  }
+
+  /** The fields of a batch of HGETALL replies, as views: reply `j`'s are
+    * elements [from(j), to(j)) of view(j), each key followed by its value.
+    * Replies read in place share [[fields]], views into the receive
+    * buffer, valid until that connection reads again; a reply re-read on
+    * a redirect target is a view into a copy of its own.
+    */
+  final class HashReplies {
+    val fields = new RespCodec.ArrayView
+    private[RedisCommands] var views = new Array[RespCodec.ArrayView](0)
+    private[RedisCommands] var bounds = new Array[Int](0)
+    def view(j: Int): RespCodec.ArrayView = views(j)
+    def from(j: Int): Int = bounds(2 * j)
+    def to(j: Int): Int = bounds(2 * j + 1)
+  }
+
+  /** Batched HGETALL — one round trip for a whole SCAN page. `cmd` holds
+    * `keyCount` HGETALL commands (see [[hgetallCommand]]), the j-th for
+    * `key(j)`. The replies, RESP2 flat arrays or RESP3 maps, are read in
+    * place into `out` once all of them are buffered.
+    *
+    * A missing key is an empty hash, and so is a key of another type
+    * when `wrongTypeEmpty`: a pattern like user:* routinely matches mixed
+    * types, and dying on the first string key would make scan.type
+    * mandatory. A reply redirected by MOVED/ASK is re-read on its target,
+    * one key at a time, so an ASK target gets ASKING before each HGETALL.
+    * Any other error fails loudly.
+    *
+    * `next`, when given, goes out on `c` in the same write, behind the
+    * batch; its reply is left unread on `c`.
+    */
+  def hgetallView(c: RedisConnection, cmd: RespCodec.CommandBuffer, keyCount: Int,
+      out: HashReplies, key: Int => Array[Byte], wrongTypeEmpty: Boolean = true,
+      next: RespCodec.CommandBuffer = null): Unit = {
+    // reply j: the fields `v` holds from `from` on
+    def set(j: Int, v: RespCodec.ArrayView, from: Int): Unit = {
+      out.views(j) = v
+      out.bounds(2 * j) = from
+      out.bounds(2 * j + 1) = v.size
+    }
+    def read(j: Int, v: RespCodec.ArrayView, where: String)(buf: Array[Byte], start: Int, end: Int): Unit = {
+      val from = v.size
+      if (RespCodec.readMapReply(buf, start, end, v)) set(j, v, from)
+      else RespCodec.decodeFrame(buf, start, end) match {
+        case Err(m) if wrongTypeEmpty && m.startsWith("WRONGTYPE") => set(j, v, from)
+        case Err(m) => onRedirectTarget(c, m, "HGETALL", where) { rc =>
+          val one = new RespCodec.CommandBuffer()
+          val k = key(j)
+          hgetallCommand(one, k, 0, k.length)
+          rc.send(one)
+          // the target is read again for the next redirected reply: keep
+          // this one's bytes
+          rc.readFrame { (b, s, e) =>
+            val copy = java.util.Arrays.copyOfRange(b, s, e)
+            val own = new RespCodec.ArrayView
+            own.reset(copy)
+            read(j, own, " after redirect")(copy, 0, copy.length)
+          }
+        }
+        case other => fail("HGETALL reply", other)
+      }
+    }
+    if (out.views.length < keyCount) {
+      out.views = new Array[RespCodec.ArrayView](keyCount)
+      out.bounds = new Array[Int](2 * keyCount)
+    }
+    c.send(cmd, next)
+    var j = 0
+    c.readFrame({ (buf, start, end) =>
+      if (j == 0) out.fields.reset(buf)
+      read(j, out.fields, "")(buf, start, end)
+      j += 1
+    }, replies = keyCount)
+  }
+
   /** HGETALL → field map (RESP2 flat array or RESP3 map reply). Follows
     * one cluster redirect.
     *
@@ -211,42 +285,24 @@ object RedisCommands {
     * mixed-keyspace tolerance belongs only to the pattern/SCAN-driven
     * readers, where `user:*` routinely matches mixed types.
     */
-  def hgetall(c: RedisConnection, key: String): Map[String, String] = {
-    def parse(v: RespValue, afterRedirect: Boolean): Map[String, String] = v match {
-      case Arr(items) =>
-        items.grouped(2).collect {
-          case Vector(k: Bulk, value: Bulk) => k.text -> value.text
-        }.toMap
-      case Mp(entries) =>
-        entries.collect { case (k: Bulk, value: Bulk) => k.text -> value.text }.toMap
-      case Err(m) => redirectTarget(m) match {
-        case Some((h, p, ask)) if !afterRedirect =>
-          onRedirectTarget(h, p, ask, c.link)(rc => parse(rc.command("HGETALL", key), afterRedirect = true))
-        case _ => throw new java.io.IOException(s"HGETALL error: $m")
-      }
-      case other => fail("HGETALL reply", other)
-    }
-    parse(c.command("HGETALL", key), afterRedirect = false)
-  }
+  def hgetall(c: RedisConnection, key: String): Map[String, String] =
+    hgetallPipelined(c, Seq(key), wrongTypeEmpty = false).head
 
-  /** Batched HGETALL — one pipelined round trip for a whole SCAN page. */
-  def hgetallPipelined(c: RedisConnection, keys: Seq[String]): Seq[Map[String, String]] =
+  /** Batched HGETALL — one pipelined round trip for a whole SCAN page:
+    * [[hgetallView]] over `String` keys and fields.
+    */
+  def hgetallPipelined(c: RedisConnection, keys: Seq[String],
+      wrongTypeEmpty: Boolean = true): Seq[Map[String, String]] =
     if (keys.isEmpty) Nil
-    else c.pipeline(keys.map(k => Seq("HGETALL", k))).map {
-      case Arr(items) =>
-        items.grouped(2).collect {
-          case Vector(k: Bulk, v: Bulk) => k.text -> v.text
-        }.toMap
-      case Mp(entries) =>
-        entries.collect { case (k: Bulk, v: Bulk) => k.text -> v.text }.toMap
-      // a non-hash key answers WRONGTYPE on a real server: the readers'
-      // documented contract is "string-typed keys contribute an empty
-      // map", so realize it HERE (a pattern like user:* routinely
-      // matches mixed types; dying on the first string key would make
-      // scan.type mandatory). Any other error still fails loudly.
-      case Err(m) if m.startsWith("WRONGTYPE") => Map.empty[String, String]
-      case Err(m) => throw new java.io.IOException(s"HGETALL error: $m")
-      case other => fail("HGETALL reply", other)
+    else {
+      val bytes = keys.map(_.getBytes(UTF_8)).toVector
+      val cmd = new RespCodec.CommandBuffer()
+      bytes.foreach(k => hgetallCommand(cmd, k, 0, k.length))
+      val out = new HashReplies
+      hgetallView(c, cmd, keys.length, out, bytes, wrongTypeEmpty)
+      Vector.tabulate(keys.length) { j =>
+        (out.from(j) until out.to(j) by 2).map(i => out.view(j).string(i) -> out.view(j).string(i + 1)).toMap
+      }
     }
 
   /** One CLUSTER SLOTS range and the master node serving it. */

@@ -89,6 +89,8 @@ final class RedisConnection(val host: String, val port: Int, val link: RedisLink
   private var bufEnd = 0
   private var bufPos = 0
   private val walk = new RespCodec.FrameWalk
+  // where each frame of the replies being read starts and ends
+  private var bounds = new Array[Int](2)
 
   // AUTH before anything else (neither the reference nor plain PING
   // works on a requirepass/ACL server): "password" sends the RESP2
@@ -182,25 +184,35 @@ final class RedisConnection(val host: String, val port: Int, val link: RedisLink
   /** Read one complete reply, decoded into the [[RespValue]] ADT. */
   def readReply(): RespValue = readFrame(RespCodec.decodeFrame)
 
-  /** Waits until the next reply's whole frame is buffered — walking its
-    * headers as bytes arrive, re-reading the socket across fragmented
-    * frames — then hands `read` the buffer and the frame's bounds. RESP3
-    * pushes are skipped (see [[pushesIgnored]]). The frame counts as
-    * consumed, but its bytes stay where they are until the next read on
-    * this connection, so `read` may keep views into them until then.
+  /** Waits until the next `replies` replies' whole frames are buffered —
+    * walking their headers as bytes arrive, re-reading the socket across
+    * fragmented frames — then hands `read` the buffer and each frame's
+    * bounds, in order, and returns what it returns for the last. RESP3
+    * pushes are skipped (see [[pushesIgnored]]). The frames count as
+    * consumed, but their bytes stay where they are until the next read on
+    * this connection, so `read` may keep views into any of them until then.
     */
-  @annotation.tailrec
-  private[graft] def readFrame[T](read: (Array[Byte], Int, Int) => T): T = {
-    walk.reset(bufPos)
-    var end = walk.advance(buf, bufEnd)
-    while (end < 0) { fill(); end = walk.advance(buf, bufEnd) }
+  private[graft] def readFrame[T](read: (Array[Byte], Int, Int) => T, replies: Int = 1): T = {
+    if (bounds.length < 2 * replies) bounds = new Array[Int](2 * replies)
+    // offsets from bufPos, which a refill may move
+    var at = 0
+    var i = 0
+    while (i < replies) {
+      walk.reset(bufPos + at)
+      var end = walk.advance(buf, bufEnd)
+      while (end < 0) { fill(); end = walk.advance(buf, bufEnd) }
+      // RESP3 out-of-band push: not the reply to anything — skip it
+      if (resp3 && buf(bufPos + at) == '>') pushesIgnored += 1
+      else { bounds(2 * i) = at; bounds(2 * i + 1) = end - bufPos; i += 1 }
+      at = end - bufPos
+    }
     val start = bufPos
-    bufPos = end
+    bufPos += at
     if (bufPos == bufEnd) { bufPos = 0; bufEnd = 0 } // cheap compaction
-    // RESP3 out-of-band push: not the reply to anything — skip it and
-    // keep reading
-    if (resp3 && buf(start) == '>') { pushesIgnored += 1; readFrame(read) }
-    else read(buf, start, end)
+    var last = read(buf, start + bounds(0), start + bounds(1))
+    i = 1
+    while (i < replies) { last = read(buf, start + bounds(2 * i), start + bounds(2 * i + 1)); i += 1 }
+    last
   }
 
   private def fill(): Unit = {

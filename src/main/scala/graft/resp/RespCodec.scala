@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * payloads, allocates nothing, and resumes where it stopped when more
   * bytes arrive. A reader therefore waits until a whole frame is buffered
   * and decodes it once, either with `decode` into the [[RespValue]] ADT or,
-  * for the two hot reply shapes (a SCAN page and an MGET array), with
-  * [[readScanReply]]/[[readArrayReply]] as views into the buffer. `decode`
+  * for the three hot reply shapes (a SCAN page, an MGET array and an
+  * HGETALL hash), with [[readScanReply]]/[[readArrayReply]]/[[readMapReply]]
+  * as views into the buffer. `decode`
   * itself returns `Incomplete` when the buffer ends mid-frame and starts
   * over from the frame's first byte on the next call. This fixes the
   * reference's single-`recv` fragmentation bug
@@ -277,7 +278,8 @@ object RespCodec {
     def isNil(i: Int): Boolean = lens(i) < 0
     def string(i: Int): String = new String(data, offs(i), lens(i), UTF_8)
 
-    private[RespCodec] def reset(b: Array[Byte]): Unit = { data = b; n = 0; bytes = 0L }
+    /** Empties the view, for elements read from `b`. */
+    def reset(b: Array[Byte]): Unit = { data = b; n = 0; bytes = 0L }
     private[RespCodec] def add(off: Int, len: Int): Unit = {
       if (n == offs.length) {
         offs = java.util.Arrays.copyOf(offs, n * 2)
@@ -330,17 +332,20 @@ object RespCodec {
     private def truncated(): Nothing = throw new ProtocolException("RESP frame truncated")
   }
 
-  /** Reads the array at `r` into `view`: bulk elements, plus `+simple`
-    * ones when `simple`, or nils (`$-1`, `*-1`, `_`) when `nils`. False
-    * when the reply is anything else.
+  /** Reads the array at `r` into `view`, behind the elements it holds:
+    * bulk elements, plus `+simple` ones when `simple`, or nils (`$-1`,
+    * `*-1`, `_`) when `nils`. With `maps`, a RESP3 `%` map of m pairs reads
+    * as its 2m keys and values, and a `*` array must have an even length.
+    * False when the reply is anything else.
     */
-  private def readArray(r: InPlace, buf: Array[Byte], view: ArrayView,
-      simple: Boolean, nils: Boolean): Boolean = {
-    if (r.peek() != '*') return false
-    val n = r.length()
-    if (n < 0) return false
-    view.reset(buf)
-    var i = 0
+  private def readArray(r: InPlace, view: ArrayView, simple: Boolean, nils: Boolean,
+      maps: Boolean = false): Boolean = {
+    val t = r.peek()
+    if (t != '*' && !(maps && t == '%')) return false
+    val m = r.length()
+    if (m < 0 || (maps && t == '*' && m % 2 != 0)) return false
+    val n = if (t == '%') 2L * m else m.toLong
+    var i = 0L
     while (i < n) {
       (r.peek(): @annotation.switch) match {
         case '$' =>
@@ -377,15 +382,29 @@ object RespCodec {
         new String(buf, r.lineStart, r.lineEnd - r.lineStart, UTF_8)
       case _ => return null
     }
-    if (readArray(r, buf, keys, simple = true, nils = false)) cursor else null
+    keys.reset(buf)
+    if (readArray(r, keys, simple = true, nils = false)) cursor else null
   }
 
   /** Reads the whole frame `buf[start, end)` as an MGET reply, an array
     * of bulk strings and nils, into `values` as views. False when the
     * frame has another shape; the caller decodes it to report it.
     */
-  def readArrayReply(buf: Array[Byte], start: Int, end: Int, values: ArrayView): Boolean =
-    readArray(new InPlace(buf, start, end), buf, values, simple = false, nils = true)
+  def readArrayReply(buf: Array[Byte], start: Int, end: Int, values: ArrayView): Boolean = {
+    values.reset(buf)
+    readArray(new InPlace(buf, start, end), values, simple = false, nils = true)
+  }
+
+  /** Reads the whole frame `buf[start, end)` as an HGETALL reply, a RESP2
+    * flat array of 2m bulk strings or a RESP3 map of m pairs, appending
+    * its fields to `fields` (reset to `buf`) as views: each key, then its
+    * value. False when the frame has another shape (an error reply
+    * appends nothing); the caller decodes it to report it.
+    */
+  def readMapReply(buf: Array[Byte], start: Int, end: Int, fields: ArrayView): Boolean = {
+    require(fields.buf eq buf, "fields must be reset to the buffer read")
+    readArray(new InPlace(buf, start, end), fields, simple = false, nils = false, maps = true)
+  }
 
   /** Decode the whole frame `buf[start, end)` that a [[FrameWalk]] found. */
   def decodeFrame(buf: Array[Byte], start: Int, end: Int): RespValue =

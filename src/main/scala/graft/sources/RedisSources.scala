@@ -43,9 +43,18 @@ object RedisSources {
   val KvSchema: StructType = StructType(Seq(
     StructField("key", StringType, nullable = false),
     StructField("value", StringType, nullable = true)))
+  val FieldsType: MapType = MapType(StringType, StringType, valueContainsNull = false)
   val HashSchema: StructType = StructType(Seq(
     StructField("key", StringType, nullable = false),
-    StructField("fields", MapType(StringType, StringType, valueContainsNull = false), nullable = false)))
+    StructField("fields", FieldsType, nullable = false)))
+
+  /** What a keyspace read fetches for each key it scans, as which source
+    * and schema; every kind runs the same table, scan and page loop.
+    */
+  sealed abstract class ValueKind(val source: String, val schema: StructType)
+  case object KeysOnly extends ValueKind("redis-scan", ScanSchema)
+  case object StringValues extends ValueKind("redis-kv", KvSchema)
+  case object HashFields extends ValueKind("redis-hash", HashSchema)
 
   final case class Options(host: String, port: Int, pattern: String, count: Int,
       partitionPatterns: Seq[String], slots: Int, clusterMode: Boolean,
@@ -241,21 +250,17 @@ object RedisSources {
 // ---------------------------------------------------------------------------
 // providers
 
-class RedisScanProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "redis-scan"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.ScanSchema
+/** One provider per [[RedisSources.ValueKind]]. */
+class RedisProvider(kind: RedisSources.ValueKind) extends TableProvider with DataSourceRegister {
+  override def shortName(): String = kind.source
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = kind.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new RedisTable(fetchValues = false, RedisSources.parseOptions(properties))
+    new RedisTable(kind, RedisSources.parseOptions(properties))
 }
 
-class RedisKvProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "redis-kv"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.KvSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new RedisTable(fetchValues = true, RedisSources.parseOptions(properties))
-}
+class RedisScanProvider extends RedisProvider(RedisSources.KeysOnly)
+class RedisKvProvider extends RedisProvider(RedisSources.StringValues)
 
 /** Hash-typed keys as rows: SCAN pages resolved with one pipelined
   * HGETALL batch per page → (key, fields MAP<STRING,STRING>). The MapType
@@ -266,113 +271,22 @@ class RedisKvProvider extends TableProvider with DataSourceRegister {
   * WRONGTYPE — callers scope the pattern to hash keys, same contract as
   * the reference docs).
   */
-class RedisHashProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "redis-hash"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.HashSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val opts = RedisSources.parseOptions(properties)
-    new Table with SupportsRead {
-      override def name(): String = s"redis-hash(${opts.host}:${opts.port}, ${opts.pattern})"
-      override def schema(): StructType = RedisSources.HashSchema
-      override def capabilities(): util.Set[TableCapability] =
-        util.EnumSet.of(TableCapability.BATCH_READ)
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new ScanBuilder with SupportsPushDownFilters {
-          private var pushedGlob: Option[String] = None
-          private var pushedArr: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-          override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-              : Array[org.apache.spark.sql.sources.Filter] = {
-            // same one-glob MATCH pushdown as the scan/kv sources
-            val canPush = opts.pattern == "*" && opts.partitionPatterns.isEmpty && opts.slots <= 1
-            if (canPush) {
-              val (tr, rest) = filters.partition(f =>
-                RedisSources.filterToGlob("key", f).isDefined)
-              tr.headOption.foreach(f => pushedGlob = RedisSources.filterToGlob("key", f))
-              pushedArr = tr.take(1)
-              rest ++ tr.drop(1)
-            } else { pushedArr = Array.empty; filters }
-          }
-          override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushedArr
-
-          override def build(): Scan = new Scan with Batch {
-            override def readSchema(): StructType = RedisSources.HashSchema
-            override def description(): String =
-              s"RedisHashScan(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count})"
-            override def toBatch: Batch = this
-            override def planInputPartitions(): Array[InputPartition] =
-              opts.partitions(pushedGlob, None, None)
-            override def createReaderFactory(): PartitionReaderFactory =
-              (partition: InputPartition) =>
-                new RedisHashPartitionReader(partition.asInstanceOf[RedisInputPartition])
-          }
-        }
-    }
-  }
-}
-
-class RedisHashPartitionReader(p: RedisInputPartition)
-    extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-
-  private val conn = new RedisConnection(p.host, p.port, p.link)
-  private var cursor = "0"
-  private var patternIdx = 0
-  private var done = false
-  private var batch: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (!batch.hasNext && !done) {
-      val (next, keys) = RedisCommands.scanPage(conn, cursor, p.patterns(patternIdx), p.count, p.scanType)
-      cursor = next
-      if (cursor == "0") {
-        patternIdx += 1
-        cursor = "0"
-        if (patternIdx >= p.patterns.length) done = true
-      }
-      if (keys.nonEmpty) {
-        val maps = RedisCommands.hgetallPipelined(conn, keys)
-        batch = keys.iterator.zip(maps.iterator).map { case (k, m) =>
-          val sorted = m.toSeq.sortBy(_._1) // deterministic field order
-          InternalRow(UTF8String.fromString(k),
-            ArrayBasedMapData(
-              sorted.map(e => UTF8String.fromString(e._1)).toArray,
-              sorted.map(e => UTF8String.fromString(e._2)).toArray))
-        }
-      }
-    }
-    if (batch.hasNext) { current = batch.next(); true }
-    else {
-      if (!guarded) { // cluster mode: reshard-during-scan fails loudly
-        guarded = true
-        RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
-      }
-      false
-    }
-  }
-  private var guarded = false
-
-  override def get(): InternalRow = current
-  override def close(): Unit = conn.close()
-}
+class RedisHashProvider extends RedisProvider(RedisSources.HashFields)
 
 // ---------------------------------------------------------------------------
 // table / scan
 
-class RedisTable(fetchValues: Boolean, opts: RedisSources.Options)
+class RedisTable(kind: RedisSources.ValueKind, opts: RedisSources.Options)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String =
-    s"redis-${if (fetchValues) "kv" else "scan"}(${opts.host}:${opts.port}, ${opts.pattern})"
-  override def schema(): StructType =
-    if (fetchValues) RedisSources.KvSchema else RedisSources.ScanSchema
+  private val writable = kind == RedisSources.StringValues
+  override def name(): String = s"${kind.source}(${opts.host}:${opts.port}, ${opts.pattern})"
+  override def schema(): StructType = kind.schema
   override def capabilities(): util.Set[TableCapability] =
-    if (fetchValues) util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    if (writable) util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
     else util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RedisScanBuilder(fetchValues, opts)
+    new RedisScanBuilder(kind, opts)
 
   /** Write path (kv mode): `df.write.format("redis-kv").mode("append")` —
     * each partition pipelines SET commands in `scan.count`-sized batches
@@ -383,7 +297,7 @@ class RedisTable(fetchValues: Boolean, opts: RedisSources.Options)
     */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(fetchValues, "redis-scan is read-only; write with format(\"redis-kv\")")
+    require(writable, s"${kind.source} is read-only; write with format(\"redis-kv\")")
     val schema = info.schema()
     require(schema.fieldNames.toSeq == Seq("key", "value"),
       s"redis-kv write expects columns (key, value), got ${schema.fieldNames.mkString(",")}")
@@ -462,10 +376,10 @@ class RedisDataWriterFactory(host: String, port: Int, batchSize: Int,
     }
 }
 
-class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
+class RedisScanBuilder(kind: RedisSources.ValueKind, opts: RedisSources.Options)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownLimit with SupportsPushDownTopN {
-  private val keyCol = if (fetchValues) "key" else "key_name"
+  private val keyCol = kind.schema.fieldNames.head
   private var pushedGlob: Option[String] = None
   private var pushed: Array[Filter] = Array.empty
   private var pushedLimit: Option[Int] = None
@@ -501,7 +415,7 @@ class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
     * n×partitions survivors.
     */
   override def pushTopN(orders: Array[SortOrder], limit: Int): Boolean = {
-    val sortable = !fetchValues && orders.length == 1 && (orders(0).expression() match {
+    val sortable = kind == RedisSources.KeysOnly && orders.length == 1 && (orders(0).expression() match {
       case f: NamedReference => f.fieldNames().sameElements(Array(keyCol))
       case _ => false
     })
@@ -514,24 +428,25 @@ class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan =
-    new RedisScan(fetchValues, opts, pushedGlob, pushedLimit, pushedTopN)
+    new RedisScan(kind, opts, pushedGlob, pushedLimit, pushedTopN)
 }
 
-class RedisScan(fetchValues: Boolean, opts: RedisSources.Options, pushedGlob: Option[String],
+class RedisScan(kind: RedisSources.ValueKind, opts: RedisSources.Options, pushedGlob: Option[String],
     pushedLimit: Option[Int], pushedTopN: Option[RedisSources.TopN])
     extends Scan with Batch {
-  override def readSchema(): StructType =
-    if (fetchValues) RedisSources.KvSchema else RedisSources.ScanSchema
+  override def readSchema(): StructType = kind.schema
   override def description(): String = {
     val extras = pushedTopN.map(t => s", topN=${t.n} ${if (t.ascending) "ASC" else "DESC"}")
       .orElse(pushedLimit.map(l => s", limit=$l")).getOrElse("")
     s"RedisScan(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count}$extras)"
   }
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    opts.partitions(pushedGlob, pushedLimit, pushedTopN)
+  // planned once per scan: Spark asks again for each copy of the scan
+  // node, and in cluster mode each plan is a CLUSTER SLOTS round trip
+  private lazy val partitions = opts.partitions(pushedGlob, pushedLimit, pushedTopN)
+  override def planInputPartitions(): Array[InputPartition] = partitions
   override def createReaderFactory(): PartitionReaderFactory =
-    new RedisReaderFactory(fetchValues)
+    new RedisReaderFactory(kind)
 }
 
 /** One partition = one connection running one SCAN cursor per pattern in
@@ -549,7 +464,7 @@ final case class RedisInputPartition(host: String, port: Int, patterns: Seq[Stri
     scanType: Option[String] = None)
     extends InputPartition
 
-class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
+class RedisReaderFactory(kind: RedisSources.ValueKind) extends PartitionReaderFactory {
   /** Only pushed-topN partitions read rows; see [[supportColumnarReads]]. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RedisInputPartition]
@@ -558,10 +473,11 @@ class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
   }
 
   /** Columnar handoff (SURVEY §1.1 optimization item, completed r17):
-    * key scans AND kv scans emit one ColumnarBatch per SCAN page, so
+    * key, kv AND hash scans emit one ColumnarBatch per SCAN page, so
     * Spark's codegen'd ColumnarToRow consumes vectors instead of
     * row-at-a-time InternalRows — kv pages resolve with ONE pipelined
-    * MGET, missing keys landing as vector nulls. Only pushed-topN
+    * MGET, missing keys landing as vector nulls, and hash pages with one
+    * write of HGETALLs into a map column. Only pushed-topN
     * (bounded heap with cross-page state) keeps the row reader.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
@@ -569,7 +485,7 @@ class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[RedisInputPartition]
-    new RedisColumnarPartitionReader(p, fetchValues)
+    new RedisColumnarPartitionReader(p, kind)
   }
 }
 
@@ -579,18 +495,22 @@ class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
   * Each page becomes one ColumnarBatch: one string vector for key-only
   * scans; in kv mode the page is resolved with one pipelined MGET (the
   * batched replacement for the reference's per-row GET, SURVEY §3.3) into
-  * a (key, value) pair of vectors, with null-slot misses; the next
-  * page's SCAN goes out in the same write as the MGET, so a kv page also
-  * costs one round trip.
+  * a (key, value) pair of vectors, with null-slot misses, and in hash
+  * mode with one HGETALL per key into a [[RedisMapColumn]]; the next
+  * page's SCAN goes out in the same write, so such a page also costs one
+  * round trip.
   *
-  * Both replies are read in place from the connection's receive buffer,
-  * and each key and value byte is copied once, into a
-  * [[RedisStringColumn]] sized to the reply's payload. The MGET command
-  * is encoded from the page's key bytes in that buffer.
+  * All replies are read in place from the connection's receive buffer,
+  * and each key, value and field byte is copied once, into a
+  * [[RedisStringColumn]] sized to the reply's payload. The MGET and
+  * HGETALL commands are encoded from the page's key bytes in that buffer.
   */
-class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
+class RedisColumnarPartitionReader(p: RedisInputPartition, kind: RedisSources.ValueKind)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+
+  def this(p: RedisInputPartition, fetchValues: Boolean) =
+    this(p, if (fetchValues) RedisSources.StringValues else RedisSources.KeysOnly)
 
   private val conn = new RedisConnection(p.host, p.port, p.link)
   private var cursor = "0"
@@ -601,11 +521,13 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
   // one page's keys and values, as views into the receive buffer
   private val keys = new RespCodec.ArrayView
   private val values = new RespCodec.ArrayView
-  private val mget = new RespCodec.CommandBuffer()
+  private val hashes = new RedisCommands.HashReplies
+  private val fetch = new RespCodec.CommandBuffer()
   // page index of each key in the batch
   private var kept = new Array[Int](0)
-  // the next page's SCAN; in kv mode it goes out behind the page's MGET,
-  // so that a page costs one round trip, and is then in flight
+  // the next page's SCAN; in kv and hash mode it goes out behind the
+  // page's value fetch, so that a page costs one round trip, and is then
+  // in flight
   private val scan = new RespCodec.CommandBuffer()
   private var scanInFlight = false
 
@@ -628,7 +550,7 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
         val keyVec = new RedisStringColumn(keys.size, keys.payload)
         val n = takeKeys(keyVec)
         if (n > 0) current = new ColumnarBatch(
-          if (fetchValues) Array(keyVec, fetchValueVector(n)) else Array(keyVec), n)
+          if (kind == RedisSources.KeysOnly) Array(keyVec) else Array(keyVec, valueColumn(n, keyVec)), n)
       }
       if (remaining <= 0) { done = true; limitHit = true } // pushed LIMIT satisfied
       if (current != null) return true
@@ -679,24 +601,31 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
     n
   }
 
-  /** MGETs the batch's `n` keys, encoding the command from their bytes in
-    * the receive buffer, and copies the values into a vector; a nil
-    * (missing or expired key) is a null. The next page's SCAN shares the
-    * write unless this page ends the walk or fills a pushed LIMIT.
+  /** Fetches the batch's `n` values — one MGET, or one HGETALL per key —
+    * encoding the commands from the keys' bytes in the receive buffer, and
+    * copies them into a column; a nil (missing or expired key) is a null.
+    * The next page's SCAN shares the write unless this page ends the walk
+    * or fills a pushed LIMIT.
     */
-  private def fetchValueVector(n: Int): RedisStringColumn = {
-    mget.clear()
-    mget.header(n + 1)
-    mget.bulk("MGET")
+  private def valueColumn(n: Int, keyVec: RedisStringColumn): ColumnVector = {
+    val strings = kind == RedisSources.StringValues
+    fetch.clear()
+    if (strings) { fetch.header(n + 1); fetch.bulk("MGET") }
     var j = 0
     while (j < n) {
       val i = kept(j)
-      mget.bulk(keys.buf, keys.offset(i), keys.length(i))
+      if (strings) fetch.bulk(keys.buf, keys.offset(i), keys.length(i))
+      else RedisCommands.hgetallCommand(fetch, keys.buf, keys.offset(i), keys.length(i))
       j += 1
     }
     scanInFlight = !done && remaining > 0
     if (scanInFlight) encodeScan()
-    RedisCommands.mgetView(conn, mget, n, values, if (scanInFlight) scan else null)
+    val next = if (scanInFlight) scan else null
+    if (!strings) {
+      RedisCommands.hgetallView(conn, fetch, n, hashes, keyVec.getBinary, next = next)
+      return new RedisMapColumn(hashes, n)
+    }
+    RedisCommands.mgetView(conn, fetch, n, values, next)
     val vec = new RedisStringColumn(n, values.payload)
     val buf = values.buf
     j = 0
@@ -716,6 +645,26 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
   }
 }
 
+/** A read-only column of one page: a getter of another type throws. */
+abstract class RedisColumn(dt: DataType) extends org.apache.spark.sql.vectorized.ColumnVector(dt) {
+  override def close(): Unit = ()
+
+  private def unsupported: Nothing = throw new UnsupportedOperationException(s"a ${dt.simpleString} column")
+  override def getBoolean(row: Int): Boolean = unsupported
+  override def getByte(row: Int): Byte = unsupported
+  override def getShort(row: Int): Short = unsupported
+  override def getInt(row: Int): Int = unsupported
+  override def getLong(row: Int): Long = unsupported
+  override def getFloat(row: Int): Float = unsupported
+  override def getDouble(row: Int): Double = unsupported
+  override def getDecimal(row: Int, precision: Int, scale: Int): Decimal = unsupported
+  override def getUTF8String(row: Int): UTF8String = unsupported
+  override def getBinary(row: Int): Array[Byte] = unsupported
+  override def getArray(row: Int): org.apache.spark.sql.vectorized.ColumnarArray = unsupported
+  override def getMap(row: Int): org.apache.spark.sql.vectorized.ColumnarMap = unsupported
+  override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector = unsupported
+}
+
 /** A string column of `rows` rows over one byte array sized to the
   * `payload` bytes they hold in all: row `i` is
   * `data[offsets(i), offsets(i) + lengths(i))`, and a negative length is
@@ -723,8 +672,7 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
   * (Spark's `OnHeapColumnVector` grows its byte array by doubling, and
   * each growth also reallocates a null-flag array of the same size.)
   */
-final class RedisStringColumn(rows: Int, payload: Long)
-    extends org.apache.spark.sql.vectorized.ColumnVector(StringType) {
+final class RedisStringColumn(rows: Int, payload: Long) extends RedisColumn(StringType) {
   private val data = new Array[Byte](Math.toIntExact(payload))
   private val offsets = new Array[Int](rows)
   private val lengths = new Array[Int](rows)
@@ -746,20 +694,72 @@ final class RedisStringColumn(rows: Int, payload: Long)
     if (lengths(row) < 0) null else UTF8String.fromBytes(data, offsets(row), lengths(row))
   override def getBinary(row: Int): Array[Byte] =
     if (lengths(row) < 0) null else java.util.Arrays.copyOfRange(data, offsets(row), offsets(row) + lengths(row))
-  override def close(): Unit = ()
+}
 
-  private def notString: Nothing = throw new UnsupportedOperationException("a string column")
-  override def getBoolean(row: Int): Boolean = notString
-  override def getByte(row: Int): Byte = notString
-  override def getShort(row: Int): Short = notString
-  override def getInt(row: Int): Int = notString
-  override def getLong(row: Int): Long = notString
-  override def getFloat(row: Int): Float = notString
-  override def getDouble(row: Int): Double = notString
-  override def getDecimal(row: Int, precision: Int, scale: Int): Decimal = notString
-  override def getArray(row: Int): org.apache.spark.sql.vectorized.ColumnarArray = notString
-  override def getMap(row: Int): org.apache.spark.sql.vectorized.ColumnarMap = notString
-  override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector = notString
+/** The MAP<STRING, STRING> column of `rows` HGETALL replies: row `j`'s
+  * entries are rows [offsets(j), offsets(j + 1)) of a key and a value
+  * [[RedisStringColumn]], in Spark's StringType order of the keys (UTF-8
+  * binary). Each field byte is copied in once, here.
+  */
+final class RedisMapColumn(h: RedisCommands.HashReplies, rows: Int)
+    extends RedisColumn(RedisSources.FieldsType) {
+  private val offsets = new Array[Int](rows + 1)
+  private val (keys, values) = {
+    var keyBytes, valueBytes = 0L
+    for (j <- 0 until rows) {
+      var i = h.from(j)
+      while (i < h.to(j)) { keyBytes += h.view(j).length(i); valueBytes += h.view(j).length(i + 1); i += 2 }
+      offsets(j + 1) = offsets(j) + (h.to(j) - h.from(j)) / 2
+    }
+    (new RedisStringColumn(offsets(rows), keyBytes), new RedisStringColumn(offsets(rows), valueBytes))
+  }
+  locally {
+    // each row's key indices, sorted by the keys' bytes, unsigned
+    val order, scratch = new Array[Int](offsets(rows))
+    for (j <- 0 until rows) {
+      val v = h.view(j)
+      var k = offsets(j)
+      while (k < offsets(j + 1)) { order(k) = h.from(j) + 2 * (k - offsets(j)); k += 1 }
+      RedisMapColumn.sortByKey(v, order, scratch, offsets(j), offsets(j + 1))
+      k = offsets(j)
+      while (k < offsets(j + 1)) {
+        keys.put(k, v.buf, v.offset(order(k)), v.length(order(k)))
+        values.put(k, v.buf, v.offset(order(k) + 1), v.length(order(k) + 1))
+        k += 1
+      }
+    }
+  }
+
+  override def isNullAt(row: Int): Boolean = false
+  override def hasNull(): Boolean = false
+  override def numNulls(): Int = 0
+  override def getMap(row: Int): org.apache.spark.sql.vectorized.ColumnarMap =
+    new org.apache.spark.sql.vectorized.ColumnarMap(keys, values, offsets(row), offsets(row + 1) - offsets(row))
+}
+
+object RedisMapColumn {
+  /** Merge-sorts the key indices `idx[from, to)` into `v` through
+    * `scratch`, by the keys' bytes, unsigned: UTF-8 binary order.
+    */
+  private def sortByKey(v: RespCodec.ArrayView, idx: Array[Int], scratch: Array[Int], from: Int, to: Int): Unit =
+    if (to - from > 1) {
+      val mid = (from + to) >>> 1
+      sortByKey(v, idx, scratch, from, mid)
+      sortByKey(v, idx, scratch, mid, to)
+      System.arraycopy(idx, from, scratch, from, to - from)
+      var a = from
+      var b = mid
+      var k = from
+      while (k < to) {
+        if (b == to || (a < mid && compareKeys(v, scratch(a), scratch(b)) <= 0)) { idx(k) = scratch(a); a += 1 }
+        else { idx(k) = scratch(b); b += 1 }
+        k += 1
+      }
+    }
+
+  private def compareKeys(v: RespCodec.ArrayView, x: Int, y: Int): Int =
+    java.util.Arrays.compareUnsigned(v.buf, v.offset(x), v.offset(x) + v.length(x),
+      v.buf, v.offset(y), v.offset(y) + v.length(y))
 }
 
 /** Pushed ORDER BY key LIMIT n, the one mode that reads rows: SCAN order

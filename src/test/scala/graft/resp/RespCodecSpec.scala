@@ -287,4 +287,38 @@ class RespCodecSpec extends AnyFunSuite {
         keys.map { case b: Bulk => b.bytes.toSeq; case Simple(s) => s.getBytes(UTF_8).toSeq; case o => fail(o.toString) })
     }
   }
+
+  test("property: in-place HGETALL reads of RESP2 arrays and RESP3 % maps yield decode's fields") {
+    def bytes(v: RespValue): Seq[Byte] = v match { case b: Bulk => b.bytes.toSeq; case o => fail(o.toString) }
+    forAllSampled(Gen.choose(0, 20).flatMap(Gen.listOfN(_, Gen.zip(genPayload, genPayload)))) { pairs =>
+      val flat = Arr(pairs.flatMap { case (k, v) => Seq(Bulk(k), Bulk(v)) }.toVector)
+      val map = Mp(pairs.map { case (k, v) => (Bulk(k): RespValue, Bulk(v): RespValue) }.toVector)
+      // both replies back to back in one buffer, read into one view
+      val first = RespCodec.encode(flat)
+      val wire = first ++ RespCodec.encode(map)
+      val view = new RespCodec.ArrayView
+      view.reset(wire)
+      assert(RespCodec.readMapReply(wire, 0, first.length, view))
+      assert(RespCodec.readMapReply(wire, first.length, wire.length, view))
+      val read = (0 until view.size).map(i =>
+        java.util.Arrays.copyOfRange(view.buf, view.offset(i), view.offset(i) + view.length(i)).toSeq)
+      val fromArray = decodeAll(first) match { case Arr(items) => items.map(bytes); case o => fail(o.toString) }
+      val fromMap = decodeAll(RespCodec.encode(map)) match {
+        case Mp(es) => es.flatMap { case (k, v) => Seq(bytes(k), bytes(v)) }
+        case o => fail(o.toString)
+      }
+      assert(read == fromArray ++ fromMap)
+      assert(view.payload == pairs.map { case (k, v) => k.length + v.length }.sum * 2L)
+    }
+    // other shapes: an error appends nothing; an odd array, a nil or a
+    // non-bulk field is not a hash
+    Seq("-WRONGTYPE no\r\n", "*1\r\n$1\r\na\r\n", "*-1\r\n", "%1\r\n$1\r\na\r\n:1\r\n", "_\r\n")
+      .foreach { wire =>
+        val b = wire.getBytes(UTF_8)
+        val view = new RespCodec.ArrayView
+        view.reset(b)
+        assert(!RespCodec.readMapReply(b, 0, b.length, view), wire)
+        if (wire.startsWith("-")) assert(view.size == 0)
+      }
+  }
 }

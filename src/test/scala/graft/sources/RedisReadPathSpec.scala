@@ -8,7 +8,7 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.resp.RespCodec
+import graft.resp.{RespCodec, RespValue}
 import graft.resp.RespValue._
 
 /** The columnar reader against a reply far larger than the 16 KiB
@@ -18,7 +18,8 @@ import graft.resp.RespValue._
 class RedisReadPathSpec extends AnyFunSuite {
 
   /** A RESP stub that answers each command (its arguments' bytes) with
-    * `reply`, written in random 1 B–4 KiB chunks.
+    * `reply`, written in random 1 B–4 KiB chunks; a null reply closes the
+    * connection instead.
     */
   private final class ChunkedStub(reply: Seq[Array[Byte]] => Array[Byte], seed: Long)
       extends AutoCloseable {
@@ -48,7 +49,9 @@ class RedisReadPathSpec extends AnyFunSuite {
             received.add((args.head match { case b: Bulk => b.text; case o => o.toString }, next < end))
             System.arraycopy(buf, next, buf, 0, end - next)
             end -= next
-            chunked(out, reply(args.map { case b: Bulk => b.bytes; case o => fail(s"argument $o") }))
+            val bytes = reply(args.map { case b: Bulk => b.bytes; case o => fail(s"argument $o") })
+            if (bytes == null) return
+            chunked(out, bytes)
           case RespCodec.Decoded(v, _) => fail(s"not a command: $v")
           case RespCodec.Incomplete =>
             if (end == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
@@ -194,6 +197,163 @@ class RedisReadPathSpec extends AnyFunSuite {
         RedisInputPartition("127.0.0.1", stub.port, Seq("*"), 10), fetchValues = true)
       try assert(intercept[java.io.IOException](reader.next()).getMessage.contains(message))
       finally { reader.close(); stub.close() }
+    }
+  }
+
+  /** The map column's entries of row `i`, as (key, value) bytes. */
+  private def entries(col: org.apache.spark.sql.vectorized.ColumnVector, i: Int): Seq[(Seq[Byte], Seq[Byte])] = {
+    val m = col.getMap(i)
+    (0 until m.numElements()).map(k =>
+      (m.keyArray().getUTF8String(k).getBytes.toSeq, m.valueArray().getUTF8String(k).getBytes.toSeq))
+  }
+
+  test("a >1 MB HGETALL batch in random 1 B-4 KiB chunks, with pushes between replies, reaches the map column byte for byte") {
+    val rnd = new Random(13)
+    val tricky = "\r\né✓😀".getBytes(UTF_8) ++ Array[Byte](-1, -64, -128, 13) // then invalid UTF-8
+    def randomBytes(len: Int): Array[Byte] = {
+      val v = new Array[Byte](len)
+      rnd.nextBytes(v)
+      if (len >= tricky.length) System.arraycopy(tricky, 0, v, rnd.nextInt(len - tricky.length + 1), tricky.length)
+      v
+    }
+    // key i is a string (WRONGTYPE) when i % 9 == 4, missing when
+    // i % 9 == 7, else a hash of up to 40 distinct fields
+    val n = 40
+    val hashes: Seq[Option[Seq[(Array[Byte], Array[Byte])]]] = (0 until n).map { i =>
+      if (i % 9 == 4) None
+      else if (i % 9 == 7) Some(Nil)
+      else Some((0 until rnd.nextInt(41)).map(_ => randomBytes(rnd.nextInt(12)))
+        .distinctBy(_.toSeq).map(f => (f, randomBytes(rnd.nextInt(6000)))))
+    }
+    assert(hashes.flatten.flatten.map(_._2.length.toLong).sum >= (1L << 20))
+    val keys = (0 until n).map(i => s"h:$i\r\né".getBytes(UTF_8) ++ Array[Byte](-2, i.toByte))
+    val byKey = keys.map(_.toSeq).zip(hashes).toMap
+    val push = RespCodec.encode(Push(Vector(Bulk("invalidate"), Arr(Vector(Bulk("x"))))))
+    val hgetallKeys = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Byte]]()
+    val stub = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "HELLO" => RespCodec.encode(Mp(Vector((Bulk("proto"), Int64(3)))))
+        case "SCAN" => RespCodec.encode(Arr(Vector(Bulk("0"), Arr(keys.map(Bulk(_)).toVector))))
+        case "HGETALL" =>
+          val k = args(1).toSeq
+          hgetallKeys.add(k)
+          val i = keys.indexWhere(_.toSeq == k)
+          val reply = byKey(k) match {
+            case None => RespCodec.encode(Err("WRONGTYPE Operation against a key holding the wrong kind of value"))
+            // RESP2 flat arrays and RESP3 maps alike
+            case Some(fs) if i % 2 == 0 => RespCodec.encode(Arr(fs.flatMap { case (f, v) => Vector(Bulk(f), Bulk(v)) }.toVector))
+            case Some(fs) => RespCodec.encode(Mp(fs.map { case (f, v) => (Bulk(f): RespValue, Bulk(v): RespValue) }.toVector))
+          }
+          if (i % 5 == 1) push ++ reply else reply
+      }
+    }, seed = 9)
+    val reader = new RedisColumnarPartitionReader(
+      RedisInputPartition("127.0.0.1", stub.port, Seq("h:*"), 2048, link = graft.net.RedisLink(resp3 = true)),
+      RedisSources.HashFields)
+    try {
+      assert(reader.next())
+      val batch = reader.get()
+      assert(batch.numRows() == n)
+      keys.indices.foreach { i =>
+        assert(batch.column(0).getUTF8String(i).getBytes.sameElements(keys(i)), s"key $i")
+        assert(!batch.column(1).isNullAt(i))
+        // fields in UTF-8 binary order of their names; a string key or a
+        // missing key is an empty map
+        val expected = hashes(i).getOrElse(Nil)
+          .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
+          .map { case (f, v) => (f.toSeq, v.toSeq) }
+        assert(entries(batch.column(1), i) == expected, s"hash $i")
+      }
+      assert(!reader.next())
+      assert(hgetallKeys.asScala.toSeq == keys.map(_.toSeq), "the HGETALLs must name the SCAN page's key bytes")
+      assert(stub.received.asScala.toSeq == Seq("HELLO" -> false, "SCAN" -> false) ++
+        Seq.fill(n - 1)("HGETALL" -> true) :+ ("HGETALL" -> false), "one write carries the page's HGETALLs")
+    } finally { reader.close(); stub.close() }
+  }
+
+  test("a hash page's HGETALLs carry the next page's SCAN in the same write; a pushed LIMIT stops the walk") {
+    val pages = Map("0" -> ("7", Seq("h:0", "h:1", "h:2")), "7" -> ("9", Seq("h:3", "h:4")), "9" -> ("0", Seq("h:5")))
+    def drain(limit: Option[Int]): (Seq[(String, Seq[(String, String)])], Seq[(String, Boolean)]) = {
+      val s = new ChunkedStub({ args =>
+        new String(args.head, UTF_8) match {
+          case "SCAN" =>
+            val (next, keys) = pages(new String(args(1), UTF_8))
+            RespCodec.encode(Arr(Vector(Bulk(next), Arr(keys.map(Bulk(_)).toVector))))
+          case "HGETALL" => RespCodec.encode(Arr(Vector(Bulk("f"), Bulk("v" + new String(args(1), UTF_8)))))
+        }
+      }, seed = 8)
+      val reader = new RedisColumnarPartitionReader(
+        RedisInputPartition("127.0.0.1", s.port, Seq("h:*"), 10, limit = limit), RedisSources.HashFields)
+      try {
+        val rows = Iterator.continually(reader.next()).takeWhile(identity).flatMap { _ =>
+          val b = reader.get()
+          (0 until b.numRows()).map(i => (b.column(0).getUTF8String(i).toString,
+            entries(b.column(1), i).map { case (f, v) => (new String(f.toArray, UTF_8), new String(v.toArray, UTF_8)) }))
+        }.toVector
+        (rows, s.received.asScala.toVector)
+      } finally { reader.close(); s.close() }
+    }
+    val (all, sent) = drain(None)
+    assert(all == (0 to 5).map(i => (s"h:$i", Seq("f" -> s"vh:$i"))))
+    assert(sent == Seq("SCAN" -> false, "HGETALL" -> true, "HGETALL" -> true, "HGETALL" -> true,
+      "SCAN" -> false, "HGETALL" -> true, "HGETALL" -> true, "SCAN" -> false, "HGETALL" -> false))
+    val (two, sentForTwo) = drain(Some(2))
+    assert(two == (0 to 1).map(i => (s"h:$i", Seq("f" -> s"vh:$i"))))
+    assert(sentForTwo == Seq("SCAN" -> false, "HGETALL" -> true, "HGETALL" -> false))
+  }
+
+  test("a connection closed inside an MGET reply or an HGETALL batch fails next(), never a short batch") {
+    // page 0 -> 7 -> 0; the page's values are cut short, then the
+    // connection closes when the next page's SCAN (sent in the same
+    // write) is read
+    val fetched = new java.util.concurrent.atomic.AtomicInteger(0)
+    def stub(valueReply: Array[Byte] => Array[Byte]) = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "SCAN" if new String(args(1), UTF_8) == "0" =>
+          RespCodec.encode(Arr(Vector(Bulk("7"), Arr(Vector(Bulk("k:0"), Bulk("k:1"), Bulk("k:2"))))))
+        case "SCAN" => null
+        case "MGET" => valueReply(RespCodec.encode(Arr(args.tail.map(k => Bulk(new String(k, UTF_8) * 400)).toVector)))
+        case "HGETALL" =>
+          // the second reply of the batch is cut, the third is a close
+          fetched.incrementAndGet() match {
+            case 1 => RespCodec.encode(Arr(Vector(Bulk("f"), Bulk("v" * 3000))))
+            case 2 => valueReply(RespCodec.encode(Arr(Vector(Bulk("f"), Bulk("v" * 3000)))))
+            case _ => null
+          }
+      }
+    }, seed = 4)
+    Seq(1, 100, 1201, -2).foreach { cut =>
+      Seq(RedisSources.StringValues, RedisSources.HashFields).foreach { kind =>
+        fetched.set(0)
+        val s = stub(r => r.take(if (cut < 0) r.length + cut else cut))
+        val reader = new RedisColumnarPartitionReader(RedisInputPartition("127.0.0.1", s.port, Seq("k:*"), 10), kind)
+        try intercept[java.io.IOException](reader.next())
+        finally { reader.close(); s.close() }
+      }
+    }
+  }
+
+  test("-LOADING or -BUSY in place of a SCAN page, an MGET or one HGETALL of a batch fails loudly, naming both") {
+    Seq("LOADING Redis is loading the dataset in memory",
+        "BUSY Redis is busy running a script. You can only call SCRIPT KILL or SHUTDOWN NOSAVE.").foreach { err =>
+      val errReply = RespCodec.encode(Err(err))
+      Seq(("SCAN", RedisSources.StringValues), ("MGET", RedisSources.StringValues), ("HGETALL", RedisSources.HashFields))
+        .foreach { case (failing, kind) =>
+          val s = new ChunkedStub({ args =>
+            new String(args.head, UTF_8) match {
+              case "SCAN" if failing == "SCAN" => errReply
+              case "SCAN" => RespCodec.encode(Arr(Vector(Bulk("0"), Arr(Vector(Bulk("k:0"), Bulk("k:1"), Bulk("k:2"))))))
+              case "MGET" => errReply
+              case "HGETALL" if new String(args(1), UTF_8) == "k:1" => errReply
+              case "HGETALL" => RespCodec.encode(Arr(Vector(Bulk("f"), Bulk("v"))))
+            }
+          }, seed = 6)
+          val reader = new RedisColumnarPartitionReader(RedisInputPartition("127.0.0.1", s.port, Seq("k:*"), 10), kind)
+          try {
+            val e = intercept[java.io.IOException](reader.next())
+            assert(e.getMessage.contains(s"$failing error: $err"), e.getMessage)
+          } finally { reader.close(); s.close() }
+        }
     }
   }
 }
