@@ -161,9 +161,9 @@ object GraftRedis {
   def trimStream(spark: SparkSession, key: String, maxLen: Long,
       approx: Boolean = true): Long = {
     val (host, port) = functions.RedduckFunctions.target(spark)
-    net.RedisConnection.withPooled(host, port,
-        net.RedisLink(functions.RedduckFunctions.sessionAuth(spark)))(c =>
-      net.RedisCommands.xtrim(c, key, maxLen, approx))
+    scala.util.Using.resource(new net.RedisConnection(host, port,
+        net.RedisLink(functions.RedduckFunctions.sessionAuth(spark))))(
+      net.RedisCommands.xtrim(_, key, maxLen, approx))
   }
 
   /** Redis Stream as a fault-tolerant Structured Streaming source:

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType, StructType}
+import org.apache.spark.sql.types.{MapType, StructField, StringType, StructType}
 
 import graft.net.{RedisCommands, RedisConnection, RedisLink}
 
@@ -13,8 +14,8 @@ import graft.net.{RedisCommands, RedisConnection, RedisLink}
   * by `redis_connect` (redduck_extension.cpp:44-52). Here connector
   * options are authoritative and `spark.redduck.host/port` session conf
   * provides defaults; `redis_connect` writes that conf from the driver
-  * (README-parity) while executors open their own pooled connections
-  * lazily (SURVEY §7.4 decision 1).
+  * (README-parity) while each task opens its own connection lazily
+  * (SURVEY §7.4 decision 1).
   */
 object RedduckFunctions {
 
@@ -89,31 +90,83 @@ object RedduckFunctions {
     Map("host" -> host, "port" -> port.toString) ++ sessionAuth(spark).map("password" -> _)
   }
 
+  /** The Redis connection of the task that evaluates a lookup: opened at
+    * its first use in the task, closed when the task completes. A closure
+    * that captures it is deserialized afresh for each task, so no
+    * connection serves two tasks; outside a task (driver-side constant
+    * folding, a local relation) each use opens and closes its own.
+    */
+  private final class TaskConnection(host: String, port: Int, link: RedisLink)
+      extends Serializable {
+    @transient private var task: TaskContext = _
+    @transient private var conn: RedisConnection = _
+
+    def apply[T](f: RedisConnection => T): T = TaskContext.get() match {
+      case null => scala.util.Using.resource(new RedisConnection(host, port, link))(f)
+      case tc =>
+        if (conn == null) {
+          val c = new RedisConnection(host, port, link)
+          tc.addTaskCompletionListener[Unit](_ => c.close())
+          conn = c
+          task = tc
+        } else if (tc ne task) throw new IllegalStateException(
+          s"the Redis connection to $host:$port of task ${task.taskAttemptId()} " +
+            s"was reached from task ${tc.taskAttemptId()}: a connection serves one task")
+        f(conn)
+    }
+  }
+
   /** Register the SQL-facing UDFs on a session. `redis_get`/`redis_hgetall`
     * capture the session's target at registration time (executor closures
     * cannot read driver conf).
     */
   def registerAll(spark: SparkSession): Unit = {
     val (host, port) = target(spark)
-    val link = RedisLink(sessionAuth(spark))
+    val conn = new TaskConnection(host, port, RedisLink(sessionAuth(spark)))
     val missingDefault: String = if (legacyEmpty(spark)) "" else null
 
     // demo scalars, kept for smoke-test parity (redduck_extension.cpp:17-40)
     spark.udf.register("redduck", (name: String) => s"Redduck $name 🐥")
     spark.udf.register("set_name", (_: String) => "name is set")
 
-    // per-row point lookup over a pooled per-thread connection. Missing
+    // per-row point lookup over the task's connection. Missing
     // key → SQL NULL (deliberate divergence from the reference's "",
     // redis_client.cpp:232-236; see SURVEY §1.2) unless LegacyEmptyConf
     // was set at registration time.
     spark.udf.register("redis_get", (key: String) =>
-      if (key == null) null
-      else RedisConnection.withPooled(host, port, link)(c =>
-        RedisCommands.get(c, key).getOrElse(missingDefault)))
+      if (key == null) null else conn(RedisCommands.get(_, key).getOrElse(missingDefault)))
 
     spark.udf.register("redis_hgetall", (key: String) =>
-      if (key == null) null
-      else RedisConnection.withPooled(host, port, link)(c => RedisCommands.hgetall(c, key)))
+      if (key == null) null else conn(RedisCommands.hgetall(_, key)))
+  }
+
+  /** Keys per round trip of [[withRedisValues]] and [[withHashFields]]. */
+  private val LookupBatch = 512
+
+  /** The batch loop of [[withRedisValues]] and [[withHashFields]]: appends
+    * `out` to each row of `df`, `fetch`ing the values of each batch's
+    * non-NULL `key`s in one round trip over the task's connection, which
+    * the first batch with a key opens (an all-NULL input needs no server).
+    * A NULL key is not sent and yields NULL.
+    */
+  private def lookup(df: DataFrame, key: Column, out: StructField, batchSize: Int,
+      hostPort: Option[(String, Int)], auth: Option[String])(
+      fetch: (RedisConnection, Seq[String]) => Seq[Any]): DataFrame = {
+    val spark = df.sparkSession
+    val (host, port) = hostPort.getOrElse(target(spark))
+    val conn = new TaskConnection(host, port, RedisLink(auth.orElse(sessionAuth(spark))))
+    val keyIdx = df.schema.length // `key`, behind the row's own columns
+    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
+      StructType(df.schema.fields :+ out))
+    df.select(col("*"), key).mapPartitions { rows =>
+      rows.grouped(batchSize).flatMap { group =>
+        val keys = group.filterNot(_.isNullAt(keyIdx)).map(_.getString(keyIdx))
+        val values = if (keys.isEmpty) Iterator.empty else conn(fetch(_, keys)).iterator
+        group.iterator.map { row =>
+          Row.fromSeq(row.toSeq.take(keyIdx) :+ (if (row.isNullAt(keyIdx)) null else values.next()))
+        }
+      }
+    }(enc)
   }
 
   /** Batched `redis_get`: resolves `keyCol` for a whole DataFrame with one
@@ -125,48 +178,29 @@ object RedduckFunctions {
     * column (IllegalArgumentException otherwise).
     */
   def withRedisValues(df: DataFrame, keyCol: String, valueCol: String = "value",
-      batchSize: Int = 512, hostPort: Option[(String, Int)] = None,
+      batchSize: Int = LookupBatch, hostPort: Option[(String, Int)] = None,
       auth: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val (host, port) = hostPort.getOrElse(target(spark))
-    val link = RedisLink(auth.orElse(sessionAuth(spark)))
-    val missingDefault: String = if (legacyEmpty(spark)) "" else null
-    val schema = StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(valueCol, StringType, nullable = true))
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val keyType = df.schema(keyIdx).dataType
+    val keyType = df.schema(keyCol).dataType
     if (keyType != StringType)
       throw new IllegalArgumentException(
         s"withRedisValues: key column '$keyCol' must be STRING, got ${keyType.sql}")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { group =>
-        val keys = group.filterNot(_.isNullAt(keyIdx)).map(_.getString(keyIdx))
-        val values =
-          if (keys.isEmpty) Iterator.empty
-          else RedisConnection.withPooled(host, port, link)(c => RedisCommands.mget(c, keys)).iterator
-        group.iterator.map { row =>
-          val v = if (row.isNullAt(keyIdx)) null else values.next().getOrElse(missingDefault)
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ v)
-        }
-      }
-    }(enc)
+    val missingDefault: String = if (legacyEmpty(df.sparkSession)) "" else null
+    lookup(df, col(keyCol), StructField(valueCol, StringType, nullable = true), batchSize,
+        hostPort, auth)(RedisCommands.mget(_, _).map(_.getOrElse(missingDefault)))
   }
 
   /** `redis_hgetall` as a typed column on a keys DataFrame: MapType by
     * default (hash fields are dynamic); project to a struct by passing a
     * user schema (README.md:36-38 claims STRUCT output — SURVEY §7.4
-    * decision 5 makes Map the honest default).
+    * decision 5 makes Map the honest default). Batched like
+    * [[withRedisValues]], one write of HGETALLs per batch: a missing key
+    * is an empty map, a NULL key NULL, and a key of another type fails.
     */
   def withHashFields(df: DataFrame, keyCol: String, structSchema: Option[StructType] = None,
       hostPort: Option[(String, Int)] = None, auth: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val (host, port) = hostPort.getOrElse(target(spark))
-    val link = RedisLink(auth.orElse(sessionAuth(spark)))
-    val hget = udf((key: String) =>
-      if (key == null) null
-      else RedisConnection.withPooled(host, port, link)(c => RedisCommands.hgetall(c, key)))
-    val withMap = df.withColumn("hash", hget(col(keyCol)))
+    val withMap = lookup(df, col(keyCol).cast(StringType),
+        StructField("hash", MapType(StringType, StringType), nullable = true), LookupBatch,
+        hostPort, auth)(RedisCommands.hgetallPipelined(_, _, wrongTypeEmpty = false))
     structSchema match {
       case None => withMap
       case Some(st) =>

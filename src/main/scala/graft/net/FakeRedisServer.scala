@@ -37,6 +37,9 @@ final class FakeRedisServer(requestedPort: Int = 0,
   // the cluster seed's included, negotiates the protocol
   private val helloCallCount = new java.util.concurrent.atomic.AtomicInteger(0)
   def helloCalls: Int = helloCallCount.get()
+  // open client connections: tests assert no connection outlives its owner
+  private val openConnectionCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  def openConnections: Int = openConnectionCount.get()
   // last SCAN's raw argument vector: tests assert options (TYPE, MATCH)
   // actually reached the server as COMMANDS, not as client-side filters
   @volatile private var lastScanArgsVar: Seq[String] = Nil
@@ -104,6 +107,7 @@ final class FakeRedisServer(requestedPort: Int = 0,
       while (running) {
         try {
           val sock = server.accept()
+          openConnectionCount.incrementAndGet()
           val t = new Thread(() => serve(sock), "fake-redis-conn")
           t.setDaemon(true)
           t.start()
@@ -174,7 +178,7 @@ final class FakeRedisServer(requestedPort: Int = 0,
             end += n
         }
       }
-    } catch { case _: Throwable => () } finally sock.close()
+    } catch { case _: Throwable => () } finally { sock.close(); openConnectionCount.decrementAndGet() }
   }
 
   private def handle(req: RespValue, st: ConnState): RespValue = req match {

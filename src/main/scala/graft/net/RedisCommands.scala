@@ -99,10 +99,11 @@ object RedisCommands {
     */
   private val Redirect = """(MOVED|ASK) \d+ ([^:\s]+):(\d+)""".r
 
-  /** Run `f` against the target of the redirect `err`, reached over the
-    * redirected connection `c`'s own link. ASK redirects require the ASKING
-    * prefix on the target node (the slot is mid-migration and not yet owned
-    * there — without it the target answers MOVED back and the query fails);
+  /** Run `f` against the target of the redirect `err`, over the redirected
+    * connection `c`'s own connection there (`c.redirectTarget`). ASK
+    * redirects require the ASKING prefix on the target node (the slot is
+    * mid-migration and not yet owned there — without it the target
+    * answers MOVED back and the query fails);
     * MOVED targets own the slot and take the plain command. Any other
     * error, or a redirect after the one hop (`where` is not empty), fails
     * as an error of `what`.
@@ -110,13 +111,12 @@ object RedisCommands {
   private def onRedirectTarget[T](c: RedisConnection, err: String, what: String, where: String)(
       f: RedisConnection => T): T = err match {
     case Redirect(verb, host, port) if where.isEmpty =>
-      RedisConnection.withPooled(host, port.toInt, c.link) { rc =>
-        if (verb == "ASK") rc.command("ASKING") match {
-          case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
-          case _ => ()
-        }
-        f(rc)
+      val rc = c.redirectTarget(host, port.toInt)
+      if (verb == "ASK") rc.command("ASKING") match {
+        case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
+        case _ => ()
       }
+      f(rc)
     case _ => throw new java.io.IOException(s"$what error$where: $err")
   }
 
@@ -278,12 +278,13 @@ object RedisCommands {
   /** HGETALL → field map (RESP2 flat array or RESP3 map reply). Follows
     * one cluster redirect.
     *
-    * WRONGTYPE fails LOUDLY here, unlike [[hgetallPipelined]]: this is
-    * the direct single-key read (the `redis_hgetall` UDF and
-    * `withHashFields` paths, where the caller NAMED the key) — an empty
-    * map would silently mask reading a key known to be a string. The
-    * mixed-keyspace tolerance belongs only to the pattern/SCAN-driven
-    * readers, where `user:*` routinely matches mixed types.
+    * WRONGTYPE fails LOUDLY here, unlike [[hgetallPipelined]]'s default:
+    * this is the direct single-key read (the `redis_hgetall` UDF, where
+    * the caller NAMED the key; `withHashFields` batches the same way with
+    * `wrongTypeEmpty = false`) — an empty map would silently mask reading
+    * a key known to be a string. The mixed-keyspace tolerance belongs
+    * only to the pattern/SCAN-driven readers, where `user:*` routinely
+    * matches mixed types.
     */
   def hgetall(c: RedisConnection, key: String): Map[String, String] =
     hgetallPipelined(c, Seq(key), wrongTypeEmpty = false).head
@@ -442,12 +443,6 @@ object RedisCommands {
       case Int64(n) => n
       case Err(m) => throw new java.io.IOException(s"XLEN error: $m")
       case other => fail("XLEN reply", other)
-    }
-
-  def set(c: RedisConnection, key: String, value: String): Unit =
-    c.command("SET", key, value) match {
-      case Simple("OK") => ()
-      case other => fail("SET reply", other)
     }
 
   private def fail(what: String, got: RespValue): Nothing =

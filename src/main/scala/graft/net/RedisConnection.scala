@@ -33,7 +33,8 @@ final case class RedisLink(auth: Option[String] = None, tls: Boolean = false,
   *    reference (redis_client.hpp:12, redis_client.cpp:38-52), but is
   *    compacted per-reply instead of relying on manual clears.
   *
-  * One connection per partition/thread — never shared (the reference
+  * Every connection has one owner that closes it — a partition reader
+  * or writer, a task, a stream — and is never shared (the reference
   * serializes all I/O behind two process-global mutexes; we scale by
   * giving each Spark partition its own connection instead).
   */
@@ -48,37 +49,41 @@ final class RedisConnection(val host: String, val port: Int, val link: RedisLink
 
   private val socket: Socket = {
     val plain = new Socket()
-    plain.setTcpNoDelay(true)
-    plain.setSoTimeout(timeoutMs)
-    plain.connect(new InetSocketAddress(host, port), timeoutMs)
-    if (!link.tls) plain
-    else {
-      // TLS-wrap the connected socket (the rediss:// deployment shape).
-      // `tlsTrustAll` skips chain validation for self-signed test/dev
-      // servers — NEVER the production default; real deployments trust
-      // the JVM's CA store (or a custom one via standard javax.net.ssl
-      // system properties).
-      val factory =
-        if (!link.tlsTrustAll)
-          javax.net.ssl.SSLContext.getDefault.getSocketFactory
-        else {
-          val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
-          ctx.init(null, Array[javax.net.ssl.TrustManager](
-            new javax.net.ssl.X509TrustManager {
-              override def checkClientTrusted(
-                  c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
-              override def checkServerTrusted(
-                  c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
-              override def getAcceptedIssuers: Array[java.security.cert.X509Certificate] =
-                Array.empty
-            }), null)
-          ctx.getSocketFactory
-        }
-      val ssl = factory.createSocket(plain, host, port, true)
-        .asInstanceOf[javax.net.ssl.SSLSocket]
-      ssl.setSoTimeout(timeoutMs)
-      ssl.startHandshake() // fail at connect, not first command
-      ssl
+    try {
+      plain.setTcpNoDelay(true)
+      plain.setSoTimeout(timeoutMs)
+      plain.connect(new InetSocketAddress(host, port), timeoutMs)
+      if (!link.tls) plain
+      else {
+        // TLS-wrap the connected socket (the rediss:// deployment shape).
+        // `tlsTrustAll` skips chain validation for self-signed test/dev
+        // servers — NEVER the production default; real deployments trust
+        // the JVM's CA store (or a custom one via standard javax.net.ssl
+        // system properties).
+        val factory =
+          if (!link.tlsTrustAll)
+            javax.net.ssl.SSLContext.getDefault.getSocketFactory
+          else {
+            val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
+            ctx.init(null, Array[javax.net.ssl.TrustManager](
+              new javax.net.ssl.X509TrustManager {
+                override def checkClientTrusted(
+                    c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
+                override def checkServerTrusted(
+                    c: Array[java.security.cert.X509Certificate], a: String): Unit = ()
+                override def getAcceptedIssuers: Array[java.security.cert.X509Certificate] =
+                  Array.empty
+              }), null)
+            ctx.getSocketFactory
+          }
+        val ssl = factory.createSocket(plain, host, port, true)
+          .asInstanceOf[javax.net.ssl.SSLSocket]
+        ssl.setSoTimeout(timeoutMs)
+        ssl.startHandshake() // fail at connect, not first command
+        ssl
+      }
+    } catch { // a failed connect or TLS handshake leaves no open socket
+      case e: Throwable => plain.close(); throw e
     }
   }
   private val in = socket.getInputStream
@@ -91,54 +96,49 @@ final class RedisConnection(val host: String, val port: Int, val link: RedisLink
   private val walk = new RespCodec.FrameWalk
   // where each frame of the replies being read starts and ends
   private var bounds = new Array[Int](2)
+  // MOVED/ASK redirect targets, one per (host, port), closed with this
+  private val targets = scala.collection.mutable.Map.empty[(String, Int), RedisConnection]
 
-  // AUTH before anything else (neither the reference nor plain PING
-  // works on a requirepass/ACL server): "password" sends the RESP2
-  // 1-arg form, "user password" (one space) the Redis-6 ACL 2-arg form.
-  // A refused credential fails LOUDLY at connect — a silently
-  // unauthenticated connection would error per-command downstream.
-  auth.foreach { a =>
-    val sp = a.indexOf(' ')
-    val reply =
-      if (sp > 0 && sp < a.length - 1)
-        command("AUTH", a.substring(0, sp), a.substring(sp + 1))
-      else command("AUTH", a)
-    reply match {
-      case RespValue.Simple("OK") => ()
-      case RespValue.Err(m) =>
-        try close() catch { case _: Throwable => () }
-        throw new java.io.IOException(s"AUTH failed for $host:$port: $m")
-      case other =>
-        try close() catch { case _: Throwable => () }
-        throw new java.io.IOException(s"unexpected AUTH reply: $other")
+  try {
+    // AUTH before anything else (neither the reference nor plain PING
+    // works on a requirepass/ACL server): "password" sends the RESP2
+    // 1-arg form, "user password" (one space) the Redis-6 ACL 2-arg form.
+    // A refused credential fails LOUDLY at connect — a silently
+    // unauthenticated connection would error per-command downstream.
+    auth.foreach { a =>
+      val sp = a.indexOf(' ')
+      val reply =
+        if (sp > 0 && sp < a.length - 1)
+          command("AUTH", a.substring(0, sp), a.substring(sp + 1))
+        else command("AUTH", a)
+      reply match {
+        case RespValue.Simple("OK") => ()
+        case RespValue.Err(m) => throw new java.io.IOException(s"AUTH failed for $host:$port: $m")
+        case other => throw new java.io.IOException(s"unexpected AUTH reply: $other")
+      }
     }
-  }
 
-  // RESP3 mode: HELLO 3 switches the server's protocol for this
-  // connection (public Redis ≥6.0 surface). The reply is the server
-  // metadata map — require proto=3 in it; an old server answers
-  // -NOPROTO, which fails LOUDLY here rather than silently running
-  // RESP2 (the caller asked for RESP3 semantics — e.g. map-typed
-  // HGETALL — and must not get a lookalike). Runs AFTER auth: both
-  // handshake orders are legal, and keeping AUTH first reuses its
-  // loud-failure path unchanged.
-  if (resp3) command("HELLO", "3") match {
-    case RespValue.Mp(entries) =>
-      val proto = entries.collectFirst {
-        case (b: RespValue.Bulk, RespValue.Int64(p)) if b.text == "proto" => p
-      }
-      if (!proto.contains(3L)) {
-        try close() catch { case _: Throwable => () }
-        throw new java.io.IOException(
+    // RESP3 mode: HELLO 3 switches the server's protocol for this
+    // connection (public Redis ≥6.0 surface). The reply is the server
+    // metadata map — require proto=3 in it; an old server answers
+    // -NOPROTO, which fails LOUDLY here rather than silently running
+    // RESP2 (the caller asked for RESP3 semantics — e.g. map-typed
+    // HGETALL — and must not get a lookalike). Runs AFTER auth: both
+    // handshake orders are legal, and keeping AUTH first reuses its
+    // loud-failure path unchanged.
+    if (resp3) command("HELLO", "3") match {
+      case RespValue.Mp(entries) =>
+        val proto = entries.collectFirst {
+          case (b: RespValue.Bulk, RespValue.Int64(p)) if b.text == "proto" => p
+        }
+        if (!proto.contains(3L)) throw new java.io.IOException(
           s"HELLO 3 handshake with $host:$port: reply lacks proto=3 ($entries)")
-      }
-    case RespValue.Err(m) =>
-      try close() catch { case _: Throwable => () }
-      throw new java.io.IOException(
+      case RespValue.Err(m) => throw new java.io.IOException(
         s"server $host:$port does not speak RESP3 (HELLO 3 → $m)")
-    case other =>
-      try close() catch { case _: Throwable => () }
-      throw new java.io.IOException(s"unexpected HELLO reply: $other")
+      case other => throw new java.io.IOException(s"unexpected HELLO reply: $other")
+    }
+  } catch { // a refused handshake leaves no open socket
+    case e: Throwable => try close() catch { case _: Throwable => () }; throw e
   }
 
   /** Out-of-band RESP3 push frames skipped by [[readFrame]] — a client
@@ -229,58 +229,12 @@ final class RedisConnection(val host: String, val port: Int, val link: RedisLink
     bufEnd += n
   }
 
-  def isOpen: Boolean = !socket.isClosed && socket.isConnected
-
-  override def close(): Unit = socket.close()
-}
-
-object RedisConnection {
-  /** Per-JVM connection cache keyed by target + link + thread: Spark
-    * partitions run on a bounded executor thread pool, so this bounds
-    * connections at (threads × targets) while never sharing a socket
-    * across threads.
+  /** The connection to the MOVED/ASK redirect target `host:port`, over
+    * this connection's link: opened at the first redirect there, reused
+    * for later ones, and closed by [[close]].
     */
-  private val pool = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, RedisLink, Long), RedisConnection]()
+  private[graft] def redirectTarget(host: String, port: Int): RedisConnection =
+    targets.getOrElseUpdate((host, port), new RedisConnection(host, port, link))
 
-  def pooled(host: String, port: Int, link: RedisLink): RedisConnection = {
-    val key = (host, port, link, Thread.currentThread().getId)
-    var c = pool.get(key)
-    if (c == null || !c.isOpen) {
-      if (c != null) { // close the dead socket before replacing: no fd leak
-        try c.close() catch { case _: Throwable => () }
-      }
-      c = new RedisConnection(host, port, link)
-      pool.put(key, c)
-    }
-    c
-  }
-
-  /** Close and drop every pooled connection (entries for terminated
-    * threads are otherwise only evicted on a failed call — long-lived
-    * JVMs with churning pools should sweep between jobs).
-    */
-  def closeAll(): Unit = {
-    val it = pool.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      try e.getValue.close() catch { case _: Throwable => () }
-      it.remove()
-    }
-  }
-
-  /** Run `f` with a pooled connection, evicting it on I/O failure so the
-    * next call reconnects.
-    */
-  def withPooled[T](host: String, port: Int, link: RedisLink)(
-      f: RedisConnection => T): T = {
-    val c = pooled(host, port, link)
-    try f(c)
-    catch {
-      case e: java.io.IOException =>
-        pool.remove((host, port, link, Thread.currentThread().getId))
-        try c.close() catch { case _: Throwable => () }
-        throw e
-    }
-  }
+  override def close(): Unit = try targets.values.foreach(_.close()) finally socket.close()
 }

@@ -62,9 +62,6 @@ object RedisSources {
     /** A new connection to the target over the options' link. */
     def connect(): RedisConnection = new RedisConnection(host, port, link)
 
-    /** Runs `f` with the calling thread's pooled connection to the target. */
-    def withPooled[T](f: RedisConnection => T): T = RedisConnection.withPooled(host, port, link)(f)
-
     /** The scan's input partitions: one per master node in cluster mode,
       * else one per pattern list of [[effectivePatterns]].
       */

@@ -470,7 +470,7 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
         // oracle face of the streaming read (and a backfill path)
         override def toBatch: org.apache.spark.sql.connector.read.Batch = this
         override def planInputPartitions(): Array[InputPartition] =
-          opts.withPooled { c =>
+          scala.util.Using.resource(opts.connect()) { c =>
             val multi = !sopts.selection.isInstanceOf[RedisStreamEntries.SingleStream]
             RedisMultiStreamMicroBatch.members(c, opts, sopts.selection).flatMap {
               stream => RedisCommands.xlast(c, stream).map(last =>
@@ -920,16 +920,24 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
   private def membersNow(c: RedisConnection): Seq[String] =
     RedisMultiStreamMicroBatch.members(c, opts, sopts.selection)
 
+  // the driver's connection for the offset probes, opened at the first
+  // and closed by `stop()`
+  private var driverConn: RedisConnection = _
+  private def probe[T](f: RedisConnection => T): T = synchronized {
+    if (driverConn == null) driverConn = opts.connect()
+    f(driverConn)
+  }
+
   // AvailableNow: pin membership AND per-stream tips once at query
   // start; an empty keyspace pins the empty map so a live producer
   // cannot keep the drain running forever
   @volatile private var availableNowEnds: Option[Map[String, String]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnds = Some(opts.withPooled { c =>
+    availableNowEnds = Some(probe { c =>
       membersNow(c).map(s => s -> RedisCommands.xlast(c, s).getOrElse(ZeroId)).toMap
     })
 
-  override def initialOffset(): Offset = opts.withPooled { c =>
+  override def initialOffset(): Offset = probe { c =>
     val ms = membersNow(c)
     RedisEntryMapOffset(ms.map { s =>
       s -> (sopts.startAt match {
@@ -957,7 +965,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
         Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
       case _ => sopts.maxPerTrigger
     }
-    opts.withPooled { c =>
+    probe { c =>
       // during an AvailableNow drain membership is the pinned set;
       // otherwise re-resolve (new pattern matches enter at 0-0)
       val membership = (availableNowEnds match {
@@ -1080,5 +1088,5 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
     * operator's retention policy (`XTRIM`), exactly like Kafka.
     */
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def stop(): Unit = synchronized { Option(driverConn).foreach(_.close()); driverConn = null }
 }

@@ -262,4 +262,35 @@ class RedisNetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamRows("3") == streamRows("2"))
     assert(streamRows("3") == Seq("9-1" -> "a", "9-2" -> "b"))
   }
+
+  test("a TLS handshake that stalls past the socket timeout leaves no socket open") {
+    // a server that accepts and never answers the ClientHello
+    val silent = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val accepted = new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]()
+    val acceptor = new Thread(() =>
+      try while (true) accepted.add(silent.accept()) catch { case _: java.io.IOException => () })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    // `n` concurrent connects, each failing at the 5 s timeout; then the
+    // JVM's open fds, once the server side of each is closed too
+    def openFdsAfter(n: Int): Long = {
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val connects = Seq.fill(n)(new Thread(() =>
+        try new RedisConnection("127.0.0.1", silent.getLocalPort, RedisLink(tls = true)).close()
+        catch { case e: Throwable => failures.add(e) }))
+      connects.foreach(_.start())
+      connects.foreach(_.join())
+      assert(failures.size == n && failures.stream().allMatch(_.isInstanceOf[java.net.SocketTimeoutException]))
+      accepted.forEach(_.close())
+      accepted.clear()
+      os.getOpenFileDescriptorCount
+    }
+    try {
+      val before = openFdsAfter(1) // loads the TLS classes and whatever files they open
+      val after = openFdsAfter(20)
+      assert(after - before < 10, s"$before open fds before 20 stalled handshakes, $after after")
+    } finally silent.close()
+  }
 }

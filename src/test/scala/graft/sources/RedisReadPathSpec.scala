@@ -6,16 +6,27 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.RedduckFunctions
 import graft.resp.{RespCodec, RespValue}
 import graft.resp.RespValue._
 
 /** The columnar reader against a reply far larger than the 16 KiB
   * receive buffer, delivered in random 1 B–4 KiB writes: whatever the
   * fragmentation, the vectors hold exactly the bytes that were sent.
+  * Faults, from an error reply to a stalled or malformed frame, fail the
+  * read or the query they belong to, and no later one.
   */
 class RedisReadPathSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   /** A RESP stub that answers each command (its arguments' bytes) with
     * `reply`, written in random 1 B–4 KiB chunks; a null reply closes the
@@ -355,5 +366,72 @@ class RedisReadPathSpec extends AnyFunSuite {
           } finally { reader.close(); s.close() }
         }
     }
+  }
+
+  /** `keys` as a one-column DataFrame of one partition. */
+  private def keyFrame(keys: String*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(keys.map(Row(_)), 1),
+      StructType(Seq(StructField("key", StringType))))
+
+  /** An exception's messages and class names down its cause chain. */
+  private def chain(t: Throwable): String = if (t == null) "" else s"$t | ${chain(t.getCause)}"
+
+  /** An MGET reply of "v" + key per key. */
+  private def values(keys: Seq[Array[Byte]]): Array[Byte] =
+    RespCodec.encode(Arr(keys.map(k => Bulk("v" + new String(k, UTF_8))).toVector))
+
+  test("a reply that stalls mid-frame fails a kv partition's next() at the socket timeout, never a short batch") {
+    // the stub writes the MGET reply up to the second value, then waits
+    // for a command that never comes, the socket left open
+    val stub = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "SCAN" => RespCodec.encode(Arr(Vector(Bulk("0"), Arr(Vector(Bulk("k:0"), Bulk("k:1"))))))
+        case "MGET" => values(args.tail).dropRight(5)
+      }
+    }, seed = 12)
+    val reader = new RedisColumnarPartitionReader(RedisInputPartition("127.0.0.1", stub.port, Seq("k:*"), 10),
+      RedisSources.StringValues)
+    val t0 = System.nanoTime()
+    try {
+      intercept[java.net.SocketTimeoutException](reader.next())
+      assert(System.nanoTime() - t0 >= 4000000000L, "failed before the 5 s socket timeout")
+    } finally { reader.close(); stub.close() }
+  }
+
+  test("a withRedisValues batch whose MGET reply stalls fails the query, never yields NULL values") {
+    val stub = new ChunkedStub({ args => values(args.tail).dropRight(5) }, seed = 13)
+    try {
+      val e = intercept[Exception](RedduckFunctions.withRedisValues(keyFrame("k:0", "k:1"), "key",
+        hostPort = Some("127.0.0.1" -> stub.port)).collect())
+      assert(chain(e).contains("SocketTimeoutException"), chain(e))
+    } finally stub.close()
+  }
+
+  test("a frame the walk rejects fails its own withRedisValues or redis_get query, and the next one reads the right values") {
+    // the first MGET and the first GET are answered with a bad array
+    // header, every later one correctly
+    val answered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val stub = new ChunkedStub({ args =>
+      val cmd = new String(args.head, UTF_8)
+      if (cmd != "PING" && answered.add(cmd)) "*x\r\n".getBytes(UTF_8)
+      else cmd match {
+        case "PING" => RespCodec.encode(Simple("PONG"))
+        case "MGET" => values(args.tail)
+        case "GET" => RespCodec.encode(Bulk("v" + new String(args(1), UTF_8)))
+      }
+    }, seed = 14)
+    try {
+      def lookup(): Seq[String] = RedduckFunctions.withRedisValues(keyFrame("k:0", "k:1"), "key",
+        hostPort = Some("127.0.0.1" -> stub.port)).collect().map(_.getString(1)).toSeq
+      assert(chain(intercept[Exception](lookup())).contains("ProtocolException"))
+      assert(lookup() == Seq("vk:0", "vk:1"))
+
+      graft.GraftRedis.connect(spark, s"127.0.0.1:${stub.port}")
+      RedduckFunctions.registerAll(spark)
+      def get(): Seq[String] =
+        keyFrame("k:2", "k:3").selectExpr("redis_get(key)").collect().map(_.getString(0)).toSeq
+      assert(chain(intercept[Exception](get())).contains("ProtocolException"))
+      assert(get() == Seq("vk:2", "vk:3"))
+    } finally stub.close()
   }
 }
