@@ -63,15 +63,6 @@ object GraftRedis {
       .options(functions.RedduckFunctions.targetOptions(df.sparkSession))
       .mode("append").save()
 
-  /** Streaming keyspace → (key_name STRING): each micro-batch emits the
-    * keys that appeared since the previous snapshot (see
-    * `sources.RedisKeyStreamProvider` for the fault-tolerance contract).
-    */
-  def keyStream(spark: SparkSession, pattern: String = "*"): DataFrame =
-    spark.readStream.format("redis-key-stream")
-      .options(functions.RedduckFunctions.targetOptions(spark))
-      .option("pattern", pattern).load()
-
   /** The Redis SQL table functions, each defined once: the extension
     * injects these, and [[registerSql]] registers the same ones on an
     * existing session. The builders read the `redis_connect` target of

@@ -62,25 +62,18 @@ object RedisCommands {
     (next, Vector.tabulate(keys.size)(keys.string))
   }
 
-  /** Walks `pattern`'s whole SCAN cursor, from 0 until the server answers
-    * 0 again, running `page` after each page with that page's keys in
-    * `keys` (views, valid until the next page is read).
+  /** Every key of `pattern`'s whole SCAN cursor, from 0 until the server
+    * answers 0 again, as `String`s.
     */
-  def scanWalk(c: RedisConnection, pattern: String, count: Int,
-      scanType: Option[String], keys: RespCodec.ArrayView)(page: => Unit): Unit = {
-    var cursor = "0"
-    do {
-      cursor = scanPageView(c, cursor, pattern, count, scanType, keys)
-      page
-    } while (cursor != "0")
-  }
-
-  /** Every key of `pattern`'s whole SCAN cursor, as `String`s. */
   def scanAll(c: RedisConnection, pattern: String, count: Int,
       scanType: Option[String] = None): Seq[String] = {
     val keys = new RespCodec.ArrayView
     val out = Seq.newBuilder[String]
-    scanWalk(c, pattern, count, scanType, keys)(out ++= Iterator.tabulate(keys.size)(keys.string))
+    var cursor = "0"
+    do {
+      cursor = scanPageView(c, cursor, pattern, count, scanType, keys)
+      out ++= Iterator.tabulate(keys.size)(keys.string)
+    } while (cursor != "0")
     out.result()
   }
 
@@ -207,7 +200,7 @@ object RedisCommands {
     * buffer, valid until that connection reads again; a reply re-read on
     * a redirect target is a view into a copy of its own.
     */
-  final class HashReplies {
+  final class HashReplies extends RespCodec.FieldRuns {
     val fields = new RespCodec.ArrayView
     private[RedisCommands] var views = new Array[RespCodec.ArrayView](0)
     private[RedisCommands] var bounds = new Array[Int](0)
@@ -386,42 +379,57 @@ object RedisCommands {
     }
   }
 
-  /** Parse an XRANGE-shaped reply (public within the engine so callers
-    * that PIPELINE many XRANGEs can decode the batched replies).
-    */
-  private[graft] def parseEntries(v: RespValue, what: String): Seq[StreamEntry] = v match {
-    case Arr(items) => items.map {
-      case Arr(Vector(idv, fv)) =>
-        val id = idv match { case b: Bulk => b.text; case Simple(s) => s; case o => fail(s"$what id", o) }
-        val fields = fv match {
-          case Arr(pairs) => pairs.grouped(2).collect {
-            case Vector(f: Bulk, value: Bulk) => f.text -> value.text
-          }.toSeq
-          case o => fail(s"$what fields", o)
-        }
-        StreamEntry(id, fields)
-      case o => fail(s"$what entry", o)
-    }
-    case Err(m) => throw new java.io.IOException(s"$what error: $m")
-    case other => fail(s"$what reply", other)
-  }
-
   /** `XRANGE key start end [COUNT n]`. `start`/`end` are inclusive ids,
     * `-`/`+` for the extremes, or `(id` for an EXCLUSIVE bound (Redis
     * 6.2+) — the form the streaming source uses to resume after its
     * last committed offset.
     */
+  def xrangeCommand(key: String, start: String, end: String, count: Option[Int]): Seq[String] =
+    Seq("XRANGE", key, start, end) ++ count.toSeq.flatMap(n => Seq("COUNT", n.toString))
+
+  /** Sends `commands`, each an XRANGE or XREVRANGE, in one write, and reads
+    * their replies in place into `entries`, running `each(j)` once reply
+    * `j` is read. The last reply's views stay valid until `c` reads again.
+    * An error reply, or any other shape (a nil or non-bulk field, an odd
+    * field list), fails loudly naming the command: no field is dropped.
+    */
+  def readEntries(c: RedisConnection, commands: Seq[Seq[String]], entries: RespCodec.EntriesView)(
+      each: Int => Unit = _ => ()): Unit = {
+    val cmd = new RespCodec.CommandBuffer()
+    commands.foreach(cmd.command)
+    c.send(cmd)
+    var j = 0
+    c.readFrame({ (buf, start, end) =>
+      if (!RespCodec.readEntriesReply(buf, start, end, entries)) RespCodec.decodeFrame(buf, start, end) match {
+        case Err(m) => throw new java.io.IOException(s"${commands(j).head} error: $m")
+        case other => fail(s"${commands(j).head} reply", other)
+      }
+      each(j)
+      j += 1
+    }, replies = commands.length)
+  }
+
+  /** [[xrangeCommand]]'s entries, with `String` ids and fields. */
   def xrange(c: RedisConnection, key: String, start: String, end: String,
       count: Option[Int] = None): Seq[StreamEntry] = {
-    val args = Seq("XRANGE", key, start, end) ++
-      count.toSeq.flatMap(n => Seq("COUNT", n.toString))
-    parseEntries(c.command(args: _*), "XRANGE")
+    val e = new RespCodec.EntriesView
+    readEntries(c, Seq(xrangeCommand(key, start, end, count)), e)()
+    Vector.tabulate(e.size)(i => StreamEntry(e.id(i), e.fieldStrings(i)))
   }
+
+  /** How many entries [[xrangeCommand]] returns, and the last one's id. */
+  def xrangeLast(c: RedisConnection, key: String, start: String, end: String, count: Int): (Int, Option[String]) =
+    lastId(c, xrangeCommand(key, start, end, Some(count)))
 
   /** Last entry id of a stream (`XREVRANGE key + - COUNT 1`), if any. */
   def xlast(c: RedisConnection, key: String): Option[String] =
-    parseEntries(c.command("XREVRANGE", key, "+", "-", "COUNT", "1"), "XREVRANGE")
-      .headOption.map(_.id)
+    lastId(c, Seq("XREVRANGE", key, "+", "-", "COUNT", "1"))._2
+
+  private def lastId(c: RedisConnection, command: Seq[String]): (Int, Option[String]) = {
+    val e = new RespCodec.EntriesView
+    readEntries(c, Seq(command), e)()
+    (e.size, if (e.size == 0) None else Some(e.id(e.size - 1)))
+  }
 
   /** `XTRIM key MAXLEN [~|=] n` → entries removed. The retention lever
     * every scaladoc in the streams source points at: `approx = true`

@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * payloads, allocates nothing, and resumes where it stopped when more
   * bytes arrive. A reader therefore waits until a whole frame is buffered
   * and decodes it once, either with `decode` into the [[RespValue]] ADT or,
-  * for the three hot reply shapes (a SCAN page, an MGET array and an
-  * HGETALL hash), with [[readScanReply]]/[[readArrayReply]]/[[readMapReply]]
-  * as views into the buffer. `decode`
+  * for the four hot reply shapes (a SCAN page, an MGET array, an HGETALL
+  * hash and an XRANGE page), with [[readScanReply]]/[[readArrayReply]]/
+  * [[readMapReply]]/[[readEntriesReply]] as views into the buffer. `decode`
   * itself returns `Incomplete` when the buffer ends mid-frame and starts
   * over from the frame's first byte on the next call. This fixes the
   * reference's single-`recv` fragmentation bug
@@ -290,6 +290,43 @@ object RespCodec {
     }
   }
 
+  /** Runs of field/value pairs, one per reply row: row `j`'s are elements
+    * [from(j), to(j)) of view(j), each name followed by its value.
+    */
+  trait FieldRuns {
+    def view(j: Int): ArrayView
+    def from(j: Int): Int
+    def to(j: Int): Int
+  }
+
+  /** The entries of one XRANGE/XREVRANGE reply, as views into the buffer
+    * it was read from: entry `i`'s id is element `i` of [[ids]], and its
+    * fields are its run of [[fields]]. Valid until that buffer is read into
+    * again; the arrays are reused across replies.
+    */
+  final class EntriesView extends FieldRuns {
+    val ids = new ArrayView
+    val fields = new ArrayView
+    private var ends = new Array[Int](64)
+
+    def size: Int = ids.size
+    def id(i: Int): String = ids.string(i)
+    /** Entry `i`'s fields as `String`s, in reply order. */
+    def fieldStrings(i: Int): Seq[(String, String)] =
+      (from(i) until to(i) by 2).map(k => fields.string(k) -> fields.string(k + 1))
+    def view(i: Int): ArrayView = fields
+    def from(i: Int): Int = if (i == 0) 0 else ends(i - 1)
+    def to(i: Int): Int = ends(i)
+
+    private[RespCodec] def reset(b: Array[Byte]): Unit = { ids.reset(b); fields.reset(b) }
+    /** Ends the entry whose id was added last. */
+    private[RespCodec] def endEntry(): Unit = {
+      val i = size - 1
+      if (i == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * i)
+      ends(i) = fields.size
+    }
+  }
+
   /** Reads one buffered frame's headers in place, with the bounds and
     * CRLF checks of `decode`.
     */
@@ -318,6 +355,17 @@ object RespCodec {
       lineEnd = RespCodec.lineEnd(buf, lineStart, end)
       if (lineEnd < 0) truncated()
       pos = lineEnd + 2
+    }
+    /** Moves past a bulk or simple string, its content then being
+      * `buf[lineStart, lineEnd)`; false when the next value is another one
+      * or a nil.
+      */
+    def string(): Boolean = peek() match {
+      case '$' =>
+        val n = length()
+        n >= 0 && { lineStart = payload(n); lineEnd = lineStart + n; true }
+      case '+' => line(); true
+      case _ => false
     }
     /** The current header line's content as a length; moves past it. */
     def length(): Int = { line(); parseLength(buf, lineStart, lineEnd) }
@@ -371,17 +419,8 @@ object RespCodec {
     */
   def readScanReply(buf: Array[Byte], start: Int, end: Int, keys: ArrayView): String = {
     val r = new InPlace(buf, start, end)
-    if (r.peek() != '*' || r.length() != 2) return null
-    val cursor = r.peek() match {
-      case '$' =>
-        val n = r.length()
-        if (n < 0) return null
-        new String(buf, r.payload(n), n, UTF_8)
-      case '+' =>
-        r.line()
-        new String(buf, r.lineStart, r.lineEnd - r.lineStart, UTF_8)
-      case _ => return null
-    }
+    if (r.peek() != '*' || r.length() != 2 || !r.string()) return null
+    val cursor = new String(buf, r.lineStart, r.lineEnd - r.lineStart, UTF_8)
     keys.reset(buf)
     if (readArray(r, keys, simple = true, nils = false)) cursor else null
   }
@@ -404,6 +443,31 @@ object RespCodec {
   def readMapReply(buf: Array[Byte], start: Int, end: Int, fields: ArrayView): Boolean = {
     require(fields.buf eq buf, "fields must be reset to the buffer read")
     readArray(new InPlace(buf, start, end), fields, simple = false, nils = false, maps = true)
+  }
+
+  /** Reads the whole frame `buf[start, end)` as an XRANGE/XREVRANGE reply,
+    * an array of `*2` entries of an id (bulk or simple string) and a flat
+    * array of bulk field names and values, into `entries` as views. False
+    * when the frame has another shape, a nil or non-bulk field or an odd
+    * field list included; the caller decodes it to report it.
+    */
+  def readEntriesReply(buf: Array[Byte], start: Int, end: Int, entries: EntriesView): Boolean = {
+    entries.reset(buf)
+    val r = new InPlace(buf, start, end)
+    if (r.peek() != '*') return false
+    val n = r.length()
+    if (n < 0) return false
+    var i = 0
+    while (i < n) {
+      if (r.peek() != '*' || r.length() != 2 || !r.string()) return false
+      entries.ids.add(r.lineStart, r.lineEnd - r.lineStart)
+      val from = entries.fields.size
+      if (!readArray(r, entries.fields, simple = false, nils = false) || (entries.fields.size - from) % 2 != 0)
+        return false
+      entries.endEntry()
+      i += 1
+    }
+    true
   }
 
   /** Decode the whole frame `buf[start, end)` that a [[FrameWalk]] found. */

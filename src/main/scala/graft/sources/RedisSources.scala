@@ -81,11 +81,21 @@ object RedisSources {
     }
   }
 
+  /** Option `name`, if set, read by `parse`; a value it rejects fails
+    * naming the option and the value.
+    */
+  def parsed[T](o: CaseInsensitiveStringMap, name: String, what: String)(parse: String => T): Option[T] =
+    Option(o.get(name)).map { v =>
+      try parse(v) catch {
+        case _: IllegalArgumentException => throw new IllegalArgumentException(s"$name must be $what, got '$v'")
+      }
+    }
+
   def parseOptions(m: util.Map[String, String]): Options = {
     val o = new CaseInsensitiveStringMap(m)
     val opts = Options(
       host = o.getOrDefault("host", "127.0.0.1"),
-      port = o.getOrDefault("port", "6379").toInt,
+      port = parsed(o, "port", "an integer")(_.toInt).getOrElse(6379),
       link = RedisLink(
         // requirepass / ACL credentials: "password" or "user password".
         // Preferred option name is "password" — it matches Spark's default
@@ -94,8 +104,8 @@ object RedisSources {
         auth = Option(o.get("password")).orElse(Option(o.get("auth"))).filter(_.nonEmpty),
         // rediss://-style transport: TLS-wrap every connection;
         // tls.trustAll accepts self-signed certs (test/dev ONLY)
-        tls = o.getOrDefault("tls", "false").toBoolean,
-        tlsTrustAll = o.getOrDefault("tls.trustAll", "false").toBoolean,
+        tls = parsed(o, "tls", "true or false")(_.toBoolean).getOrElse(false),
+        tlsTrustAll = parsed(o, "tls.trustAll", "true or false")(_.toBoolean).getOrElse(false),
         // protocol negotiation: .option("resp", "3") sends HELLO 3 on every
         // connection (loud failure on pre-6.0 servers) — reply SHAPES differ
         // (map-typed HGETALL, set frames) but the parsed rows are identical,
@@ -107,7 +117,8 @@ object RedisSources {
             s"resp must be '2' (default) or '3', got '$other'")
         }),
       pattern = o.getOrDefault("pattern", "*"),
-      count = o.getOrDefault("scan.count", "2048").toInt, // reference batch size, resp_parser.cpp:159-161
+      // reference batch size, resp_parser.cpp:159-161
+      count = parsed(o, "scan.count", "an integer")(_.toInt).getOrElse(2048),
       // `SCAN ... TYPE t` server-side type filter (Redis ≥6.0): opt-in
       // so existing plans stay byte-identical; on a mixed keyspace
       // `.option("scan.type", "hash")` keeps string/stream keys from
@@ -120,13 +131,14 @@ object RedisSources {
       },
       partitionPatterns = Option(o.get("partition.patterns")).toSeq
         .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)),
-      slots = o.getOrDefault("partition.slots", "0").toInt,
+      slots = parsed(o, "partition.slots", "an integer")(_.toInt).getOrElse(0),
       clusterMode = o.getOrDefault("partition.mode", "") match {
         case "" => false
         case "cluster" => true
         case other => throw new IllegalArgumentException(
           s"partition.mode must be 'cluster' (or unset), got '$other'")
       })
+    require(opts.count >= 1, s"scan.count must be >= 1, got ${opts.count}")
     require(!opts.clusterMode || (opts.partitionPatterns.isEmpty && opts.slots <= 1),
       "partition.mode=cluster already shards by node ownership; " +
         "it cannot combine with partition.patterns/partition.slots")
@@ -462,23 +474,14 @@ final case class RedisInputPartition(host: String, port: Int, patterns: Seq[Stri
     extends InputPartition
 
 class RedisReaderFactory(kind: RedisSources.ValueKind) extends PartitionReaderFactory {
-  /** Only pushed-topN partitions read rows; see [[supportColumnarReads]]. */
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[RedisInputPartition]
-    new RedisTopNPartitionReader(p, p.topN.getOrElse(
-      throw new IllegalStateException(s"$p reads columnar, not rows")))
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new IllegalStateException(s"$partition reads columnar, not rows")
 
   /** Columnar handoff (SURVEY §1.1 optimization item, completed r17):
-    * key, kv AND hash scans emit one ColumnarBatch per SCAN page, so
-    * Spark's codegen'd ColumnarToRow consumes vectors instead of
-    * row-at-a-time InternalRows — kv pages resolve with ONE pipelined
-    * MGET, missing keys landing as vector nulls, and hash pages with one
-    * write of HGETALLs into a map column. Only pushed-topN
-    * (bounded heap with cross-page state) keeps the row reader.
+    * every keyspace partition emits ColumnarBatches, so Spark's codegen'd
+    * ColumnarToRow consumes vectors instead of row-at-a-time InternalRows.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[RedisInputPartition].topN.isEmpty
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[RedisInputPartition]
@@ -495,7 +498,8 @@ class RedisReaderFactory(kind: RedisSources.ValueKind) extends PartitionReaderFa
   * a (key, value) pair of vectors, with null-slot misses, and in hash
   * mode with one HGETALL per key into a [[RedisMapColumn]]; the next
   * page's SCAN goes out in the same write, so such a page also costs one
-  * round trip.
+  * round trip. A pushed ORDER BY key LIMIT n walks every page into a
+  * bounded heap instead, and emits the heap as one batch at the end.
   *
   * All replies are read in place from the connection's receive buffer,
   * and each key, value and field byte is copied once, into a
@@ -514,7 +518,9 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, kind: RedisSources.Va
   private var patternIdx = 0
   private var done = false
   private var current: ColumnarBatch = _
-  private var remaining: Int = p.limit.getOrElse(Int.MaxValue)
+  // a pushed top-N reads every page into its heap; a LIMIT does not apply
+  private val topN = p.topN.map(new RedisTopN(_)).orNull
+  private var remaining: Int = if (topN != null) Int.MaxValue else p.limit.getOrElse(Int.MaxValue)
   // one page's keys and values, as views into the receive buffer
   private val keys = new RespCodec.ArrayView
   private val values = new RespCodec.ArrayView
@@ -543,7 +549,8 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, kind: RedisSources.Va
         patternIdx += 1
         if (patternIdx >= p.patterns.length) done = true
       }
-      if (keys.size > 0) {
+      if (topN != null) topN.admit(keys)
+      else if (keys.size > 0) {
         val keyVec = new RedisStringColumn(keys.size, keys.payload)
         val n = takeKeys(keyVec)
         if (n > 0) current = new ColumnarBatch(
@@ -561,6 +568,10 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, kind: RedisSources.Va
     if (!guarded && !limitHit) {
       guarded = true
       RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
+      if (topN != null) {
+        val keyVec = topN.column()
+        if (keyVec.rows > 0) { current = new ColumnarBatch(Array(keyVec), keyVec.rows); return true }
+      }
     }
     false
   }
@@ -620,18 +631,10 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, kind: RedisSources.Va
     val next = if (scanInFlight) scan else null
     if (!strings) {
       RedisCommands.hgetallView(conn, fetch, n, hashes, keyVec.getBinary, next = next)
-      return new RedisMapColumn(hashes, n)
+      return new RedisMapColumn(hashes, n, RedisMapColumn.Sorted)
     }
     RedisCommands.mgetView(conn, fetch, n, values, next)
-    val vec = new RedisStringColumn(n, values.payload)
-    val buf = values.buf
-    j = 0
-    while (j < n) {
-      if (values.isNil(j)) vec.putNull(j)
-      else vec.put(j, buf, values.offset(j), values.length(j))
-      j += 1
-    }
-    vec
+    RedisStringColumn.of(values)
   }
 
   override def get(): ColumnarBatch = current
@@ -669,7 +672,7 @@ abstract class RedisColumn(dt: DataType) extends org.apache.spark.sql.vectorized
   * (Spark's `OnHeapColumnVector` grows its byte array by doubling, and
   * each growth also reallocates a null-flag array of the same size.)
   */
-final class RedisStringColumn(rows: Int, payload: Long) extends RedisColumn(StringType) {
+final class RedisStringColumn(val rows: Int, payload: Long) extends RedisColumn(StringType) {
   private val data = new Array[Byte](Math.toIntExact(payload))
   private val offsets = new Array[Int](rows)
   private val lengths = new Array[Int](rows)
@@ -693,35 +696,53 @@ final class RedisStringColumn(rows: Int, payload: Long) extends RedisColumn(Stri
     if (lengths(row) < 0) null else java.util.Arrays.copyOfRange(data, offsets(row), offsets(row) + lengths(row))
 }
 
-/** The MAP<STRING, STRING> column of `rows` HGETALL replies: row `j`'s
-  * entries are rows [offsets(j), offsets(j + 1)) of a key and a value
-  * [[RedisStringColumn]], in Spark's StringType order of the keys (UTF-8
-  * binary). Each field byte is copied in once, here.
+object RedisStringColumn {
+  /** The elements of `view`, a nil as a null. */
+  def of(view: RespCodec.ArrayView): RedisStringColumn = {
+    val vec = new RedisStringColumn(view.size, view.payload)
+    var i = 0
+    while (i < view.size) {
+      if (view.isNil(i)) vec.putNull(i)
+      else vec.put(i, view.buf, view.offset(i), view.length(i))
+      i += 1
+    }
+    vec
+  }
+}
+
+/** The MAP<STRING, STRING> column of `rows` runs of field/value pairs:
+  * row `j`'s entries are rows [offsets(j), offsets(j + 1)) of a key and a
+  * value [[RedisStringColumn]], in the order `order` leaves them. Each
+  * field byte is copied in once, here.
   */
-final class RedisMapColumn(h: RedisCommands.HashReplies, rows: Int)
+final class RedisMapColumn(runs: RespCodec.FieldRuns, rows: Int, order: RedisMapColumn.Order)
     extends RedisColumn(RedisSources.FieldsType) {
   private val offsets = new Array[Int](rows + 1)
   private val (keys, values) = {
+    var pairs = 0
     var keyBytes, valueBytes = 0L
     for (j <- 0 until rows) {
-      var i = h.from(j)
-      while (i < h.to(j)) { keyBytes += h.view(j).length(i); valueBytes += h.view(j).length(i + 1); i += 2 }
-      offsets(j + 1) = offsets(j) + (h.to(j) - h.from(j)) / 2
+      val v = runs.view(j)
+      var i = runs.from(j)
+      while (i < runs.to(j)) { keyBytes += v.length(i); valueBytes += v.length(i + 1); i += 2 }
+      pairs += (runs.to(j) - runs.from(j)) / 2
     }
-    (new RedisStringColumn(offsets(rows), keyBytes), new RedisStringColumn(offsets(rows), valueBytes))
+    // room for every pair: a merged duplicate name leaves its room unused
+    (new RedisStringColumn(pairs, keyBytes), new RedisStringColumn(pairs, valueBytes))
   }
   locally {
-    // each row's key indices, sorted by the keys' bytes, unsigned
-    val order, scratch = new Array[Int](offsets(rows))
+    // each row's name indices, as `order` leaves them
+    val idx, scratch = new Array[Int](keys.rows)
     for (j <- 0 until rows) {
-      val v = h.view(j)
+      val v = runs.view(j)
       var k = offsets(j)
-      while (k < offsets(j + 1)) { order(k) = h.from(j) + 2 * (k - offsets(j)); k += 1 }
-      RedisMapColumn.sortByKey(v, order, scratch, offsets(j), offsets(j + 1))
+      var i = runs.from(j)
+      while (i < runs.to(j)) { idx(k) = i; k += 1; i += 2 }
+      offsets(j + 1) = offsets(j) + order(v, idx, scratch, offsets(j), k)
       k = offsets(j)
       while (k < offsets(j + 1)) {
-        keys.put(k, v.buf, v.offset(order(k)), v.length(order(k)))
-        values.put(k, v.buf, v.offset(order(k) + 1), v.length(order(k) + 1))
+        keys.put(k, v.buf, v.offset(idx(k)), v.length(idx(k)))
+        values.put(k, v.buf, v.offset(idx(k) + 1), v.length(idx(k) + 1))
         k += 1
       }
     }
@@ -735,8 +756,49 @@ final class RedisMapColumn(h: RedisCommands.HashReplies, rows: Int)
 }
 
 object RedisMapColumn {
+  /** Orders one row's entries. `idx[from, to)` holds the row's name
+    * indices into `v` in reply order, each name's value at the index after
+    * it, and `scratch[from, to)` is free to use. Leaves the row's entries
+    * in idx[from, from + n), as name indices, and returns n.
+    */
+  sealed trait Order {
+    def apply(v: RespCodec.ArrayView, idx: Array[Int], scratch: Array[Int], from: Int, to: Int): Int
+  }
+
+  /** Spark's StringType order of the names, UTF-8 binary: a hash's. */
+  object Sorted extends Order {
+    def apply(v: RespCodec.ArrayView, idx: Array[Int], scratch: Array[Int], from: Int, to: Int): Int = {
+      sortByKey(v, idx, scratch, from, to)
+      to - from
+    }
+  }
+
+  /** Reply order, a stream entry's: a name repeated within the row keeps
+    * its first position and takes its last value.
+    */
+  object ReplyOrder extends Order {
+    def apply(v: RespCodec.ArrayView, idx: Array[Int], scratch: Array[Int], from: Int, to: Int): Int = {
+      if (to - from < 2) return to - from
+      val first = idx(from) // the names are 2 apart
+      sortByKey(v, idx, scratch, from, to) // stable: equal names stay in reply order
+      java.util.Arrays.fill(scratch, from, to, -1)
+      var k = from
+      while (k < to) {
+        var e = k + 1
+        while (e < to && compareKeys(v, idx(k), idx(e)) == 0) e += 1
+        // at the first one's position, the last one: its value
+        scratch(from + (idx(k) - first) / 2) = idx(e - 1)
+        k = e
+      }
+      var n = from
+      k = from
+      while (k < to) { if (scratch(k) >= 0) { idx(n) = scratch(k); n += 1 }; k += 1 }
+      n - from
+    }
+  }
+
   /** Merge-sorts the key indices `idx[from, to)` into `v` through
-    * `scratch`, by the keys' bytes, unsigned: UTF-8 binary order.
+    * `scratch`, by the keys' bytes, unsigned: UTF-8 binary order. Stable.
     */
   private def sortByKey(v: RespCodec.ArrayView, idx: Array[Int], scratch: Array[Int], from: Int, to: Int): Unit =
     if (to - from > 1) {
@@ -759,68 +821,55 @@ object RedisMapColumn {
       v.buf, v.offset(y), v.offset(y) + v.length(y))
 }
 
-/** Pushed ORDER BY key LIMIT n, the one mode that reads rows: SCAN order
-  * is arbitrary, so the cursor drains — every key must be seen — but only
-  * an n-element bounded heap is kept, so the partition emits n keys, not
-  * the keyspace.
+/** Pushed ORDER BY key LIMIT n: SCAN order is arbitrary, so the cursor
+  * drains — every key must be seen — but only an n-element bounded heap
+  * is kept, so the partition emits n keys, not the keyspace.
   */
-class RedisTopNPartitionReader(p: RedisInputPartition, t: RedisSources.TopN)
-    extends PartitionReader[InternalRow] {
+private final class RedisTopN(t: RedisSources.TopN) {
+  // The heap MUST select with Spark's StringType ordering — UTF8String
+  // binary (code-point) order — not java.lang.String's UTF-16 code-unit
+  // order; they disagree on supplementary characters (emoji sort AFTER
+  // U+FFFF in binary order but before it in UTF-16), and keys dropped
+  // here are gone before Spark's re-sort can fix them.
+  private val utf8Asc = new Ordering[UTF8String] {
+    def compare(a: UTF8String, b: UTF8String): Int = a.compareTo(b)
+  }
+  private val ord = if (t.ascending) utf8Asc else utf8Asc.reverse
+  // max-heap of the n best-so-far: root is the WORST kept key
+  private val heap = new java.util.PriorityQueue[UTF8String](math.max(1, t.n), ord.reverse)
+  // SCAN may return a key TWICE during a rehash/migration (the same
+  // documented behavior the LIMIT path dedups with its seen-set):
+  // without the dedup both copies would occupy heap slots, evicting a
+  // distinct key that belongs in the true top-n — and evicted keys
+  // are gone before Spark's re-sort can restore them. The set is
+  // bounded by the keys ADMITTED to the heap's vicinity, not the
+  // keyspace: only keys that beat the current worst are remembered.
+  private val seen = new java.util.HashSet[UTF8String]()
 
-  private val conn = new RedisConnection(p.host, p.port, p.link)
-  private lazy val rows: Iterator[InternalRow] = drainTopN()
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-
-  override def get(): InternalRow = current
-
-  private def drainTopN(): Iterator[InternalRow] = {
-    // The heap MUST select with Spark's StringType ordering — UTF8String
-    // binary (code-point) order — not java.lang.String's UTF-16 code-unit
-    // order; they disagree on supplementary characters (emoji sort AFTER
-    // U+FFFF in binary order but before it in UTF-16), and keys dropped
-    // here are gone before Spark's re-sort can fix them.
-    val utf8Asc = new Ordering[UTF8String] {
-      def compare(a: UTF8String, b: UTF8String): Int = a.compareTo(b)
-    }
-    val ord = if (t.ascending) utf8Asc else utf8Asc.reverse
-    // max-heap of the n best-so-far: root is the WORST kept key
-    val heap = new java.util.PriorityQueue[UTF8String](math.max(1, t.n), ord.reverse)
-    // SCAN may return a key TWICE during a rehash/migration (the same
-    // documented behavior the LIMIT path dedups with its seen-set):
-    // without the dedup both copies would occupy heap slots, evicting a
-    // distinct key that belongs in the true top-n — and evicted keys
-    // are gone before Spark's re-sort can restore them. The set is
-    // bounded by the keys ADMITTED to the heap's vicinity, not the
-    // keyspace: only keys that beat the current worst are remembered.
-    val seen = new java.util.HashSet[UTF8String]()
-    val keys = new RespCodec.ArrayView
-    p.patterns.foreach { pattern =>
-      RedisCommands.scanWalk(conn, pattern, p.count, p.scanType, keys) {
-        var i = 0
-        while (i < keys.size) {
-          // a view into the receive buffer; copied only when admitted
-          val k = UTF8String.fromBytes(keys.buf, keys.offset(i), keys.length(i))
-          if ((heap.size < t.n || (heap.size > 0 && ord.lt(k, heap.peek()))) && !seen.contains(k)) {
-            val owned = k.copy()
-            seen.add(owned)
-            if (heap.size >= t.n) seen.remove(heap.poll())
-            heap.add(owned)
-          }
-          i += 1
-        }
+  /** Offers one page's keys to the heap. */
+  def admit(keys: RespCodec.ArrayView): Unit = {
+    var i = 0
+    while (i < keys.size) {
+      // a view into the receive buffer; copied only when admitted
+      val k = UTF8String.fromBytes(keys.buf, keys.offset(i), keys.length(i))
+      if ((heap.size < t.n || (heap.size > 0 && ord.lt(k, heap.peek()))) && !seen.contains(k)) {
+        val owned = k.copy()
+        seen.add(owned)
+        if (heap.size >= t.n) seen.remove(heap.poll())
+        heap.add(owned)
       }
+      i += 1
     }
-    // cluster mode: fail loudly if this node's plan-time slots moved
-    // while the cursor was walking
-    RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
+  }
+
+  /** The kept keys, best first; empties the heap. */
+  def column(): RedisStringColumn = {
     val out = new Array[UTF8String](heap.size)
     var i = out.length - 1
     while (i >= 0) { out(i) = heap.poll(); i -= 1 } // heap pops worst-first
-    out.iterator.map(k => InternalRow(k))
+    val vec = new RedisStringColumn(out.length, out.map(_.numBytes.toLong).sum)
+    i = 0
+    while (i < out.length) { val b = out(i).getBytes; vec.put(i, b, 0, b.length); i += 1 }
+    vec
   }
-
-  override def close(): Unit = conn.close()
 }

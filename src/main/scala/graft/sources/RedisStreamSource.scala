@@ -1,164 +1,20 @@
 package graft.sources
 
 import java.util
-import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.net.{RedisCommands, RedisConnection, RedisLink}
-
-/** Structured Streaming source over the Redis keyspace: each micro-batch
-  * emits the keys that APPEARED since the previous batch (snapshot diff
-  * via SCAN) — the SURVEY §7 "streaming Redis source" stretch item.
-  *
-  *   spark.readStream.format("redis-key-stream")
-  *     .option("host", h).option("port", p).option("pattern", "user:*")
-  *     .load()                                     // → (key_name STRING)
-  *
-  * Design notes:
-  *  - Keyspace notifications (`notify-keyspace-events` + SUBSCRIBE) are
-  *    Redis pub/sub, which is fire-and-forget: a dropped subscriber loses
-  *    events, so notifications cannot back a replayable offset log either.
-  *    Polling SCAN snapshots gives the same at-most-once arrival semantics
-  *    with strictly simpler machinery and no server reconfiguration.
-  *  - Like Spark's own socket source, this source is NOT fault-tolerant:
-  *    offsets index an in-driver buffer of pending batches, so a restarted
-  *    query re-seeds from the current keyspace instead of replaying. Use
-  *    it for monitoring/ingest-trigger pipelines, not exactly-once ETL.
-  *  - Driver state is the seen-key set (bounded by keyspace size). The
-  *    SCAN itself runs driver-side per trigger — one cursor, same cost
-  *    model as the reference's scan; executors only read the diff.
-  *  - Deletions are not emitted (a SCAN diff sees only appearances);
-  *    `key_name` matches the batch `redis-scan` schema so downstream
-  *    plans (joins against `redis_kv`, `redis_get` lookups) are reusable.
-  */
-class RedisKeyStreamProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-  override def shortName(): String = "redis-key-stream"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.ScanSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new RedisStreamTable(RedisSources.parseOptions(properties))
-}
-
-class RedisStreamTable(opts: RedisSources.Options) extends Table with SupportsRead {
-  override def name(): String = s"redis-key-stream(${opts.host}:${opts.port}, ${opts.pattern})"
-  override def schema(): StructType = RedisSources.ScanSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = RedisSources.ScanSchema
-        override def description(): String =
-          s"RedisKeyStream(pattern=${opts.pattern}, count=${opts.count})"
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new RedisKeyMicroBatchStream(opts)
-      }
-    }
-}
-
-/** Offset = number of snapshots taken so far. */
-final case class RedisStreamOffset(snapshot: Long) extends Offset {
-  override def json(): String = snapshot.toString
-}
-
-class RedisKeyMicroBatchStream(opts: RedisSources.Options)
-    extends MicroBatchStream with SupportsAdmissionControl {
-  private val seen = mutable.HashSet[String]()
-  private val pending = mutable.TreeMap[Long, Seq[String]]()
-  private var snapshot = 0L
-  private var initialized = false
-
-  private def scanKeys(): Seq[String] = {
-    val conn = opts.connect()
-    try RedisCommands.scanAll(conn, opts.pattern, opts.count) finally conn.close()
-  }
-
-  override def initialOffset(): Offset = RedisStreamOffset(0L)
-
-  // Admission-control form: Spark hands us the START offset, which on a
-  // checkpoint restart is the restored committed offset N while this fresh
-  // instance's counter still sits at 0. Without the fast-forward the next
-  // snapshot would be numbered 1, planInputPartitions(N, 1) would emit
-  // nothing, and commit(1) would drop the buffered keys — silently
-  // swallowing the documented re-seed batch. Jumping the counter to N makes
-  // the first post-restart snapshot land at N+1 and actually re-emit the
-  // current keyspace. (The no-arg latestOffset() is never called once
-  // SupportsAdmissionControl is implemented.)
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
-    val restored = start.asInstanceOf[RedisStreamOffset].snapshot
-    if (restored > snapshot) snapshot = restored
-    val current = scanKeys()
-    val fresh = current.filterNot(seen)
-    // the first snapshot is batch 1: existing keys are "new" to the query
-    if (fresh.nonEmpty || !initialized) {
-      initialized = true
-      snapshot += 1
-      seen ++= fresh
-      pending(snapshot) = fresh
-    }
-    RedisStreamOffset(snapshot)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = synchronized {
-    val s = start.asInstanceOf[RedisStreamOffset].snapshot
-    val e = end.asInstanceOf[RedisStreamOffset].snapshot
-    val keys = pending.range(s + 1, e + 1).values.flatten.toArray
-    Array(RedisKeyBatch(keys))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val keys = partition.asInstanceOf[RedisKeyBatch].keys
-      new PartitionReader[InternalRow] {
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < keys.length }
-        override def get(): InternalRow = InternalRow(UTF8String.fromString(keys(i)))
-        override def close(): Unit = ()
-      }
-    }
-
-  override def deserializeOffset(json: String): Offset = synchronized {
-    val restored = json.toLong
-    // Checkpoint restart: the committed offset N survives but this stream's
-    // in-memory counter restarts at 0. Without fast-forwarding, the next
-    // snapshot would be numbered 1 and planInputPartitions(N, 1) would emit
-    // nothing (and commit would drop the buffered keys) until the counter
-    // climbed past N — silently swallowing the re-seed batch. Jumping the
-    // counter to N makes the first post-restart snapshot land at N+1, so
-    // the current keyspace is actually re-emitted as documented above.
-    if (restored > snapshot) snapshot = restored
-    RedisStreamOffset(restored)
-  }
-
-  override def commit(end: Offset): Unit = synchronized {
-    val e = end.asInstanceOf[RedisStreamOffset].snapshot
-    pending.keys.takeWhile(_ <= e).toSeq.foreach(pending.remove)
-  }
-
-  override def stop(): Unit = ()
-}
-
-final case class RedisKeyBatch(keys: Array[String]) extends InputPartition
-
-// ---------------------------------------------------------------------------
-// redis-stream: Redis Streams (XADD/XRANGE) as a replayable Structured
-// Streaming source — the real ingestion surface (the key-stream source
-// above is a polling SCAN diff and says so).
+import graft.resp.RespCodec
 
 /** Redis Streams as a DSv2 source, batch AND micro-batch:
   *
@@ -167,18 +23,19 @@ final case class RedisKeyBatch(keys: Array[String]) extends InputPartition
   *     .option("maxEntriesPerTrigger", "1000")
   *     .load()            // → (entry_id STRING, fields MAP<STRING,STRING>)
   *
-  * Unlike `redis-key-stream`, this IS fault-tolerant: offsets are stream
-  * entry IDs (`<ms>-<seq>`, strictly increasing, assigned at XADD — the
-  * public Redis Streams contract), so a restarted query resumes from its
+  * The source is fault-tolerant: offsets are stream entry IDs
+  * (`<ms>-<seq>`, strictly increasing, assigned at XADD — the public
+  * Redis Streams contract), so a restarted query resumes from its
   * checkpointed ID and a replayed micro-batch re-reads exactly the same
   * entries via `XRANGE (start end` (exclusive start, Redis 6.2+). The
-  * executor reads the range; the driver retains only the two bounding
-  * IDs between triggers. One honest cost: with `maxEntriesPerTrigger`
-  * set, the ADMISSION probe must find "the id N entries ahead", and
-  * Redis has no ids-only XRANGE — the driver pays one capped XRANGE
-  * (entries included, immediately discarded) per trigger to learn the
-  * batch's end id. Size the cap accordingly; without a cap the probe is
-  * a 1-entry XREVRANGE.
+  * executor reads the range, one columnar batch per XRANGE page read in
+  * place; the driver retains only the two bounding IDs between triggers.
+  * One honest cost: with `maxEntriesPerTrigger` set, the ADMISSION probe
+  * must find "the id N entries ahead", and Redis has no ids-only XRANGE —
+  * the driver receives one capped XRANGE per trigger, entries included,
+  * and reads it in place, decoding only the last id. The entries' bytes
+  * still cross the network: size the cap accordingly. Without a cap the
+  * probe is a 1-entry XREVRANGE.
   *
   * Semantics and limits, stated honestly:
   *  - Exactly-once REPLAY requires the replayed range to still exist on
@@ -193,8 +50,10 @@ final case class RedisKeyBatch(keys: Array[String]) extends InputPartition
   *    partition per stream per batch, a `stream` column prepended
   *    (the Kafka topic-column analog), admission cap split across
   *    streams deterministically (see [[RedisMultiStreamMicroBatch]]).
-  *  - Entry fields are exposed as MAP<STRING,STRING>; a duplicated field
-  *    name within one entry (legal in Redis) keeps the LAST occurrence.
+  *  - Entry fields are exposed as MAP<STRING,STRING> in server order; a
+  *    duplicated field name within one entry (legal in Redis) keeps its
+  *    first position and its LAST value. A reply that does not pair
+  *    every field name with a bulk value fails the read, naming XRANGE.
   *  - `startingOffsets` = `earliest` (default) | `latest` | an entry id
   *    `<ms>-<seq>` (start strictly AFTER it — backfill-from-a-point),
   *    mirroring the Kafka source's option.
@@ -317,7 +176,7 @@ object RedisStreamEntries {
         "redis-stream: options stream / streams / streams.pattern are " +
           "mutually exclusive — set exactly one")
     }
-    val maxPer = Option(o.get("maxEntriesPerTrigger")).map(_.toInt)
+    val maxPer = RedisSources.parsed(o, "maxEntriesPerTrigger", "an integer")(_.toInt)
     maxPer.foreach(n => require(n > 0, s"maxEntriesPerTrigger must be > 0, got $n"))
     val start = o.getOrDefault("startingOffsets", "earliest") match {
       case "earliest" => StartEarliest
@@ -334,7 +193,7 @@ object RedisStreamEntries {
           s"'<ms>-<seq>' with components up to 2^63-1 (start strictly " +
           s"after it), got '$other'")
     }
-    val maxLen = Option(o.get("maxlen")).map(_.toLong)
+    val maxLen = RedisSources.parsed(o, "maxlen", "an integer")(_.toLong)
     maxLen.foreach(n => require(n > 0, s"maxlen must be > 0, got $n"))
     StreamOptions(selection, maxPer, start,
       idColumn = Option(o.get("idColumn")).filter(_.nonEmpty),
@@ -677,12 +536,12 @@ final case class RedisStreamWriterFactory(opts: RedisSources.Options,
       // multiset in a different order is a different payload. Each check
       // ranges the suspect's OWN target stream (routed mode).
       if (suspects.nonEmpty) {
-        val checks = conn.pipeline(suspects.toSeq.map { case (target, id, _) =>
-          Seq("XRANGE", target, id, id, "COUNT", "1")
-        })
-        checks.zip(suspects).foreach { case (reply, (target, id, fields)) =>
-          val replay = RedisCommands.parseEntries(reply, "XRANGE")
-            .headOption.exists(e => e.id == id && e.fields == fields)
+        val entries = new RespCodec.EntriesView
+        RedisCommands.readEntries(conn, suspects.toSeq.map { case (target, id, _) =>
+          RedisCommands.xrangeCommand(target, id, id, Some(1))
+        }, entries) { j =>
+          val (target, id, fields) = suspects(j)
+          val replay = entries.size > 0 && entries.id(0) == id && entries.fieldStrings(0) == fields
           if (!replay) throw new java.io.IOException(
             s"XADD $target $id rejected (id <= stream top) and no equal " +
               s"entry exists at that id — out-of-order or colliding " +
@@ -810,51 +669,54 @@ final case class RedisStreamRange(host: String, port: Int, stream: String,
     emitStream: Boolean = false)
     extends InputPartition
 
+/** Drains one range with paged `XRANGE (cursor end COUNT page` — bounded
+  * memory per page, exclusive-start resume after each page's last id.
+  * Each page is read in place into one ColumnarBatch: the entry ids, and
+  * the fields as a [[RedisMapColumn]] in server order, behind the stream
+  * name in multi-stream reads. Each id and field byte is copied once.
+  */
+class RedisStreamRangeReader(p: RedisStreamRange) extends PartitionReader[ColumnarBatch] {
+  private val conn = new RedisConnection(p.host, p.port, p.link)
+  private val entries = new RespCodec.EntriesView
+  private var cursor = p.startExclusive
+  private var done = false
+  private var current: ColumnarBatch = _
+
+  override def next(): Boolean = {
+    if (current != null) { current.close(); current = null }
+    if (done) return false
+    RedisCommands.readEntries(conn,
+      Seq(RedisCommands.xrangeCommand(p.stream, "(" + cursor, p.endInclusive, Some(p.pageSize))), entries)()
+    val n = entries.size
+    if (n < p.pageSize) done = true
+    if (n == 0) return false
+    cursor = entries.id(n - 1)
+    val columns = Array[ColumnVector](RedisStringColumn.of(entries.ids),
+      new RedisMapColumn(entries, n, RedisMapColumn.ReplyOrder))
+    current = new ColumnarBatch(if (!p.emitStream) columns else {
+      val stream = new ConstantColumnVector(n, StringType)
+      stream.setUtf8String(UTF8String.fromString(p.stream))
+      stream +: columns
+    }, n)
+    true
+  }
+  override def get(): ColumnarBatch = current
+  override def close(): Unit = {
+    if (current != null) current.close()
+    conn.close()
+  }
+}
+
 object RedisMultiStreamMicroBatch {
-  import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
   import RedisStreamEntries._
 
-  /** Shared by the batch and micro-batch faces: drain the range with
-    * paged `XRANGE (cursor end COUNT page` — bounded memory per page,
-    * exclusive-start resume after each page's last id.
-    */
-  val readerFactory: PartitionReaderFactory = (partition: InputPartition) => {
-    val p = partition.asInstanceOf[RedisStreamRange]
-    new PartitionReader[InternalRow] {
-      private val conn = new RedisConnection(p.host, p.port, p.link)
-      private var cursor = p.startExclusive
-      private var done = false
-      private var batch: Iterator[InternalRow] = Iterator.empty
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        while (!batch.hasNext && !done) {
-          val page = RedisCommands.xrange(conn, p.stream,
-            "(" + cursor, p.endInclusive, Some(p.pageSize))
-          if (page.isEmpty) done = true
-          else {
-            cursor = page.last.id
-            if (page.length < p.pageSize) done = true
-            val streamUtf8 = UTF8String.fromString(p.stream)
-            batch = page.iterator.map { e =>
-              // duplicate field names keep the last occurrence (map key
-              // uniqueness); order is server order otherwise
-              val m = scala.collection.mutable.LinkedHashMap[String, String]()
-              e.fields.foreach { case (f, v) => m(f) = v }
-              val fieldsMap = ArrayBasedMapData(
-                m.keysIterator.map(UTF8String.fromString).toArray,
-                m.valuesIterator.map(UTF8String.fromString).toArray)
-              if (p.emitStream)
-                InternalRow(streamUtf8, UTF8String.fromString(e.id), fieldsMap)
-              else InternalRow(UTF8String.fromString(e.id), fieldsMap)
-            }
-          }
-        }
-        if (batch.hasNext) { current = batch.next(); true } else false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = conn.close()
-    }
+  /** Shared by the batch and micro-batch faces. */
+  val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
+    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+      throw new IllegalStateException(s"$partition reads columnar, not rows")
+    override def supportColumnarReads(partition: InputPartition): Boolean = true
+    override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+      new RedisStreamRangeReader(partition.asInstanceOf[RedisStreamRange])
   }
 
   /** Resolve the member streams of a selection. Pattern mode walks one
@@ -989,7 +851,7 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
           }.toMap
         }
         var carry = 0
-        val advanced = scala.collection.mutable.LinkedHashMap[String, String]()
+        val advanced = scala.collection.mutable.HashMap[String, String]()
         val rangeEnds = scala.collection.mutable.HashMap[String, String]()
         // streams the FIRST pass already proved drained (a page shorter
         // than its quota means no more entries up to rangeEnd at probe
@@ -1011,18 +873,16 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
           val end = cap match {
             case Some(_) =>
               val quota = shares(s) + carry
-              if (quota <= 0 ||
-                  tip.exists(t => RedisCommands.compareStreamIds(t, from) <= 0)) {
-                if (tip.exists(t => RedisCommands.compareStreamIds(t, from) <= 0))
-                  drained += s // at its pinned tip: nothing to read later either
+              val atTip = tip.exists(t => RedisCommands.compareStreamIds(t, from) <= 0)
+              if (atTip) drained += s // at its pinned tip: nothing to read later either
+              if (quota <= 0 || atTip) {
                 carry = quota // nothing read: the whole quota rolls on
                 None
               } else {
-                val page = RedisCommands.xrange(c, s, "(" + from, rangeEnd,
-                  Some(quota))
-                if (page.length < quota) drained += s // exhausted up to rangeEnd
-                carry = quota - page.length
-                page.lastOption.map(_.id)
+                val (read, last) = RedisCommands.xrangeLast(c, s, "(" + from, rangeEnd, quota)
+                if (read < quota) drained += s // exhausted up to rangeEnd
+                carry = quota - read
+                last
               }
             case None =>
               if (tip.isDefined) tip.filter(t =>
@@ -1051,12 +911,9 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
             val atTip = drained.contains(s) || (rangeEnd != "+" &&
               RedisCommands.compareStreamIds(rangeEnd, from) <= 0)
             if (!atTip) {
-              val page = RedisCommands.xrange(c, s, "(" + from, rangeEnd,
-                Some(carry))
-              if (page.nonEmpty) {
-                carry -= page.length
-                advanced(s) = page.last.id
-              }
+              val (read, last) = RedisCommands.xrangeLast(c, s, "(" + from, rangeEnd, carry)
+              carry -= read
+              last.foreach(advanced(s) = _)
             }
           }
         }

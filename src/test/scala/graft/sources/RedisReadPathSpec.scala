@@ -18,7 +18,8 @@ import graft.resp.RespValue._
   * receive buffer, delivered in random 1 B–4 KiB writes: whatever the
   * fragmentation, the vectors hold exactly the bytes that were sent.
   * Faults, from an error reply to a stalled or malformed frame, fail the
-  * read or the query they belong to, and no later one.
+  * read or the query they belong to, and no later one. The same holds for
+  * the `redis-stream` range reader and admission probe over XRANGE pages.
   */
 class RedisReadPathSpec extends AnyFunSuite {
 
@@ -30,10 +31,11 @@ class RedisReadPathSpec extends AnyFunSuite {
 
   /** A RESP stub that answers each command (its arguments' bytes) with
     * `reply`, written in random 1 B–4 KiB chunks; a null reply closes the
-    * connection instead.
+    * connection instead, and so does the reply to a command named in
+    * `closeAfterReply`, once written.
     */
-  private final class ChunkedStub(reply: Seq[Array[Byte]] => Array[Byte], seed: Long)
-      extends AutoCloseable {
+  private final class ChunkedStub(reply: Seq[Array[Byte]] => Array[Byte], seed: Long,
+      closeAfterReply: Set[String] = Set.empty) extends AutoCloseable {
     private val server = new ServerSocket(0, 4, InetAddress.getLoopbackAddress)
     val port: Int = server.getLocalPort
     private val rnd = new Random(seed)
@@ -57,12 +59,14 @@ class RedisReadPathSpec extends AnyFunSuite {
       while (true) {
         RespCodec.decode(buf, 0, end) match {
           case RespCodec.Decoded(Arr(args), next) =>
-            received.add((args.head match { case b: Bulk => b.text; case o => o.toString }, next < end))
+            val name = args.head match { case b: Bulk => b.text; case o => o.toString }
+            received.add((name, next < end))
             System.arraycopy(buf, next, buf, 0, end - next)
             end -= next
             val bytes = reply(args.map { case b: Bulk => b.bytes; case o => fail(s"argument $o") })
             if (bytes == null) return
             chunked(out, bytes)
+            if (closeAfterReply(name)) return
           case RespCodec.Decoded(v, _) => fail(s"not a command: $v")
           case RespCodec.Incomplete =>
             if (end == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
@@ -433,5 +437,174 @@ class RedisReadPathSpec extends AnyFunSuite {
       assert(chain(intercept[Exception](get())).contains("ProtocolException"))
       assert(get() == Seq("vk:2", "vk:3"))
     } finally stub.close()
+  }
+
+  // ---- redis-stream pages: one in-place XRANGE reader ----
+
+  /** A range reader of stream `s` on `port`, from its start, `page` entries a page. */
+  private def rangeReader(port: Int, page: Int = 10, link: graft.net.RedisLink = graft.net.RedisLink(),
+      emitStream: Boolean = false) =
+    RedisMultiStreamMicroBatch.readerFactory.createColumnarReader(
+      RedisStreamRange("127.0.0.1", port, "s", "0-0", "+", page, link, emitStream))
+
+  /** An XRANGE page of `n` entries of one 3 KB field each. */
+  private def xrangePage(n: Int): Array[Byte] = RespCodec.encode(Arr((1 to n).map(i =>
+    Arr(Vector(Bulk(s"1-$i"), Arr(Vector(Bulk("f"), Bulk("v" * 3000)))))).toVector))
+
+  test("property: XRANGE pages read in place equal a reference walk over decode, through the range reader and the xrange wrapper") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.net.RedisCommands
+    val genBytes: Gen[Array[Byte]] = Gen.frequency(
+      1 -> Gen.const(Array.emptyByteArray),
+      // mostly invalid UTF-8, with CRs and LFs
+      3 -> Gen.listOf(Gen.oneOf(Gen.choose(Byte.MinValue, Byte.MaxValue), Gen.oneOf('\r'.toByte, '\n'.toByte)))
+        .map(_.toArray),
+      2 -> Gen.alphaNumStr.map(s => (s + "é✓😀").getBytes(UTF_8)),
+      1 -> Gen.choose(0, 4096).map(n => Array.tabulate[Byte](n)(i => (i * 7).toByte)))
+    // a small pool of names, so that entries repeat them
+    val genName: Gen[Array[Byte]] = Gen.frequency(
+      3 -> Gen.oneOf(Seq("a", "b", "é", "😀").map(_.getBytes(UTF_8)) :+ Array[Byte](-1, 13)),
+      1 -> genBytes)
+    val genEntry: Gen[RespValue] = for {
+      ms <- Gen.choose(0L, Long.MaxValue)
+      seq <- Gen.choose(0L, 99L)
+      simpleId <- Gen.oneOf(false, true)
+      n <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 8))
+      fields <- Gen.listOfN(n, Gen.zip(genName, genBytes))
+    } yield Arr(Vector(if (simpleId) Simple(s"$ms-$seq") else Bulk(s"$ms-$seq"),
+      Arr(fields.flatMap { case (f, v) => Vector(Bulk(f), Bulk(v)) }.toVector)))
+    val genPage = Gen.choose(0, 30).flatMap(Gen.listOfN(_, genEntry)).map(es => Arr(es.toVector))
+
+    def bytes(v: RespValue): Seq[Byte] = v match {
+      case b: Bulk => b.bytes.toSeq
+      case Simple(s) => s.getBytes(UTF_8).toSeq
+      case o => fail(o.toString)
+    }
+    /** The reference: `decode`'s tree walked into each entry's id and field/value pairs. */
+    def reference(reply: Array[Byte]): Seq[(Seq[Byte], Seq[(Seq[Byte], Seq[Byte])])] =
+      RespCodec.decodeFrame(reply, 0, reply.length) match {
+        case Arr(es) => es.map {
+          case Arr(Vector(id, Arr(fv))) => (bytes(id), fv.grouped(2).map(p => (bytes(p(0)), bytes(p(1)))).toSeq)
+          case o => fail(o.toString)
+        }
+        case o => fail(o.toString)
+      }
+    /** A map row: names in reply order, a repeated one at its first position with its last value. */
+    def mapRow(fields: Seq[(Seq[Byte], Seq[Byte])]): Seq[(Seq[Byte], Seq[Byte])] = {
+      val last = fields.toMap
+      fields.map(_._1).distinct.map(n => (n, last(n)))
+    }
+    def text(b: Seq[Byte]): String = new String(b.toArray, UTF_8)
+
+    val attribute = "|1\r\n+ttl\r\n:3\r\n".getBytes(UTF_8)
+    val push = RespCodec.encode(Push(Vector(Bulk("invalidate"), Arr(Vector(Bulk("x"))))))
+    @volatile var wire: Array[Byte] = null
+    val stub = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "HELLO" => RespCodec.encode(Mp(Vector((Bulk("proto"), Int64(3)))))
+        case "XRANGE" => wire
+      }
+    }, seed = 21)
+    // the stub serves one connection at a time: each read opens and
+    // closes its own
+    try Seq(false, true).foreach { resp3 =>
+      val link = graft.net.RedisLink(resp3 = resp3)
+      (0 until 60).foreach { i =>
+        val page = genPage(Gen.Parameters.default, Seed(i.toLong)).get
+        // RESP3: an attribute on the reply, or a push before it
+        val reply = (if (resp3 && i % 3 == 0) attribute else Array.emptyByteArray) ++ RespCodec.encode(page)
+        wire = (if (resp3 && i % 3 == 1) push else Array.emptyByteArray) ++ reply
+        val expected = reference(reply)
+
+        val emitStream = i % 2 == 1
+        val reader = rangeReader(stub.port, page = 1000, link = link, emitStream = emitStream)
+        try {
+          val rows = if (!reader.next()) Nil else {
+            val b = reader.get()
+            val at = if (emitStream) 1 else 0
+            (0 until b.numRows()).map { r =>
+              if (emitStream) assert(b.column(0).getUTF8String(r).toString == "s")
+              (b.column(at).getUTF8String(r).getBytes.toSeq, entries(b.column(at + 1), r))
+            }
+          }
+          assert(!reader.next(), "one page shorter than the page size ends the range")
+          assert(rows == expected.map { case (id, fs) => (id, mapRow(fs)) }, s"sample $i, resp3=$resp3")
+        } finally reader.close()
+
+        val conn = new graft.net.RedisConnection("127.0.0.1", stub.port, link)
+        try assert(RedisCommands.xrange(conn, "s", "-", "+") == expected.map { case (id, fs) =>
+          RedisCommands.StreamEntry(text(id), fs.map { case (f, v) => (text(f), text(v)) })
+        }, s"sample $i, resp3=$resp3")
+        finally conn.close()
+      }
+    } finally stub.close()
+  }
+
+  test("an XRANGE reply with an unpaired field or a nil value fails the batch redis-stream read, naming XRANGE") {
+    Seq("*1\r\n*2\r\n$3\r\n1-1\r\n*3\r\n$1\r\na\r\n$1\r\nx\r\n$1\r\nb\r\n",
+        "*1\r\n*2\r\n$3\r\n1-1\r\n*4\r\n$1\r\na\r\n$1\r\nx\r\n$1\r\nb\r\n$-1\r\n").foreach { xrange =>
+      val stub = new ChunkedStub({ args =>
+        new String(args.head, UTF_8) match {
+          case "XREVRANGE" => "*1\r\n*2\r\n$3\r\n1-1\r\n*2\r\n$1\r\na\r\n$1\r\nx\r\n".getBytes(UTF_8)
+          case "XRANGE" => xrange.getBytes(UTF_8)
+        }
+      }, seed = 15)
+      try {
+        val e = intercept[Exception](spark.read.format("redis-stream")
+          .option("host", "127.0.0.1").option("port", stub.port.toString).option("stream", "s").load().collect())
+        assert(chain(e).contains("unexpected XRANGE reply"), chain(e))
+      } finally stub.close()
+    }
+  }
+
+  test("a connection closed inside an XRANGE page fails the range reader's next(), never a short batch") {
+    Seq(1, 100, 4001, -2).foreach { cut =>
+      val s = new ChunkedStub({ _ =>
+        val page = xrangePage(3)
+        page.take(if (cut < 0) page.length + cut else cut)
+      }, seed = 16, closeAfterReply = Set("XRANGE"))
+      val reader = rangeReader(s.port)
+      try intercept[java.io.IOException](reader.next())
+      finally { reader.close(); s.close() }
+    }
+  }
+
+  test("an XRANGE page that stalls mid-frame fails the range reader's next() at the socket timeout") {
+    val s = new ChunkedStub(_ => xrangePage(3).dropRight(5), seed = 17)
+    val reader = rangeReader(s.port)
+    val t0 = System.nanoTime()
+    try {
+      intercept[java.net.SocketTimeoutException](reader.next())
+      assert(System.nanoTime() - t0 >= 4000000000L, "failed before the 5 s socket timeout")
+    } finally { reader.close(); s.close() }
+  }
+
+  test("-LOADING in place of an XRANGE page fails the range reader, naming XRANGE and the error") {
+    val err = "LOADING Redis is loading the dataset in memory"
+    val s = new ChunkedStub(_ => RespCodec.encode(Err(err)), seed = 18)
+    val reader = rangeReader(s.port)
+    try assert(intercept[java.io.IOException](reader.next()).getMessage.contains(s"XRANGE error: $err"))
+    finally { reader.close(); s.close() }
+  }
+
+  test("a connection closed inside the capped admission probe fails latestOffset, and the streaming query with it") {
+    val s = new ChunkedStub(_ => xrangePage(3).take(100), seed = 19, closeAfterReply = Set("XRANGE"))
+    try {
+      val opts = RedisSources.parseOptions(Map("host" -> "127.0.0.1", "port" -> s.port.toString).asJava)
+      val sopts = RedisStreamEntries.parseStreamOptions(Map("stream" -> "s", "maxEntriesPerTrigger" -> "5").asJava)
+      val stream = new RedisMultiStreamMicroBatch(opts, sopts)
+      try intercept[java.io.IOException](stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit))
+      finally stream.stop()
+
+      val q = spark.readStream.format("redis-stream")
+        .option("host", "127.0.0.1").option("port", s.port.toString)
+        .option("stream", "s").option("maxEntriesPerTrigger", "5").load()
+        .writeStream.format("noop").start()
+      try {
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(60000))
+        assert(chain(e).contains("connection closed by server"), chain(e))
+      } finally q.stop()
+    } finally s.close()
   }
 }

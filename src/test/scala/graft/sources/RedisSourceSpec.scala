@@ -310,11 +310,11 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected columnar kv handoff:\n$kvPlan")
     val got = kv.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got.size == 10 && got("testkey:0001") == "value1", got.toString)
-    // the pushed ORDER BY key LIMIT path carries bounded-heap state
-    // across pages — it must still plan the row reader
+    // the pushed ORDER BY key LIMIT path emits its bounded heap as one
+    // batch of the same columnar reader
     val topPlan = scan("testkey:*").orderBy("key_name").limit(3)
       .queryExecution.executedPlan.toString
-    assert(!topPlan.contains("ColumnarToRow"), topPlan)
+    assert(topPlan.contains("ColumnarToRow"), topPlan)
   }
 
   test("small scan.count forces multi-page cursor with identical results") {
@@ -1232,5 +1232,49 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(spark.table("xlat").collect().map(_.getString(0)).toSeq == Seq("9-1"))
       } finally q.stop()
     } finally authServer.stop()
+  }
+
+  test("redis-stream batch and micro-batch reads plan ColumnarToRow over their scan") {
+    val c = new graft.net.RedisConnection("127.0.0.1", port)
+    try (1 to 3).foreach(i => graft.net.RedisCommands.xadd(c, "plan:s", s"7-$i", Seq("f" -> s"v$i", "f" -> s"w$i")))
+    finally c.close()
+    def read = spark.read.format("redis-stream").option("host", "127.0.0.1").option("port", port)
+    val batch = read.option("stream", "plan:s").load()
+    assert(batch.queryExecution.executedPlan.toString.contains("ColumnarToRow"), batch.queryExecution.executedPlan)
+    // a repeated field name keeps its first position and its last value
+    assert(batch.collect().map(r => r.getString(0) -> r.getMap[String, String](1)).toSeq ==
+      (1 to 3).map(i => s"7-$i" -> Map("f" -> s"w$i")))
+    val multi = read.option("streams", "plan:s").load()
+    assert(multi.queryExecution.executedPlan.toString.contains("ColumnarToRow"), multi.queryExecution.executedPlan)
+    assert(multi.collect().map(r => (r.getString(0), r.getString(1))).toSeq == (1 to 3).map(i => ("plan:s", s"7-$i")))
+
+    val q = spark.readStream.format("redis-stream").option("host", "127.0.0.1").option("port", port)
+      .option("stream", "plan:s").option("maxEntriesPerTrigger", "2").load()
+      .writeStream.format("memory").queryName("planstream").start()
+    try {
+      graft.StreamTestGuard.drain(q)
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), plan)
+      assert(spark.table("planstream").collect().map(_.getString(0)).sorted.toSeq == (1 to 3).map(i => s"7-$i"))
+    } finally q.stop()
+  }
+
+  test("malformed numeric and boolean options fail naming the option and the value; scan.count must be >= 1") {
+    import scala.jdk.CollectionConverters._
+    Seq("port" -> "x", "scan.count" -> "2k", "partition.slots" -> "", "tls" -> "yes", "tls.trustAll" -> "1")
+      .foreach { case (k, v) =>
+        val e = intercept[IllegalArgumentException](RedisSources.parseOptions(Map(k -> v).asJava))
+        assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+      }
+    Seq("maxEntriesPerTrigger" -> "5.0", "maxlen" -> "x").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](
+        RedisStreamEntries.parseStreamOptions(Map("stream" -> "s", k -> v).asJava))
+      assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    // COUNT 0 would page a stream read with empty pages: refused before any read
+    val e = intercept[IllegalArgumentException](spark.read.format("redis-stream")
+      .option("host", "127.0.0.1").option("port", port).option("stream", "plan:s").option("scan.count", "0").load())
+    assert(e.getMessage.contains("scan.count must be >= 1, got 0"), e.getMessage)
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two checkouts on one perfbench workload with alternating pairs.
 
-    python3 tools/bench_pairs.py PARENT_DIR CHANGE_DIR --workload W --pairs N --seed S
+    python3 tools/bench_pairs.py PARENT_DIR CHANGE_DIR --workload W --pairs N --seed S [--out FILE]
 
 Pair i runs `python3 perfbench/run.py --workload W --seed S+i` once in
 each checkout (untraced, BENCHMARK.json's run_seconds), the parent first
@@ -14,6 +14,12 @@ verdict against the metric's `better` and `bound`:
               unless every change run beats every parent run;
   within      otherwise.
 The last line is the workload's verdict: the worst of its metrics'.
+
+A run that fails stops the comparison: the table covers the pairs
+completed before it, the failed run is named with its side, seed, exit
+code and the tail of its stderr, and the script exits non-zero. `--out`
+writes every run made, failed ones included, as a JSON list of
+{pair, seed, side, checkout, exit, metrics}.
 """
 import argparse
 import json
@@ -24,14 +30,14 @@ import sys
 
 
 def run(checkout, workload, seed):
-    """One untraced perfbench run in `checkout`; returns its metric values."""
+    """One untraced perfbench run in `checkout`: (exit code, metric values or
+    None when the run failed, stderr)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed)],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines:
-        sys.stderr.write(p.stderr[-3000:])
-        sys.exit(f"perfbench failed in {checkout} (exit {p.returncode})")
-    return {k: v["value"] for k, v in json.loads(lines[-1])["metrics"].items()}
+        return p.returncode, None, p.stderr
+    return p.returncode, {k: v["value"] for k, v in json.loads(lines[-1])["metrics"].items()}, p.stderr
 
 
 def quartiles(xs):
@@ -52,26 +58,52 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
+    ap.add_argument("--out", help="write every run's metrics to this JSON file")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
 
     sides = {"parent": [], "change": []}
+    runs, failed = [], None
     for i in range(a.pairs):
         seed = a.seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            sides[side].append(run(getattr(a, side), a.workload, seed))
+            code, values, stderr = run(getattr(a, side), a.workload, seed)
+            runs.append({"pair": i + 1, "seed": seed, "side": side, "checkout": getattr(a, side),
+                         "exit": code, "metrics": values})
+            if values is None:
+                failed = (side, seed, code, stderr)
+                break
+            sides[side].append(values)
+        if failed:
+            break
         print(f"pair {i + 1}/{a.pairs} (seed {seed}, {order[0]} first): " + ", ".join(
             f"{m['name']} {sides['parent'][-1][m['name']]:.4g}/{sides['change'][-1][m['name']]:.4g}"
             for m in metrics), flush=True)
+    if a.out:
+        with open(a.out, "w") as f:
+            json.dump(runs, f, indent=1)
 
-    print(f"== {a.workload}: {a.pairs} pairs, parent vs change, median [Q1-Q3]")
+    # a failed pair's completed run does not count
+    done = min(len(sides["parent"]), len(sides["change"]))
+    if done:
+        report(a.workload, metrics, sides["parent"][:done], sides["change"][:done])
+    if failed:
+        side, seed, code, stderr = failed
+        sys.stderr.write(stderr[-3000:])
+        sys.exit(f"perfbench failed: {side} run, seed {seed}, exit {code}, in {getattr(a, side)}; "
+                 f"{done} of {a.pairs} pairs completed")
+
+
+def report(workload, metrics, parent, change):
+    """Prints each metric's medians, wins and verdict, then the workload's."""
+    print(f"== {workload}: {len(parent)} pairs, parent vs change, median [Q1-Q3]")
     verdicts = []
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
-        p = [r[name] for r in sides["parent"]]
-        c = [r[name] for r in sides["change"]]
+        p = [r[name] for r in parent]
+        c = [r[name] for r in change]
         (pq1, pmed, pq3), (cq1, cmed, cq3) = quartiles(p), quartiles(c)
         wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
         worse = relative(cmed - pmed if lower else pmed - cmed, pmed)
@@ -83,7 +115,7 @@ def main():
         print(f"  {name:18s} parent {pmed:.4g} [{pq1:.4g}-{pq3:.4g}]  change {cmed:.4g} [{cq1:.4g}-{cq3:.4g}] "
               f"{m['unit']}  wins {wins}/{len(p)}  worse by {worse:+.1%}  spread {spread:.1%}  "
               f"bound {m['bound']:.0%}: {verdict}")
-    print(f"verdict {a.workload}: " + next(v for v in ("worse", "unresolved", "within") if v in verdicts))
+    print(f"verdict {workload}: " + next(v for v in ("worse", "unresolved", "within") if v in verdicts))
 
 
 if __name__ == "__main__":
