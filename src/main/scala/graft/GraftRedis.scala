@@ -103,9 +103,11 @@ object GraftRedis {
       s"$fn expects exactly one literal string pattern, e.g. $fn('user:*')")
   }
 
-  /** Register the SQL scalar surface, the Redis table functions and the
-    * engine's optimizer rules on an existing session — the same ones
-    * `GraftSparkExtensions` injects. After this, the reference's primary
+  /** Register the SQL scalar surface (with the Redis lookup's rule and
+    * planner, see `RedduckFunctions.registerAll`), the Redis table
+    * functions and the engine's optimizer rules on an existing session —
+    * the same table functions and rules `GraftSparkExtensions` injects.
+    * After this, the reference's primary
     * syntax parses as-is (the reference's README.md:24 and
     * test/sql/scan.test:20):
     *

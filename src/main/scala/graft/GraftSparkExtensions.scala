@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.StringType
   * `redis_scan('glob')` / `redis_kv('glob')` / `redis_hash('glob')`
   * sources (the reference's primary syntax) and `redis_stream('key', ...)`
   * (`GraftRedis.tableFunctions`), the engine's optimizer rules
-  * ([[GraftSparkExtensions.optimizerRules]]), and the
+  * ([[GraftSparkExtensions.optimizerRules]]), the Redis lookup's
+  * planner strategy, and the
   * `frame_dedup('<path>', idCol, binCol, frameBytes, everyK,
   * minJaccard)` table function (m06's whole pair plan over an at-rest
   * corpus).
@@ -263,6 +264,12 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
     GraftSparkExtensions.optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
+    // the lookup node's planner; its SQL rule, `RedisLookup.Lift`, is added
+    // with `redis_get`/`redis_hgetall` by `RedduckFunctions.registerAll`:
+    // injected here it walked every plan in every optimizer iteration
+    // (olap_pipeline op_ms_p50 +11% on 4 cores, 3 of 3 pairs) for calls
+    // that a session without those functions cannot hold
+    ext.injectPlannerStrategy(_ => graft.plans.RedisLookup.Planner)
   }
 
   /** Numeric literal → Double (integral literals widen). */

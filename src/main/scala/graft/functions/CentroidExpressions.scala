@@ -100,6 +100,10 @@ trait CentroidExpression extends UnaryExpression {
     case t => TypeCheckResult.TypeCheckFailure(
       s"input must be array<float> or array<double>, got $t")
   }
+  // plan strings name the model's k×dim shape, not its k×dim doubles
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"${centroids.length}x${centroids.headOption.fold(0)(_.length)}") ++
+      productIterator.drop(2)
 }
 
 /** `nearest_centroid(vec)` → INT id of the closest centroid. */

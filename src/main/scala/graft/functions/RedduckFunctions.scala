@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StructField, StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.net.{RedisCommands, RedisConnection, RedisLink}
+import graft.net.{RedisConnection, RedisLink}
+import graft.plans.RedisLookup
 
 /** Scalar-function parity surface (reference registrations at
   * /root/reference/src/redduck_extension.cpp:348-362).
@@ -14,8 +15,8 @@ import graft.net.{RedisCommands, RedisConnection, RedisLink}
   * by `redis_connect` (redduck_extension.cpp:44-52). Here connector
   * options are authoritative and `spark.redduck.host/port` session conf
   * provides defaults; `redis_connect` writes that conf from the driver
-  * (README-parity) while each task opens its own connection lazily
-  * (SURVEY §7.4 decision 1).
+  * (README-parity) while each task of a lookup opens its own connection
+  * at its first key (SURVEY §7.4 decision 1).
   */
 object RedduckFunctions {
 
@@ -90,117 +91,84 @@ object RedduckFunctions {
     Map("host" -> host, "port" -> port.toString) ++ sessionAuth(spark).map("password" -> _)
   }
 
-  /** The Redis connection of the task that evaluates a lookup: opened at
-    * its first use in the task, closed when the task completes. A closure
-    * that captures it is deserialized afresh for each task, so no
-    * connection serves two tasks; outside a task (driver-side constant
-    * folding, a local relation) each use opens and closes its own.
-    */
-  private final class TaskConnection(host: String, port: Int, link: RedisLink)
-      extends Serializable {
-    @transient private var task: TaskContext = _
-    @transient private var conn: RedisConnection = _
-
-    def apply[T](f: RedisConnection => T): T = TaskContext.get() match {
-      case null => scala.util.Using.resource(new RedisConnection(host, port, link))(f)
-      case tc =>
-        if (conn == null) {
-          val c = new RedisConnection(host, port, link)
-          tc.addTaskCompletionListener[Unit](_ => c.close())
-          conn = c
-          task = tc
-        } else if (tc ne task) throw new IllegalStateException(
-          s"the Redis connection to $host:$port of task ${task.taskAttemptId()} " +
-            s"was reached from task ${tc.taskAttemptId()}: a connection serves one task")
-        f(conn)
-    }
-  }
-
-  /** Register the SQL-facing UDFs on a session. `redis_get`/`redis_hgetall`
-    * capture the session's target at registration time (executor closures
-    * cannot read driver conf).
+  /** Register the SQL scalar surface on a session. `redis_get` and
+    * `redis_hgetall` capture the session's target and the legacy-empty
+    * flag at registration time (executors cannot read driver conf); each
+    * call runs as a batched [[RedisLookup]].
     */
   def registerAll(spark: SparkSession): Unit = {
-    val (host, port) = target(spark)
-    val conn = new TaskConnection(host, port, RedisLink(sessionAuth(spark)))
-    val missingDefault: String = if (legacyEmpty(spark)) "" else null
-
     // demo scalars, kept for smoke-test parity (redduck_extension.cpp:17-40)
     spark.udf.register("redduck", (name: String) => s"Redduck $name 🐥")
     spark.udf.register("set_name", (_: String) => "name is set")
 
-    // per-row point lookup over the task's connection. Missing
-    // key → SQL NULL (deliberate divergence from the reference's "",
-    // redis_client.cpp:232-236; see SURVEY §1.2) unless LegacyEmptyConf
+    // Missing key → SQL NULL (deliberate divergence from the reference's
+    // "", redis_client.cpp:232-236; see SURVEY §1.2) unless LegacyEmptyConf
     // was set at registration time.
-    spark.udf.register("redis_get", (key: String) =>
-      if (key == null) null else conn(RedisCommands.get(_, key).getOrElse(missingDefault)))
-
-    spark.udf.register("redis_hgetall", (key: String) =>
-      if (key == null) null else conn(RedisCommands.hgetall(_, key)))
+    val (host, port) = target(spark)
+    Seq(false, true).foreach { hash =>
+      val kind = RedisLookup.Kind(hash, host, port, RedisLink(sessionAuth(spark)), legacyEmpty(spark))
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(kind.name, {
+        case Seq(key) => RedisLookup.Call(key, kind)
+        case es => throw new IllegalArgumentException(s"${kind.name} takes one key, got ${es.length} arguments")
+      }, "scala_udf")
+    }
+    RedisLookup.install(spark)
   }
 
-  /** Keys per round trip of [[withRedisValues]] and [[withHashFields]]. */
-  private val LookupBatch = 512
-
-  /** The batch loop of [[withRedisValues]] and [[withHashFields]]: appends
-    * `out` to each row of `df`, `fetch`ing the values of each batch's
-    * non-NULL `key`s in one round trip over the task's connection, which
-    * the first batch with a key opens (an all-NULL input needs no server).
-    * A NULL key is not sent and yields NULL.
+  /** `df` with the value of each row's `keyCol`, cast to STRING, appended
+    * as `name`, read by a [[RedisLookup]] of `kind`.
     */
-  private def lookup(df: DataFrame, key: Column, out: StructField, batchSize: Int,
-      hostPort: Option[(String, Int)], auth: Option[String])(
-      fetch: (RedisConnection, Seq[String]) => Seq[Any]): DataFrame = {
+  private[graft] def lookup(df: DataFrame, keyCol: String, name: String,
+      kind: RedisLookup.Kind): DataFrame = {
     val spark = df.sparkSession
+    RedisLookup.install(spark)
+    val plan = GraftSqlShims.analyzedPlan(df)
+    val key = plan.resolveQuoted(keyCol, spark.sessionState.conf.resolver).getOrElse(
+      throw new IllegalArgumentException(s"no column '$keyCol' in ${df.columns.mkString(", ")}"))
+    val keyString =
+      if (key.dataType == StringType) key
+      else Cast(key, StringType, Some(spark.sessionState.conf.sessionLocalTimeZone))
+    GraftSqlShims.ofRows(spark,
+      RedisLookup(keyString, kind, AttributeReference(name, kind.dataType)(), plan))
+  }
+
+  /** A lookup to `hostPort` (default: the session's target) as `auth`
+    * (default: the session's credential).
+    */
+  private def kind(spark: SparkSession, hash: Boolean, batchSize: Int,
+      hostPort: Option[(String, Int)], auth: Option[String]): RedisLookup.Kind = {
     val (host, port) = hostPort.getOrElse(target(spark))
-    val conn = new TaskConnection(host, port, RedisLink(auth.orElse(sessionAuth(spark))))
-    val keyIdx = df.schema.length // `key`, behind the row's own columns
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
-      StructType(df.schema.fields :+ out))
-    df.select(col("*"), key).mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { group =>
-        val keys = group.filterNot(_.isNullAt(keyIdx)).map(_.getString(keyIdx))
-        val values = if (keys.isEmpty) Iterator.empty else conn(fetch(_, keys)).iterator
-        group.iterator.map { row =>
-          Row.fromSeq(row.toSeq.take(keyIdx) :+ (if (row.isNullAt(keyIdx)) null else values.next()))
-        }
-      }
-    }(enc)
+    RedisLookup.Kind(hash, host, port, RedisLink(auth.orElse(sessionAuth(spark))), legacyEmpty(spark), batchSize)
   }
 
   /** Batched `redis_get`: resolves `keyCol` for a whole DataFrame with one
-    * pipelined MGET per `batchSize` rows per partition — the structural
-    * fix for the reference's one-round-trip-per-row cost model
-    * (redduck_extension.cpp:327-342; SURVEY §3.3). This is the form to
-    * use at scale; the UDF above is row-at-a-time parity. As there, a
-    * NULL key is not sent and yields NULL. `keyCol` must be a STRING
-    * column (IllegalArgumentException otherwise).
+    * MGET per `batchSize` rows per partition — the structural fix for the
+    * reference's one-round-trip-per-row cost model
+    * (redduck_extension.cpp:327-342; SURVEY §3.3), and the same operator
+    * SQL `redis_get` runs. A NULL key is not sent and yields NULL.
+    * `keyCol` must be a STRING column (IllegalArgumentException otherwise).
     */
   def withRedisValues(df: DataFrame, keyCol: String, valueCol: String = "value",
-      batchSize: Int = LookupBatch, hostPort: Option[(String, Int)] = None,
+      batchSize: Int = RedisLookup.Batch, hostPort: Option[(String, Int)] = None,
       auth: Option[String] = None): DataFrame = {
     val keyType = df.schema(keyCol).dataType
     if (keyType != StringType)
       throw new IllegalArgumentException(
         s"withRedisValues: key column '$keyCol' must be STRING, got ${keyType.sql}")
-    val missingDefault: String = if (legacyEmpty(df.sparkSession)) "" else null
-    lookup(df, col(keyCol), StructField(valueCol, StringType, nullable = true), batchSize,
-        hostPort, auth)(RedisCommands.mget(_, _).map(_.getOrElse(missingDefault)))
+    lookup(df, keyCol, valueCol, kind(df.sparkSession, hash = false, batchSize, hostPort, auth))
   }
 
   /** `redis_hgetall` as a typed column on a keys DataFrame: MapType by
     * default (hash fields are dynamic); project to a struct by passing a
     * user schema (README.md:36-38 claims STRUCT output — SURVEY §7.4
-    * decision 5 makes Map the honest default). Batched like
-    * [[withRedisValues]], one write of HGETALLs per batch: a missing key
-    * is an empty map, a NULL key NULL, and a key of another type fails.
+    * decision 5 makes Map the honest default). The key is cast to STRING
+    * and batched like [[withRedisValues]], one write of HGETALLs per batch:
+    * a missing key is an empty map, a NULL key NULL, and a key of another
+    * type fails.
     */
   def withHashFields(df: DataFrame, keyCol: String, structSchema: Option[StructType] = None,
       hostPort: Option[(String, Int)] = None, auth: Option[String] = None): DataFrame = {
-    val withMap = lookup(df, col(keyCol).cast(StringType),
-        StructField("hash", MapType(StringType, StringType), nullable = true), LookupBatch,
-        hostPort, auth)(RedisCommands.hgetallPipelined(_, _, wrongTypeEmpty = false))
+    val withMap = lookup(df, keyCol, "hash", kind(df.sparkSession, hash = true, RedisLookup.Batch, hostPort, auth))
     structSchema match {
       case None => withMap
       case Some(st) =>

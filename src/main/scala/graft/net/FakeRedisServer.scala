@@ -2,6 +2,7 @@ package graft.net
 
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import graft.resp.{RespCodec, RespValue}
 import graft.resp.RespValue._
@@ -37,6 +38,12 @@ final class FakeRedisServer(requestedPort: Int = 0,
   // the cluster seed's included, negotiates the protocol
   private val helloCallCount = new java.util.concurrent.atomic.AtomicInteger(0)
   def helloCalls: Int = helloCallCount.get()
+  // per-command counts, and counts of the commands that ended a client's
+  // write (no request bytes behind them): tests assert how lookups batch
+  private val commandCounts, writeCounts = new ConcurrentHashMap[String, AtomicInteger]()
+  def commandCalls(cmd: String): Int = Option(commandCounts.get(cmd)).fold(0)(_.get())
+  def writesEndingWith(cmd: String): Int = Option(writeCounts.get(cmd)).fold(0)(_.get())
+  def resetCommandCalls(): Unit = { commandCounts.clear(); writeCounts.clear() }
   // open client connections: tests assert no connection outlives its owner
   private val openConnectionCount = new java.util.concurrent.atomic.AtomicInteger(0)
   def openConnections: Int = openConnectionCount.get()
@@ -161,6 +168,14 @@ final class FakeRedisServer(requestedPort: Int = 0,
           case RespCodec.Decoded(v, next) =>
             pos = next
             if (pos == end) { pos = 0; end = 0 }
+            v match {
+              case Arr((b: Bulk) +: _) =>
+                val cmd = b.text.toUpperCase
+                commandCounts.computeIfAbsent(cmd, _ => new AtomicInteger).incrementAndGet()
+                if (end == 0 && in.available() == 0)
+                  writeCounts.computeIfAbsent(cmd, _ => new AtomicInteger).incrementAndGet()
+              case _ => ()
+            }
             val reply = handle(v, st)
             if (st.resp3) pushOnNext.foreach { p =>
               pushOnNext = None

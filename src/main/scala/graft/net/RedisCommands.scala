@@ -194,6 +194,13 @@ object RedisCommands {
     cmd.bulk(b, off, n)
   }
 
+  /** Appends `HGETALL key` to `cmd`. */
+  def hgetallCommand(cmd: RespCodec.CommandBuffer, key: org.apache.spark.unsafe.types.UTF8String): Unit = {
+    cmd.header(2)
+    cmd.bulk(Hgetall)
+    cmd.bulk(key)
+  }
+
   /** The fields of a batch of HGETALL replies, as views: reply `j`'s are
     * elements [from(j), to(j)) of view(j), each key followed by its value.
     * Replies read in place share [[fields]], views into the receive
@@ -272,8 +279,8 @@ object RedisCommands {
     * one cluster redirect.
     *
     * WRONGTYPE fails LOUDLY here, unlike [[hgetallPipelined]]'s default:
-    * this is the direct single-key read (the `redis_hgetall` UDF, where
-    * the caller NAMED the key; `withHashFields` batches the same way with
+    * this is the direct single-key read, where the caller NAMED the key
+    * (`redis_hgetall` and `withHashFields` batch the same way with
     * `wrongTypeEmpty = false`) — an empty map would silently mask reading
     * a key known to be a string. The mixed-keyspace tolerance belongs
     * only to the pattern/SCAN-driven readers, where `user:*` routinely

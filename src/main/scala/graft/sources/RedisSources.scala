@@ -351,19 +351,21 @@ class RedisDataWriterFactory(host: String, port: Int, batchSize: Int,
       private var pending = 0
       private var written = 0L
 
+      // the batch's replies are read in place: only an error is decoded,
+      // and the first one fails the batch
       private def flush(): Unit = if (pending > 0) {
         conn.send(cmds)
         cmds.clear()
-        var failure: String = null
-        while (pending > 0) {
-          conn.readReply() match {
-            case RespValue.Err(m) if failure == null => failure = m
-            case _ => ()
-          }
-          pending -= 1
-          written += 1
+        var failure: RespValue = null
+        conn.readFrame({ (buf, start, end) =>
+          if (failure == null && buf(start) == '-') failure = RespCodec.decodeFrame(buf, start, end)
+        }, replies = pending)
+        written += pending
+        pending = 0
+        failure match {
+          case RespValue.Err(m) => throw new java.io.IOException(s"SET failed: $m")
+          case _ => ()
         }
-        if (failure != null) throw new java.io.IOException(s"SET failed: $failure")
       }
 
       override def write(row: InternalRow): Unit = {

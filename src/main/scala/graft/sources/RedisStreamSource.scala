@@ -328,7 +328,10 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
         // batch face: every member stream as of planning time — the
         // oracle face of the streaming read (and a backfill path)
         override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-        override def planInputPartitions(): Array[InputPartition] =
+        // planned once per scan, like the keyspace scan's: Spark asks twice
+        // per query, and each plan is a SCAN walk and an XREVRANGE a stream
+        override def planInputPartitions(): Array[InputPartition] = partitions
+        private lazy val partitions: Array[InputPartition] =
           scala.util.Using.resource(opts.connect()) { c =>
             val multi = !sopts.selection.isInstanceOf[RedisStreamEntries.SingleStream]
             RedisMultiStreamMicroBatch.members(c, opts, sopts.selection).flatMap {

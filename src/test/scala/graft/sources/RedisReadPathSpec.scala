@@ -412,12 +412,13 @@ class RedisReadPathSpec extends AnyFunSuite {
   }
 
   test("a frame the walk rejects fails its own withRedisValues or redis_get query, and the next one reads the right values") {
-    // the first MGET and the first GET are answered with a bad array
-    // header, every later one correctly
+    // the first MGET of each first key is answered with a bad array
+    // header, every later one correctly (SQL redis_get batches into MGETs
+    // too)
     val answered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val stub = new ChunkedStub({ args =>
       val cmd = new String(args.head, UTF_8)
-      if (cmd != "PING" && answered.add(cmd)) "*x\r\n".getBytes(UTF_8)
+      if (cmd != "PING" && answered.add(cmd + " " + new String(args(1), UTF_8))) "*x\r\n".getBytes(UTF_8)
       else cmd match {
         case "PING" => RespCodec.encode(Simple("PONG"))
         case "MGET" => values(args.tail)
@@ -438,6 +439,58 @@ class RedisReadPathSpec extends AnyFunSuite {
       assert(get() == Seq("vk:2", "vk:3"))
     } finally stub.close()
   }
+
+  test("lookups keep invalid UTF-8 values and fields byte for byte") {
+    val bad = Seq(Array[Byte](-1, -2, 'a'), Array[Byte](-61), Array[Byte](-19, -96, -128), "é✓😀".getBytes(UTF_8))
+    def value(k: Array[Byte]): Array[Byte] = bad(new String(k, UTF_8).drop(2).toInt)
+    val stub = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "MGET" => RespCodec.encode(Arr(args.tail.map(k => Bulk(value(k)): RespValue).toVector))
+        case "HGETALL" => RespCodec.encode(Arr(Vector(Bulk(value(args(1))), Bulk(args(1)), Bulk("f"), Bulk(value(args(1))))))
+      }
+    }, seed = 15)
+    try {
+      val keys = keyFrame(bad.indices.map(i => s"b:$i"): _*)
+      val values = RedduckFunctions.withRedisValues(keys, "key", batchSize = 3, hostPort = Some("127.0.0.1" -> stub.port))
+        .selectExpr("cast(value AS binary)").collect().map(_.getAs[Array[Byte]](0))
+      assert(values.map(_.toSeq).toSeq == bad.map(_.toSeq))
+      val fields = RedduckFunctions.withHashFields(keys, "key", hostPort = Some("127.0.0.1" -> stub.port))
+        .selectExpr("transform(map_keys(hash), f -> cast(f AS binary))", "cast(hash['f'] AS binary)").collect()
+      assert(fields.map(r => (r.getSeq[Array[Byte]](0).map(_.toSeq), r.getAs[Array[Byte]](1).toSeq)).toSeq ==
+        bad.map(b => (Seq(b.toSeq, "f".getBytes(UTF_8).toSeq).sortWith((x, y) =>
+          java.util.Arrays.compareUnsigned(x.toArray, y.toArray) < 0), b.toSeq)))
+    } finally stub.close()
+  }
+
+  test("the kv writer reads a batch's SET replies in place: the first error fails the batch, a RESP3 push between replies is skipped") {
+    val stub = new ChunkedStub({ args =>
+      new String(args.head, UTF_8) match {
+        case "HELLO" => RespCodec.encode(Mp(Vector(Bulk("proto") -> Int64(3))))
+        case "SET" => new String(args(1), UTF_8) match {
+          case "w:push" => RespCodec.encode(Push(Vector(Bulk("invalidate")))) ++ RespCodec.encode(Simple("OK"))
+          case k if k.startsWith("w:bad") => RespCodec.encode(Err(s"ERR refused $k"))
+          case _ => RespCodec.encode(Simple("OK"))
+        }
+      }
+    }, seed = 16)
+    def write(keys: String*): WriterCommitMessageOrError = {
+      val w = new RedisDataWriterFactory("127.0.0.1", stub.port, 100, graft.net.RedisLink(resp3 = true))
+        .createWriter(0, 0)
+      try {
+        keys.foreach(k => w.write(org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(k), org.apache.spark.unsafe.types.UTF8String.fromString("v"))))
+        Right(w.commit())
+      } catch { case e: java.io.IOException => Left(e.getMessage) } finally w.close()
+    }
+    try {
+      assert(write("w:0", "w:push", "w:1") == Right(RedisWriteCommit(3)))
+      stub.received.clear()
+      assert(write("w:0", "w:bad1", "w:2", "w:bad2", "w:3") == Left("SET failed: ERR refused w:bad1"))
+      assert(stub.received.asScala.count(_._1 == "SET") == 5)
+    } finally stub.close()
+  }
+
+  private type WriterCommitMessageOrError = Either[String, org.apache.spark.sql.connector.write.WriterCommitMessage]
 
   // ---- redis-stream pages: one in-place XRANGE reader ----
 

@@ -72,4 +72,17 @@ class RedisStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toSet
     assert(atRest == expect && expect.nonEmpty, s"atRest=$atRest expect=$expect")
   }
+
+  test("a batch streams.pattern read plans its partitions once per query: one SCAN walk per action") {
+    val c = new graft.net.RedisConnection("127.0.0.1", port)
+    try Seq("plan:a", "plan:b").foreach(k => (1 to 3).foreach(i =>
+      graft.net.RedisCommands.xadd(c, k, s"1-$i", Seq("v" -> s"$k.$i"))))
+    finally c.close()
+    val df = spark.read.format("redis-stream").option("host", "127.0.0.1").option("port", port.toString)
+      .option("streams.pattern", "plan:*").load()
+    def walks(action: => Any): Int = { server.resetScanCalls(); action; server.scanCalls }
+    assert(walks(assert(df.collect().length == 6)) == 1)
+    assert(walks(assert(df.count() == 6)) == 1)
+    assert(walks(assert(df.groupBy().count().head().getLong(0) == 6)) == 1)
+  }
 }

@@ -13,6 +13,12 @@ verdict against the metric's `better` and `bound`:
   unresolved  either side's interquartile spread is wider than the bound,
               unless every change run beats every parent run;
   within      otherwise.
+Beside it, whether a gain on the metric could be claimed (the claim rule
+of the choosing-metrics guide, section 8):
+  gain        the change won at least 9/10 of the pairs, ties counting for
+              neither, and its median is better than the parent's by more
+              than the parent's interquartile range;
+  no gain     otherwise.
 The last line is the workload's verdict: the worst of its metrics'.
 
 A run that fails stops the comparison: the table covers the pairs
@@ -112,9 +118,11 @@ def report(workload, metrics, parent, change):
         verdict = ("worse" if worse > m["bound"] else
                    "unresolved" if spread > m["bound"] and not dominates else "within")
         verdicts.append(verdict)
+        gap = pmed - cmed if lower else cmed - pmed
+        gain = "gain" if 10 * wins >= 9 * len(p) and gap > pq3 - pq1 else "no gain"
         print(f"  {name:18s} parent {pmed:.4g} [{pq1:.4g}-{pq3:.4g}]  change {cmed:.4g} [{cq1:.4g}-{cq3:.4g}] "
               f"{m['unit']}  wins {wins}/{len(p)}  worse by {worse:+.1%}  spread {spread:.1%}  "
-              f"bound {m['bound']:.0%}: {verdict}")
+              f"bound {m['bound']:.0%}: {verdict}, {gain}")
     print(f"verdict {workload}: " + next(v for v in ("worse", "unresolved", "within") if v in verdicts))
 
 
